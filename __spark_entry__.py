@@ -37,23 +37,9 @@ def _ensure_pkg(spark: SparkSession) -> None:
     """Ship pdf_parser_spark to executors (addPyFile) once per session —
     without this, mapInPandas closures fail to unpickle on workers when
     the session wasn't launched from the repo root."""
-    sc = spark.sparkContext
-    if getattr(sc, "_pps_pkg_added", False):
-        return
-    zip_path = os.path.join(_REPO, "dist", "pdf_parser_spark.zip")
-    from pdf_parser_spark.session import package_zip_stale
+    from pdf_parser_spark.session import ship_package
 
-    if package_zip_stale(zip_path):
-        import importlib.util
-
-        spec = importlib.util.spec_from_file_location(
-            "pps_package_tool", os.path.join(_REPO, "tools", "package.py")
-        )
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        zip_path = mod.build()
-    sc.addPyFile(zip_path)
-    sc._pps_pkg_added = True  # noqa: SLF001
+    ship_package(spark)
 
 
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1139,18 +1125,25 @@ def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_apply(docs, merges)
 
 
-Q_BPE_ORACLE = r"""
+def _mk_bpe_oracle() -> str:
+    """DuckDB replica of q_bpe_tokens, built from the shared
+    quality.BPE_PATTERN: RE2 parses its CJK ranges as Java regex does."""
+    from pdf_parser_spark.functions.quality import BPE_PATTERN
+
+    toks = f"regexp_extract_all(text, '{BPE_PATTERN}')"
+    return f"""
 SELECT doc_id,
-       len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+'))
-         AS n_bpe_tokens,
+       len({toks}) AS n_bpe_tokens,
        len(string_split(trim(text), ' ')) AS n_ws_tokens,
-       len(list_distinct(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+')))
-         AS n_distinct_bpe,
-       round(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+')) * 1.0
+       len(list_distinct({toks})) AS n_distinct_bpe,
+       round(len({toks}) * 1.0
              / greatest(len(string_split(trim(text), ' ')), 1), 6)
          AS bpe_per_word
 FROM documents
 """
+
+
+Q_BPE_ORACLE = _mk_bpe_oracle()
 
 
 Q_WINNOW_OVERLAP_ORACLE = f"""

@@ -4,8 +4,9 @@ The sandbox has no PDF decoder (no fitz/PyMuPDF — SURVEY.md §7.0); the
 reference's algorithmic content starts at the grayscale page raster
 (python/app.py:116-120). PDF-like documents therefore carry their
 pre-rasterized pages in ``html:binary`` using this trivial deterministic
-container; ``decode_pages`` (the engine's analogue of the reference's
-``convert_pdf_to_image``, python/app.py:28-81) parses it.
+container; ``decode`` (the engine's analogue of the reference's
+``convert_pdf_to_image``, python/app.py:28-81) parses it, for
+``oracle.extract_document`` and for ``operators.decode_pages``.
 
 Layout (little-endian):
     magic   4B   b'RSTR'

@@ -1,16 +1,8 @@
 """Vectorized extraction stages (mapInPandas over Arrow record batches).
 
-The engine's operator API per SURVEY.md §2.11: a fused production stage
-(``extract_stage``) plus the composable staged operators
-(``decode_pages`` / ``ocr_pages`` / ``clause_stage`` / ``table_stage`` /
-``html_stage``) for plan-level composition and inspection.
+The engine's operator API per SURVEY.md §2.11: the fused production
+stage ``extract_stage`` plus ``decode_pages``, the page-row view that
+carries each page's embedded images (S4).
 """
 
-from .stages import (  # noqa: F401
-    clause_stage,
-    decode_pages,
-    extract_stage,
-    html_stage,
-    ocr_pages,
-    table_stage,
-)
+from .stages import decode_pages, extract_stage  # noqa: F401

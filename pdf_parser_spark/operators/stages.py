@@ -8,21 +8,16 @@ A1/T6), but documents are independent, so a batch of N documents is
 processed in one Python invocation with zero per-row serialization
 overhead; Arrow moves the bytes.
 
-Two APIs:
-
-1. ``extract_stage(df)`` — the FUSED production path. One mapInPandas
-   pass per document: kind-route -> decode -> OCR -> clauses -> tables ->
-   html. No shuffle anywhere between sub-stages, and the multi-MB
-   ``html``/page-raster bytes never cross an exchange: the only shuffle
-   in the whole job is the salted repartition BEFORE this stage, and only
-   result-sized rows flow after it. This is the plan that survives 100 TB.
-
-2. Staged operators (``decode_pages`` -> explode -> ``ocr_pages`` ->
-   ``clause_stage`` / ``table_stage`` + join) — the reference's
-   process-boundary decomposition (SURVEY.md §3.2) as composable Spark
-   operators. Correct but shuffle-heavier (page rasters cross an
-   exchange); used for plan inspection, per-stage testing, and as the
-   J1-join demonstration. The fused path is what jobs run.
+- ``extract_stage(df)`` — the fused extraction path every job runs. One
+  mapInPandas pass per document calls ``oracle.extract_document``:
+  kind-route -> decode -> OCR -> clauses -> tables -> html. No shuffle
+  between sub-stages, and the multi-MB ``html``/page-raster bytes never
+  cross an exchange: the only shuffle in the whole job is the salted
+  repartition BEFORE this stage, and only result-sized rows flow after
+  it.
+- ``decode_pages(df)`` — one row per decoded page, carrying the page's
+  embedded images (S4). Images stay off the fused row so the extraction
+  write never pays for them.
 """
 
 from __future__ import annotations
@@ -32,7 +27,6 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .. import schemas
 from ..oracle import ExtractedDoc, extract_document
@@ -77,9 +71,6 @@ def extract_stage(df: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return df.select("url", "html").mapInPandas(run, schema=schemas.EXTRACTED)
-
-
-# --------------------------------------------------------------- staged API
 
 
 def decode_pages(df: DataFrame) -> DataFrame:
@@ -137,168 +128,3 @@ def decode_pages(df: DataFrame) -> DataFrame:
             )
 
     return df.select("url", "html").mapInPandas(run, schema=schemas.PAGE)
-
-
-def ocr_pages(pages: DataFrame) -> DataFrame:
-    """Page raster -> page text (the tesseract 'recognize' analogue,
-    pdfService.js:98), as a vectorized stage."""
-    import numpy as np
-
-    from ..kernels.glyphs import decode_page_text
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = [
-                decode_page_text(
-                    np.frombuffer(px, dtype=np.uint8).reshape(h, w)
-                )
-                for px, w, h in zip(pdf["pixels"], pdf["width"], pdf["height"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "page_no": pdf["page_no"],
-                    "page_text": texts,
-                }
-            )
-
-    schema = "url string, page_no int, page_text string"
-    # prune to the OCR inputs so the embedded-image column (S4) never
-    # crosses the Arrow boundary here
-    return pages.select("url", "page_no", "width", "height", "pixels").mapInPandas(
-        run, schema=schema
-    )
-
-
-def clause_stage(page_texts: DataFrame) -> DataFrame:
-    """Per-document clause fold over collected page texts:
-    (url, page_no, page_text) -> (url, clauses_json, table_pages, error).
-
-    The cross-row step (collect pages of a doc) is a native Spark agg —
-    sort_array(collect_list(struct(page_no, page_text))) — so the only
-    Python work is the per-doc fold. groupBy('url') is the one shuffle,
-    and it moves page TEXT (KB), not rasters (MB)."""
-    import json
-
-    from ..kernels.clauses import extract_clauses, serialize_clauses
-
-    collected = page_texts.groupBy("url").agg(
-        F.sort_array(F.collect_list(F.struct("page_no", "page_text"))).alias(
-            "pages"
-        )
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for u, pages in zip(pdf["url"], pdf["pages"]):
-                texts = [p["page_text"] for p in pages]
-                cr = extract_clauses(texts)
-                rows.append(
-                    {
-                        "url": u,
-                        "extracted_text": (
-                            serialize_clauses(cr.clauses)
-                            if cr.error is None
-                            else None
-                        ),
-                        "clauses_json": (
-                            json.dumps(cr.clauses, ensure_ascii=False)
-                            if cr.error is None
-                            else None
-                        ),
-                        "table_pages": cr.table_pages,
-                        "error": cr.error,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "extracted_text", "clauses_json", "table_pages",
-                    "error",
-                ],
-            )
-
-    schema = (
-        "url string, extracted_text string, clauses_json string, "
-        "table_pages array<int>, error string"
-    )
-    return collected.mapInPandas(run, schema=schema)
-
-
-def table_stage(pages: DataFrame, flagged: DataFrame) -> DataFrame:
-    """F3 analogue: run table extraction ONLY on clause-flagged pages.
-    ``flagged`` is (url, page_no) — the semi-join prunes raster rows
-    BEFORE any pixel work."""
-    import numpy as np
-
-    from ..kernels.tables import extract_table
-
-    todo = pages.select(
-        "url", "page_no", "width", "height", "pixels"
-    ).join(flagged, ["url", "page_no"], "left_semi")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cells = [
-                extract_table(np.frombuffer(px, dtype=np.uint8).reshape(h, w))
-                for px, w, h in zip(pdf["pixels"], pdf["width"], pdf["height"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "page_no": pdf["page_no"],
-                    "cells": cells,
-                }
-            )
-
-    schema = "url string, page_no int, cells array<array<string>>"
-    return todo.mapInPandas(run, schema=schema)
-
-
-def html_stage(df: DataFrame) -> DataFrame:
-    """North-rule HTML path as its own stage: (url, html) ->
-    (url, extracted_text, title, n_blocks, n_content_blocks, error)."""
-    from ..kernels.html_extract import extract_html
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for u, b in zip(pdf["url"], pdf["html"]):
-                blob = bytes(b) if b is not None else b""
-                try:
-                    r = extract_html(blob)
-                    rows.append(
-                        {
-                            "url": u,
-                            "extracted_text": r.text,
-                            "title": r.title,
-                            "n_blocks": r.n_blocks,
-                            "n_content_blocks": r.n_content_blocks,
-                            "error": None,
-                        }
-                    )
-                except Exception as e:
-                    rows.append(
-                        {
-                            "url": u,
-                            "extracted_text": None,
-                            "title": None,
-                            "n_blocks": None,
-                            "n_content_blocks": None,
-                            "error": str(e)[:200],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "extracted_text", "title", "n_blocks",
-                    "n_content_blocks", "error",
-                ],
-            )
-
-    schema = (
-        "url string, extracted_text string, title string, n_blocks int, "
-        "n_content_blocks int, error string"
-    )
-    return df.select("url", "html").mapInPandas(run, schema=schema)

@@ -10,10 +10,12 @@ that operationalizes the north rule's "byte-identical extracted text per
 url vs the reference" in a sandbox where the reference's own OCR stack is
 neither present nor deterministic (SURVEY.md §5).
 
-The kernels are SHARED with the Spark stages (operators/stages.py calls
-``extract_document`` row-wise inside Arrow batches), so identity is by
-construction; the equivalence tests guard against batching, ordering and
-encoding drift, not against two diverging implementations.
+The kernels are SHARED with the Spark job: ``operators.extract_stage``
+calls ``extract_document`` row-wise inside Arrow batches, so identity is
+by construction; the equivalence tests guard against batching, ordering
+and encoding drift, not against two diverging implementations. Table-page
+selection (F3), page order (S7) and the clause/table reunion per url (J1)
+all happen inside this one function.
 """
 
 from __future__ import annotations

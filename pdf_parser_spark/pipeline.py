@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +51,10 @@ class RunStats:
     parts_processed: int
     docs_processed: int
     waves_run: int
+
+
+def _utc(epoch_s: float) -> datetime:
+    return datetime.fromtimestamp(epoch_s, tz=timezone.utc)
 
 
 def with_part_id(df: DataFrame, n_parts: int) -> DataFrame:
@@ -79,7 +84,6 @@ def run_extraction(
     n_parts: int = DEFAULT_N_PARTS,
     waves: int = 1,
     max_waves: int | None = None,
-    tasks_per_wave: int | None = None,
 ) -> RunStats:
     """Run (or resume) the extraction job.
 
@@ -96,9 +100,7 @@ def run_extraction(
     all_parts = list(range(n_parts))
     todo = [p for p in all_parts if p not in already]
 
-    if tasks_per_wave is None:
-        tasks_per_wave = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
+    n_tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
     wave_lists = [
         todo[i::waves] for i in range(waves) if todo[i::waves]
     ]
@@ -114,7 +116,7 @@ def run_extraction(
         # the one wide exchange: co-locate each resume-shard, fat bytes
         # cross it exactly once, pruned to (url, html, part_id)
         subset = subset.select("url", "html", "part_id").repartition(
-            min(tasks_per_wave, max(1, len(wave))), "part_id"
+            min(n_tasks, max(1, len(wave))), "part_id"
         )
         # part_id is deterministic from url — recompute on the result side
         # instead of carrying/joining it through the stage (no extra
@@ -136,7 +138,9 @@ def run_extraction(
         io.overwrite_partitions(results, EXTRACTED_TABLE, "part_id")
         observed = {k: float(v or 0) for k, v in obs.get.items()}
 
-        # lineage from what was COMMITTED
+        finished = time.time()
+
+        # lineage from what was COMMITTED, read back once per wave
         committed = (
             io.read(EXTRACTED_TABLE)
             .filter(F.col("part_id").isin(wave))
@@ -151,29 +155,23 @@ def run_extraction(
                     F.when(F.col("error").isNotNull(), 1).otherwise(0)
                 ).alias("n_err"),
             )
+            .collect()
         )
-        finished = time.time()
-        lineage = committed.select(
-            F.lit(run_id).alias("run_id"),
-            F.col("part_id"),
-            F.col("n_docs").cast("long"),
-            F.col("n_bytes").cast("long"),
-            F.col("n_ok").cast("long"),
-            F.col("n_err").cast("long"),
-            F.lit("done").alias("status"),
-            F.lit(started).cast("timestamp").alias("started_at"),
-            F.lit(finished).cast("timestamp").alias("finished_at"),
-            F.create_map(
-                F.lit("wall_sec"), F.lit(float(finished - started)),
-                F.lit("obs_docs"), F.lit(observed.get("obs_docs", 0.0)),
-                F.lit("obs_errs"), F.lit(observed.get("obs_errs", 0.0)),
-                F.lit("obs_chars"), F.lit(observed.get("obs_chars", 0.0)),
-            ).alias("metrics"),
-        )
-        # schema-align with schemas.LINEAGE
-        lineage = spark.createDataFrame(lineage.collect(), schemas.LINEAGE)
-        io.append(lineage, LINEAGE_TABLE)
-        docs_total += sum(r.n_docs for r in committed.select("n_docs").collect())
+        metrics = {
+            "wall_sec": float(finished - started),
+            "obs_docs": observed.get("obs_docs", 0.0),
+            "obs_errs": observed.get("obs_errs", 0.0),
+            "obs_chars": observed.get("obs_chars", 0.0),
+        }
+        lineage = [
+            (
+                run_id, r.part_id, r.n_docs, r.n_bytes, r.n_ok, r.n_err,
+                "done", _utc(started), _utc(finished), metrics,
+            )
+            for r in committed
+        ]
+        io.append(spark.createDataFrame(lineage, schemas.LINEAGE), LINEAGE_TABLE)
+        docs_total += sum(r.n_docs for r in committed)
         waves_run += 1
 
     return RunStats(

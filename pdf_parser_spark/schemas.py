@@ -67,9 +67,9 @@ LINEAGE = T.StructType(
     ]
 )
 
-# intermediate page rows for the staged (exploded) API; ``images``
-# carries the page's embedded images (S4, reference python/app.py:44-57)
-# in extraction index order (O4)
+# one row per decoded page (operators.decode_pages); ``images`` carries
+# the page's embedded images (S4, reference python/app.py:44-57) in
+# extraction index order (O4)
 PAGE = T.StructType(
     [
         T.StructField("url", T.StringType(), False),

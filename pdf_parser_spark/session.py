@@ -22,12 +22,16 @@ local[32] (SURVEY.md §4):
 
 from __future__ import annotations
 
+import hashlib
 import os
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
 
 ARROW_BATCH_ROWS = 2048
 ARROW_BATCH_BYTES = 16 * 1024 * 1024
+PKG_ROOT = os.path.dirname(os.path.abspath(__file__))
 
 
 def tune_for_fat_binary_scan(spark: SparkSession) -> None:
@@ -78,58 +82,50 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     spark = b.getOrCreate()
-    _ship_package(spark)
+    ship_package(spark)
     return spark
 
 
-def package_zip_stale(zip_path: str, pkg_root: str | None = None) -> bool:
-    """True when the deploy zip is missing or any package .py is newer
-    than it — a stale committed zip silently ships old code to executors
-    (and to spark-submit --py-files users)."""
-    if pkg_root is None:
-        pkg_root = os.path.dirname(os.path.abspath(__file__))
-    if not os.path.exists(zip_path):
-        return True
-    zmt = os.path.getmtime(zip_path)
-    for dirpath, _d, files in os.walk(pkg_root):
-        if "__pycache__" in dirpath:
-            continue
-        for fn in files:
-            if fn.endswith(".py") and os.path.getmtime(
-                os.path.join(dirpath, fn)
-            ) > zmt:
-                return True
-    return False
+def package_zip(pkg_root: str = PKG_ROOT) -> str:
+    """Zip the package's ``.py`` sources into the temp dir and return the
+    zip's path. The file is named by the sha256 of the sources (relative
+    paths and bytes), so a changed byte gives a new file and stale code is
+    never shipped; the same sources reuse the existing zip. A fresh zip is
+    written under a temp name and ``os.replace``d, so concurrent builders
+    never see a partial file."""
+    base = os.path.dirname(pkg_root)
+    sources = []
+    for dirpath, dirnames, files in os.walk(pkg_root):
+        dirnames[:] = sorted(d for d in dirnames if d != "__pycache__")
+        for fn in sorted(files):
+            if fn.endswith(".py"):
+                full = os.path.join(dirpath, fn)
+                with open(full, "rb") as f:
+                    sources.append((os.path.relpath(full, base), f.read()))
+    h = hashlib.sha256()
+    for rel, data in sources:
+        h.update(rel.encode() + b"\0" + data + b"\0")
+    name = f"{os.path.basename(pkg_root)}-{h.hexdigest()}.zip"
+    path = os.path.join(tempfile.gettempdir(), name)
+    if not os.path.exists(path):
+        fd, tmp = tempfile.mkstemp(prefix=name, suffix=".tmp")
+        with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as z:
+            for rel, data in sources:
+                info = zipfile.ZipInfo(rel)  # fixed timestamp
+                info.external_attr = 0o644 << 16
+                z.writestr(info, data, zipfile.ZIP_DEFLATED)
+        os.replace(tmp, path)
+    return path
 
 
-def _ship_package(spark: SparkSession) -> None:
+def ship_package(spark: SparkSession) -> None:
     """Make pdf_parser_spark importable on executor python workers
-    regardless of the launch cwd: zip the package and addPyFile once per
-    session. Workers only inherit the driver's CWD (not its sys.path),
-    so running any entry point from outside the repo root would
-    otherwise fail to unpickle mapInPandas closures."""
+    regardless of the launch cwd: addPyFile the package zip once per
+    SparkContext. Workers only inherit the driver's CWD (not its
+    sys.path), so running any entry point from outside the repo root
+    would otherwise fail to unpickle mapInPandas closures."""
     sc = spark.sparkContext
     if getattr(sc, "_pps_pkg_added", False):
         return
-    import zipfile
-
-    pkg_root = os.path.dirname(os.path.abspath(__file__))
-    repo = os.path.dirname(pkg_root)
-    zip_path = os.path.join(repo, "dist", "pdf_parser_spark.zip")
-    try:
-        if package_zip_stale(zip_path, pkg_root):
-            os.makedirs(os.path.dirname(zip_path), exist_ok=True)
-            with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as z:
-                for dirpath, _d, files in os.walk(pkg_root):
-                    if "__pycache__" in dirpath:
-                        continue
-                    for fn in sorted(files):
-                        if fn.endswith(".py"):
-                            full = os.path.join(dirpath, fn)
-                            z.write(full, os.path.relpath(full, repo))
-        sc.addPyFile(zip_path)
-    except Exception:
-        # read-only checkout or non-local deployment: spark-submit
-        # --py-files remains the documented path
-        pass
+    sc.addPyFile(package_zip())
     sc._pps_pkg_added = True  # noqa: SLF001

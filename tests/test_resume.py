@@ -77,6 +77,14 @@ def test_kill_and_resume(spark, corpus_df, tmp_path):
     } | set(got_parts)  # every written part is marked done
     assert lin.agg(F.sum("n_docs")).collect()[0][0] == n_input
 
+    # the runs' doc counts and each lineage row come from the committed rows
+    assert s1.docs_processed + s2.docs_processed == n_input
+    committed = {
+        r.part_id: r["count"]
+        for r in result.groupBy("part_id").count().collect()
+    }
+    assert {r.part_id: r.n_docs for r in lin.collect()} == committed
+
 
 def test_rerun_after_unmarked_partition_is_idempotent(spark, corpus_df, tmp_path):
     """A wave that wrote data but crashed before its lineage append must be

@@ -6,7 +6,7 @@ byte-for-byte, under different partitionings and Arrow batch sizes
 
 import pytest
 
-from pdf_parser_spark.operators import extract_stage, html_stage
+from pdf_parser_spark.operators import extract_stage
 from pdf_parser_spark.oracle import extract_document
 
 
@@ -68,15 +68,6 @@ def test_error_channel_rows(corpus_df, oracle_results):
     assert any(r.error.startswith("bad_container") for r in errs.values())
     kinds = {r.error.split(":")[0] for r in errs.values()}
     assert "bad_encoding" in kinds or "unknown_kind" in kinds
-
-
-def test_html_stage_matches_oracle(corpus_df, oracle_results):
-    html_urls = {
-        u for u, o in oracle_results.items() if o.kind == "html" and not o.error
-    }
-    out = _collect_by_url(html_stage(corpus_df))
-    for u in html_urls:
-        assert out[u].extracted_text == oracle_results[u].extracted_text, u
 
 
 def test_clauses_map_column(corpus_df, oracle_results):

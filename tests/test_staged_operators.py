@@ -1,62 +1,9 @@
-"""Staged operator API (SURVEY.md §2.11): decode_pages -> ocr_pages ->
-clause_stage / table_stage -> J1 join must reproduce the fused stage's
-output for pdf documents (two plans, one semantics)."""
+"""Page-row operator ``decode_pages`` (SURVEY.md §2.11): one row per
+decoded page, with the page's embedded images (S4) riding the row. The
+fused extraction output is checked against the oracle in
+test_spark_equivalence."""
 
-from pyspark.sql import functions as F
-
-from pdf_parser_spark.operators import (
-    clause_stage,
-    decode_pages,
-    extract_stage,
-    ocr_pages,
-    table_stage,
-)
-
-
-def test_staged_pipeline_matches_fused(spark, corpus_df):
-    fused = {
-        r.url: r
-        for r in extract_stage(corpus_df).filter("kind = 'pdf'").collect()
-    }
-    ok_urls = {u for u, r in fused.items() if r.error is None}
-
-    pages = decode_pages(corpus_df)
-    texts = ocr_pages(pages)
-    clauses = clause_stage(texts)
-
-    flagged = clauses.select(
-        "url", F.explode_outer("table_pages").alias("page_no")
-    ).filter(F.col("page_no").isNotNull())
-    tables = table_stage(pages, flagged)
-
-    # J1: reunite clause output with table output per (url, page)
-    tables_per_doc = tables.groupBy("url").agg(
-        F.sort_array(
-            F.collect_list(F.struct("page_no", "cells"))
-        ).alias("tables")
-    )
-    joined = clauses.join(tables_per_doc, "url", "left")
-
-    staged = {r.url: r for r in joined.collect()}
-
-    # every pdf url that decodes appears in the staged output
-    assert set(staged) >= ok_urls
-
-    for u in ok_urls:
-        f, s = fused[u], staged[u]
-        assert s.extracted_text == f.extracted_text, u
-        assert s.clauses_json == f.clauses_json, u
-        assert (s.table_pages or []) == (f.table_pages or []), u
-        f_tables = [(t.page_no, [list(r) for r in t.cells]) for t in (f.tables or [])]
-        s_tables = [
-            (t.page_no, [list(r) for r in t.cells]) for t in (s.tables or [])
-        ]
-        assert s_tables == f_tables, u
-
-    # validation-error docs surface identically through the staged path
-    for u, r in fused.items():
-        if r.error and u in staged:
-            assert staged[u].error == r.error, u
+from pdf_parser_spark.operators import decode_pages
 
 
 def test_decode_pages_schema_and_explode(spark, corpus_df):

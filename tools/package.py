@@ -1,5 +1,7 @@
 """Build dist/pdf_parser_spark.zip for spark-submit --py-files
-(north rule packaging requirement).
+(north rule packaging requirement). The zip is the one
+``session.package_zip`` ships to executors; this script is the only
+writer of dist/.
 
     python tools/package.py
     spark-submit --py-files dist/pdf_parser_spark.zip \
@@ -9,28 +11,21 @@
 from __future__ import annotations
 
 import os
-import zipfile
+import shutil
+import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from pdf_parser_spark.session import package_zip  # noqa: E402
 
 
 def build(out: str = "dist/pdf_parser_spark.zip") -> str:
     out_path = os.path.join(REPO, out)
     os.makedirs(os.path.dirname(out_path), exist_ok=True)
-    pkg_root = os.path.join(REPO, "pdf_parser_spark")
-    with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as z:
-        for dirpath, _dirnames, filenames in os.walk(pkg_root):
-            if "__pycache__" in dirpath:
-                continue
-            for fn in sorted(filenames):
-                if not fn.endswith(".py"):
-                    continue
-                full = os.path.join(dirpath, fn)
-                rel = os.path.relpath(full, REPO)
-                z.write(full, rel)
+    shutil.copyfile(package_zip(), out_path)
     return out_path
 
 
 if __name__ == "__main__":
-    p = build()
-    print(p)
+    print(build())
