@@ -534,7 +534,11 @@ def q_pq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < 10)
     tag = _re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir.rstrip("/").split("/")[-1])
     table = f"pps_pq_idx_{tag}"
-    if not spark.catalog.tableExists(table):
+    # the query reads both tables: rebuild unless both are there
+    if not (
+        spark.catalog.tableExists(table)
+        and spark.catalog.tableExists(f"{table}_codebooks")
+    ):
         idx_dir = os.path.join(tempfile.gettempdir(), f"pps_pq_idx_{tag}")
         build_pq_index(
             emb, table, m=8, ksub=16, max_train=512, n_buckets=8,

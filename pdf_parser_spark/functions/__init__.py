@@ -1,7 +1,8 @@
 """Training-data pipeline operators over document/embedding tables:
 deduplication (exact, n-gram Jaccard, MinHash+LSH, SimHash), similarity
-search (brute-force + LSH-bucketed cosine top-k), and text analysis
-(token stats, quality scoring, language id, fingerprinting).
+search (cosine top-k: brute force, SRP-LSH, IVF, int8, product
+quantization, and persisted LSH/PQ indexes), and text analysis (token
+stats, quality scoring, language id, fingerprinting).
 
 Everything here is built from JVM-side pyspark.sql.functions expressions
 (plus Arrow-batched numpy kernels where megabyte expression plans would

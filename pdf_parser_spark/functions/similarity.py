@@ -1,10 +1,16 @@
 """Similarity search over an embedding column (array<float>).
 
-Brute-force cosine top-k is the exact baseline; the LSH-bucketed variant
-is the scale path (candidate set shrinks by the bucket collision rate).
-Dot products unroll to flat codegen expressions when the dimension is
-known (see _dot — Spark's array higher-order functions are interpreted);
-no UDFs anywhere.
+Seven cosine top-k paths: exact brute force, and the scale paths SRP-LSH
+(ad hoc, and as a persisted index), IVF, int8 quantization and product
+quantization (ad hoc, and as a persisted index). Each path only
+GENERATES candidate pairs ``(query_id, neighbor_id, qvec, qn, cvec,
+cn)``; one scorer (_score) and one ranker (_rank) finish all of them,
+so every path computes the same cosine and the same tie order.
+
+Bucket codes, list assignment and quantization run in Arrow-batched
+numpy kernels; the cosine is a flat codegen expression up to the 64-term
+ceiling and the same left fold in an Arrow kernel beyond it. There are
+no per-row Python UDFs.
 """
 
 from __future__ import annotations
@@ -15,13 +21,18 @@ import shutil
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# Janino / Catalyst ceiling for ONE expression tree (CLAUDE.md): beyond
+# it an unrolled dot falls out of codegen or stalls canonicalization
+_UNROLL_MAX = 64
+
 
 def _dot(a, b, dim: int | None = None):
-    """Dot product. With a known ``dim``, unroll to a flat sum of
-    element_at products — plain expressions stay in whole-stage codegen,
-    while the array higher-order form (aggregate/zip_with) is
-    INTERPRETED and measured ~20x slower in the pair-scoring hot loop."""
-    if dim is not None:
+    """Dot product. With a known ``dim`` up to _UNROLL_MAX, unroll to a
+    flat sum of element_at products — plain expressions stay in
+    whole-stage codegen, while the array higher-order form
+    (aggregate/zip_with) is INTERPRETED and measured ~20x slower in the
+    pair-scoring hot loop. Larger or unknown dims use that form."""
+    if dim is not None and dim <= _UNROLL_MAX:
         terms = [
             F.element_at(a, i + 1).cast("double")
             * F.element_at(b, i + 1).cast("double")
@@ -42,6 +53,80 @@ def _norm(a, dim: int | None = None):
     return F.sqrt(_dot(a, a, dim))
 
 
+def _lf_cosine_kernel(batches):
+    """Arrow kernel twin of the codegen cosine for dim > _UNROLL_MAX:
+    per pair, the left-fold dot (_lf_dot_rows — the exact IEEE op
+    sequence of the unrolled sum) over ``qn * cn``, NULL where that is
+    zero (try_divide's result)."""
+    import numpy as np
+    import pandas as pd
+
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        Q, C = (
+            np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[col]])
+            for col in ("qvec", "cvec")
+        )
+        den = pdf["qn"].to_numpy(np.float64) * pdf["cn"].to_numpy(np.float64)
+        cos = _lf_dot_rows(Q, C) / np.where(den == 0.0, 1.0, den)
+        yield pd.DataFrame(
+            {
+                "query_id": pdf["query_id"].to_numpy(),
+                "neighbor_id": pdf["neighbor_id"].to_numpy(),
+                # NaN leaves the Arrow batch as NULL
+                "cosine": np.where(den == 0.0, np.nan, cos),
+            }
+        )
+
+
+def _score(pairs: DataFrame, dim: int | None) -> DataFrame:
+    """The one cosine scorer: candidate pairs ``(query_id, neighbor_id,
+    qvec, qn, cvec, cn)`` -> ``(query_id, neighbor_id, cosine)`` with
+    cosine = dot / (qn * cn). The dot is a sequential left fold in
+    double: an unrolled codegen sum up to _UNROLL_MAX terms, the same
+    fold in _lf_cosine_kernel beyond it, so the two agree bit for bit at
+    any dim. Integer codes (q8) score exactly: every partial sum of int8
+    products is an integer below 2^53. A zero norm gives a NULL cosine
+    (DuckDB's 0.0/0.0), which _rank orders last."""
+    if dim is None or dim <= _UNROLL_MAX:
+        return pairs.select(
+            "query_id",
+            "neighbor_id",
+            F.try_divide(
+                _dot(F.col("qvec"), F.col("cvec"), dim),
+                F.col("qn") * F.col("cn"),
+            ).alias("cosine"),
+        )
+    return pairs.select(
+        "query_id", "neighbor_id", "qvec", "qn", "cvec", "cn"
+    ).mapInPandas(
+        _lf_cosine_kernel,
+        schema="query_id long, neighbor_id long, cosine double",
+    )
+
+
+def _rank(
+    scored: DataFrame, k: int, by: str = "cosine", dedup: bool = False
+) -> DataFrame:
+    """The one ranker: drop self pairs (and, with ``dedup``, repeated
+    pairs — a multi-table LSH collision carries the same score in every
+    copy), then keep row_number() over (query_id ORDER BY ``by`` DESC
+    NULLS LAST, neighbor_id ASC) <= k. Spark plans the ``<= k`` cut as a
+    partial WindowGroupLimit before the shuffle."""
+    scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
+    if dedup:
+        scored = scored.dropDuplicates(["query_id", "neighbor_id"])
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(by), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", by)
+    )
+
+
 def brute_force_cosine_topk(
     df: DataFrame,
     query_df: DataFrame,
@@ -53,8 +138,7 @@ def brute_force_cosine_topk(
     """Exact cosine top-k: broadcast the (small) query set against the
     corpus, rank per query. Scale: corpus side is never shuffled — the
     broadcast-nested-loop join streams it once; ranking shuffles only
-    (n_queries * corpus) slim score rows, and at real scale you swap the
-    window for a per-partition top-k + merge (same semantics)."""
+    the per-partition top-k slim score rows."""
     # norms are precomputed per side BEFORE the join: the per-pair
     # expression is then a single dim-term dot instead of dot + two
     # norms (3x the flops and 3x the generated code — identical values,
@@ -69,26 +153,7 @@ def brute_force_cosine_topk(
         F.col(vec_col).alias("cvec"),
         _norm(F.col(vec_col), dim).alias("cn"),
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("qvec"), F.col("cvec"), dim)
-                / (F.col("qn") * F.col("cn"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rank(_score(c.crossJoin(F.broadcast(q)), dim), k)
 
 
 def _eager_kernel_output(df: DataFrame, batch_rows: int = 4096) -> DataFrame:
@@ -120,16 +185,17 @@ def _eager_kernel_output(df: DataFrame, batch_rows: int = 4096) -> DataFrame:
 
 
 def _lf_dot_rows(V, p):
-    """Per-row dot of matrix ``V`` with vector ``p`` as a SEQUENTIAL
-    left fold (np.add.accumulate — the exact IEEE op sequence of the
-    pure-Python per-element fold the VALUES-oracle replica runs, and of
-    Spark's unrolled codegen sums). BLAS matmul / ndarray.sum use
-    blocked or pairwise summation whose low bits depend on batch shape:
-    near-tie dots could then flip bucket bits or list assignments
-    between the engine and the replica (round-3 ADVICE)."""
+    """Per-row dot of matrix ``V`` with vector ``p`` (or with the
+    matching row of a same-shape matrix) as a SEQUENTIAL left fold
+    (np.add.accumulate — the exact IEEE op sequence of the pure-Python
+    per-element fold the VALUES-oracle replica runs, and of Spark's
+    unrolled codegen sums). BLAS matmul / ndarray.sum use blocked or
+    pairwise summation whose low bits depend on batch shape: near-tie
+    dots could then flip bucket bits or list assignments between the
+    engine and the replica (round-3 ADVICE)."""
     import numpy as np
 
-    return np.add.accumulate(V * p[None, :], axis=1)[:, -1]
+    return np.add.accumulate(V * p, axis=1)[:, -1]
 
 
 def _lf_sq_rows(V):
@@ -149,10 +215,7 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[floa
 
 
 def _make_lsh_code_kernel(
-    planes_per_table: list[list[list[float]]],
-    id_col: str,
-    vec_col: str,
-    out_id: str,
+    planes_per_table: list[list[list[float]]], id_col: str, vec_col: str
 ):
     """Arrow-batched kernel: per row emit (id, vec, L2 norm, one packed
     SRP code per table). The bucket math lives in numpy vector ops, NOT
@@ -176,7 +239,7 @@ def _make_lsh_code_kernel(
             V = np.vstack(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
             )
-            out = pd.DataFrame({out_id: pdf[id_col].values})
+            out = pd.DataFrame({"id": pdf[id_col].values})
             out["vec"] = list(pdf[vec_col])
             out["nrm"] = np.sqrt(_lf_sq_rows(V))
             for t in range(n_tables):
@@ -188,6 +251,54 @@ def _make_lsh_code_kernel(
             yield out
 
     return code
+
+
+def _lsh_buckets(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    names: tuple[str, str, str],
+    dim: int,
+    n_planes: int,
+    n_tables: int,
+    hamming: int,
+    eager: bool = True,
+) -> DataFrame:
+    """The one SRP-LSH derivation (lsh_cosine_topk, build_lsh_index,
+    query_lsh_index): plane sets seeded per table, codes from one Arrow
+    kernel pass, then one row per (table, bucket) — plus, with
+    ``hamming=1``, one per bucket a single plane flip away (query-side
+    multi-probe). ``names`` names the (id, vec, norm) columns; ``eager``
+    checkpoints the kernel output (_eager_kernel_output)."""
+    if hamming not in (0, 1):
+        raise ValueError("multi-probe supports hamming 0 or 1")
+    planes_per_table = [
+        random_hyperplanes(dim, n_planes, seed=7 + t)
+        for t in range(n_tables)
+    ]
+    coded = df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
+        _make_lsh_code_kernel(planes_per_table, id_col, vec_col),
+        schema="id long, vec array<float>, nrm double, "
+        + ", ".join(f"b_{t} long" for t in range(n_tables)),
+    )
+    if eager:
+        coded = _eager_kernel_output(coded)
+    flips = range(n_planes) if hamming else ()
+    buckets = [
+        F.struct(F.lit(t).alias("table"), b.alias("bucket"))
+        for t in range(n_tables)
+        for b in [F.col(f"b_{t}")]
+        + [
+            F.col(f"b_{t}").bitwiseXOR(F.lit(1 << j).cast("long"))
+            for j in flips
+        ]
+    ]
+    return coded.select(
+        F.col("id").alias(names[0]),
+        F.col("vec").alias(names[1]),
+        F.col("nrm").alias(names[2]),
+        F.explode(F.array(*buckets)).alias("tb"),
+    ).select(*names, "tb.table", "tb.bucket")
 
 
 def ivf_fit_centroids(
@@ -219,11 +330,7 @@ def ivf_fit_centroids(
 
 
 def _make_ivf_assign_kernel(
-    centroids: list[list[float]],
-    id_col: str,
-    vec_col: str,
-    out_id: str,
-    n: int,
+    centroids: list[list[float]], id_col: str, vec_col: str, n: int
 ):
     """Arrow-batched kernel: per row emit (id, vec, L2 norm, the ``n``
     nearest list ids by squared L2 distance, ties to the LOWER list id).
@@ -256,7 +363,7 @@ def _make_ivf_assign_kernel(
             )
             d2 = (dvv[:, None] - 2.0 * vc) + c_sq[None, :]
             near = np.argsort(d2, axis=1, kind="stable")[:, :n]
-            out = pd.DataFrame({out_id: pdf[id_col].values})
+            out = pd.DataFrame({"id": pdf[id_col].values})
             out["vec"] = list(pdf[vec_col])
             out["nrm"] = np.sqrt(dvv)
             out["lists"] = [row.astype("int32").tolist() for row in near]
@@ -306,50 +413,29 @@ def ivf_cosine_topk(
     )
     centroids = ivf_fit_centroids(train, nlist, seed=seed)
 
-    assigned = _eager_kernel_output(
-        df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-            _make_ivf_assign_kernel(centroids, id_col, vec_col, "nid", 1),
-            schema="nid long, vec array<float>, nrm double, lists array<int>",
+    def assigned(frame, n):
+        return _eager_kernel_output(
+            frame.select(F.col(id_col), F.col(vec_col)).mapInPandas(
+                _make_ivf_assign_kernel(centroids, id_col, vec_col, n),
+                schema="id long, vec array<float>, nrm double, "
+                "lists array<int>",
+            )
         )
-    ).select(
-        F.col("nid").alias("neighbor_id"),
+
+    c = assigned(df, 1).select(
+        F.col("id").alias("neighbor_id"),
         F.col("vec").alias("cvec"),
         F.col("nrm").alias("cn"),
         F.element_at("lists", 1).alias("list_id"),
     )
-    q = _eager_kernel_output(
-        query_df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-            _make_ivf_assign_kernel(centroids, id_col, vec_col, "qid", nprobe),
-            schema="qid long, vec array<float>, nrm double, lists array<int>",
-        )
-    ).select(
-        F.col("qid").alias("query_id"),
+    q = assigned(query_df, nprobe).select(
+        F.col("id").alias("query_id"),
         F.col("vec").alias("qvec"),
         F.col("nrm").alias("qn"),
         F.explode("lists").alias("probe"),
     )
-    scored = (
-        assigned.join(
-            F.broadcast(q), assigned.list_id == q.probe
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("qvec"), F.col("cvec"), dim)
-                / (F.col("qn") * F.col("cn"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    pairs = c.join(F.broadcast(q), c.list_id == q.probe)
+    return _rank(_score(pairs, dim), k)
 
 
 def lsh_cosine_topk(
@@ -375,116 +461,45 @@ def lsh_cosine_topk(
     Scale: the candidate join is an equi-join on (table, bucket) with
     the (small) query side broadcast; the corpus is scanned once and
     exploded n_tables x, never all-pairs. Candidate dedup shuffles only
-    (query, neighbor, vectors) rows that actually collided."""
-    if hamming not in (0, 1):
-        raise ValueError("multi-probe supports hamming 0 or 1")
-    planes_per_table = [
-        random_hyperplanes(dim, n_planes, seed=7 + t)
-        for t in range(n_tables)
-    ]
-    code_schema = (
-        "{id} long, vec array<float>, nrm double, "
-        + ", ".join(f"b_{t} long" for t in range(n_tables))
+    slim (query, neighbor, cosine) rows of pairs that actually
+    collided."""
+    # query side first: it validates ``hamming`` before the corpus pass
+    q = _lsh_buckets(
+        query_df, id_col, vec_col, ("query_id", "qvec", "qn"),
+        dim, n_planes, n_tables, hamming,
     )
-    c0 = _eager_kernel_output(
-        df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-            _make_lsh_code_kernel(planes_per_table, id_col, vec_col, "nid"),
-            schema=code_schema.format(id="nid"),
-        )
+    c = _lsh_buckets(
+        df, id_col, vec_col, ("neighbor_id", "cvec", "cn"),
+        dim, n_planes, n_tables, 0,
     )
-    c = c0.select(
-        F.col("nid").alias("neighbor_id"),
-        F.col("vec").alias("cvec"),
-        F.col("nrm").alias("cn"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("table"),
-                        F.col(f"b_{t}").alias("bucket"),
-                    )
-                    for t in range(n_tables)
-                ]
-            )
-        ).alias("tb"),
-    ).select(
-        "neighbor_id", "cvec", "cn",
-        F.col("tb.table").alias("table"),
-        F.col("tb.bucket").alias("bucket"),
-    )
-    q = _lsh_probe_side(
-        query_df, planes_per_table, id_col, vec_col, n_planes, hamming
-    )
-    cand = (
-        c.join(F.broadcast(q), ["table", "bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        # a pair colliding in several tables/probes carries identical
-        # vector payloads in every copy — any survivor is correct
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        (
-            _dot(F.col("qvec"), F.col("cvec"), dim)
-            / (F.col("qn") * F.col("cn"))
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    pairs = c.join(F.broadcast(q), ["table", "bucket"])
+    return _rank(_score(pairs, dim), k, dedup=True)
 
 
-def _lsh_probe_side(
-    query_df: DataFrame,
-    planes_per_table: list,
-    id_col: str,
-    vec_col: str,
-    n_planes: int,
-    hamming: int,
-) -> DataFrame:
-    """Query side of the SRP bucket join: code the (small) query set,
-    explode to one row per (table, probe-bucket) with multi-probe at
-    Hamming distance <= hamming. Shared by lsh_cosine_topk and
-    query_lsh_index — one derivation, no forked probe logic."""
-    n_tables = len(planes_per_table)
-    code_schema = "qid long, vec array<float>, nrm double, " + ", ".join(
-        f"b_{t} long" for t in range(n_tables)
-    )
-    q0 = _eager_kernel_output(
-        query_df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-            _make_lsh_code_kernel(planes_per_table, id_col, vec_col, "qid"),
-            schema=code_schema,
+def _clear_index_location(
+    spark, tables: list[str], path: str | None
+) -> None:
+    """Drop ``tables`` and whatever a prior session left where they
+    will be written. A table DIRECTORY can outlive the in-memory
+    catalog (a prior session wrote it; this session's catalog has never
+    heard of it) — saveAsTable then refuses with LOCATION_ALREADY_EXISTS.
+    An external index clears ``path``; a managed one clears
+    ``<database location>/<table>`` per table, with the location read
+    from the catalog (a database created with a custom LOCATION does not
+    live under the warehouse dir)."""
+    from urllib.parse import urlparse
+
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    if path is not None:
+        shutil.rmtree(path, ignore_errors=True)
+        return
+    db = tables[0].rpartition(".")[0] or spark.catalog.currentDatabase()
+    loc = urlparse(spark.catalog.getDatabase(db).locationUri).path
+    for t in tables:
+        shutil.rmtree(
+            os.path.join(loc, t.rpartition(".")[2]), ignore_errors=True
         )
-    )
-    probe_structs = []
-    for t in range(n_tables):
-        b = F.col(f"b_{t}")
-        probes = [b]
-        if hamming == 1:
-            probes += [
-                b.bitwiseXOR(F.lit(1 << j).cast("long"))
-                for j in range(n_planes)
-            ]
-        probe_structs += [
-            F.struct(F.lit(t).alias("table"), p.alias("bucket"))
-            for p in probes
-        ]
-    return q0.select(
-        F.col("qid").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qn"),
-        F.explode(F.array(*probe_structs)).alias("tb"),
-    ).select(
-        "query_id", "qvec", "qn",
-        F.col("tb.table").alias("table"),
-        F.col("tb.bucket").alias("bucket"),
-    )
 
 
 def build_lsh_index(
@@ -512,60 +527,10 @@ def build_lsh_index(
     writable); default is a managed warehouse table."""
     from pdf_parser_spark.sources.io import write_bucketed
 
-    spark = df.sparkSession
-    # a managed-table DIRECTORY can outlive the in-memory catalog (a
-    # prior session wrote it; this session's catalog has never heard of
-    # it) — saveAsTable then refuses with LOCATION_ALREADY_EXISTS.
-    # Drop both the catalog entry and any orphaned location first.
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    if path is None:
-        from urllib.parse import urlparse
-
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        parts = table.split(".")
-        loc = (
-            os.path.join(wh, f"{parts[0]}.db", parts[1])
-            if len(parts) == 2
-            else os.path.join(wh, parts[0])
-        )
-        shutil.rmtree(loc, ignore_errors=True)
-    else:
-        shutil.rmtree(path, ignore_errors=True)
-
-    planes_per_table = [
-        random_hyperplanes(dim, n_planes, seed=7 + t)
-        for t in range(n_tables)
-    ]
-    code_schema = "nid long, vec array<float>, nrm double, " + ", ".join(
-        f"b_{t} long" for t in range(n_tables)
-    )
-    c = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .mapInPandas(
-            _make_lsh_code_kernel(planes_per_table, id_col, vec_col, "nid"),
-            schema=code_schema,
-        )
-        .select(
-            F.col("nid").alias("neighbor_id"),
-            F.col("vec").alias("cvec"),
-            F.col("nrm").alias("cn"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("table"),
-                            F.col(f"b_{t}").alias("bucket"),
-                        )
-                        for t in range(n_tables)
-                    ]
-                )
-            ).alias("tb"),
-        )
-        .select(
-            "neighbor_id", "cvec", "cn",
-            F.col("tb.table").alias("table"),
-            F.col("tb.bucket").alias("bucket"),
-        )
+    _clear_index_location(df.sparkSession, [table], path)
+    c = _lsh_buckets(
+        df, id_col, vec_col, ("neighbor_id", "cvec", "cn"),
+        dim, n_planes, n_tables, 0, eager=False,
     )
     write_bucketed(
         c, table, bucket_col="bucket", n_buckets=n_buckets, path=path
@@ -573,18 +538,20 @@ def build_lsh_index(
 
 
 def _make_partial_topk_kernel(k: int):
-    """Partition-local candidate reducer: dedup (query, neighbor) pairs
-    (multi-table collisions carry identical payloads) and keep the top
-    ``k`` per query by (cosine desc, neighbor asc). Pure sort/filter —
-    the cosine itself was computed by the SAME codegen expression the
-    direct LSH path uses, so no float math happens here and the merged
-    result is bit-identical to the window-ranked one."""
+    """Partition-local candidate reducer: drop self pairs, dedup (query,
+    neighbor) pairs (multi-table collisions carry identical payloads)
+    and keep the top ``k`` per query by (cosine desc NULLS LAST,
+    neighbor asc) — _rank's filter, dedup and order. Pure sort/filter —
+    the cosine itself came from the SAME _score the direct LSH path
+    uses, so no float math happens here and the merged result is
+    bit-identical to the window-ranked one."""
 
     def topk(batches):
         import pandas as pd
 
         acc = None
         for pdf in batches:
+            pdf = pdf[pdf["query_id"] != pdf["neighbor_id"]]
             if not len(pdf):
                 continue
             acc = pdf if acc is None else pd.concat((acc, pdf))
@@ -648,37 +615,21 @@ def query_lsh_index(
     hamming: int = 1,
 ) -> DataFrame:
     """Query a persisted SRP-LSH index (build_lsh_index) with a ZERO-
-    SHUFFLE plan: bucketed-index scan -> broadcast probe join -> codegen
-    cosine -> partition-local Arrow top-k -> coalesce(1) -> final merge.
+    SHUFFLE plan: bucketed-index scan -> broadcast probe join -> _score
+    -> partition-local Arrow top-k -> coalesce(1) -> final merge.
     No Exchange node anywhere (the window-rank + dropDuplicates
     shuffles of the direct path are replaced by the two slim top-k
     kernels), no SRP kernel re-run (codes come off parquet), and the
     result is row- and bit-identical to lsh_cosine_topk with the same
-    parameters (same candidates, same codegen cosine expression, same
-    total tie order) — pinned by tests and by the shared contract
-    oracle. ``n_planes``/``n_tables``/``dim`` must match the build."""
-    if hamming not in (0, 1):
-        raise ValueError("multi-probe supports hamming 0 or 1")
-    planes_per_table = [
-        random_hyperplanes(dim, n_planes, seed=7 + t)
-        for t in range(n_tables)
-    ]
-    idx = spark.table(table)
-    q = _lsh_probe_side(
-        query_df, planes_per_table, id_col, vec_col, n_planes, hamming
+    parameters (same candidates, same scorer, same total tie order) —
+    pinned by tests and by the shared contract oracle.
+    ``n_planes``/``n_tables``/``dim`` must match the build."""
+    q = _lsh_buckets(
+        query_df, id_col, vec_col, ("query_id", "qvec", "qn"),
+        dim, n_planes, n_tables, hamming,
     )
-    scored = (
-        idx.join(F.broadcast(q), ["table", "bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("qvec"), F.col("cvec"), dim)
-                / (F.col("qn") * F.col("cn"))
-            ).alias("cosine"),
-        )
-    )
+    pairs = spark.table(table).join(F.broadcast(q), ["table", "bucket"])
+    scored = _score(pairs, dim)
     partial = scored.mapInPandas(
         _make_partial_topk_kernel(k),
         schema="query_id long, neighbor_id long, cosine double",
@@ -696,7 +647,7 @@ def query_lsh_index(
     )
 
 
-def _make_q8_kernel(id_col: str, vec_col: str, out_id: str):
+def _make_q8_kernel(id_col: str, vec_col: str):
     """Arrow-batched symmetric int8 quantization: per vector,
     scale = max|v| / 127 and q = rint(v / scale) in [-127, 127].
     Emits (id, qvec int8, qn = ||q||). Cosine is scale-free under
@@ -717,56 +668,12 @@ def _make_q8_kernel(id_col: str, vec_col: str, out_id: str):
             s[s == 0.0] = 1.0
             Q = np.rint(V / s[:, None]).astype(np.int8)
             Qd = Q.astype(np.float64)
-            out = pd.DataFrame({out_id: pdf[id_col].values})
+            out = pd.DataFrame({"id": pdf[id_col].values})
             out["q"] = [row for row in Q]
             out["qn"] = np.sqrt((Qd * Qd).sum(axis=1))
             yield out
 
     return quantize
-
-
-def _q8_kernel_score(c: DataFrame, qy: DataFrame) -> DataFrame:
-    """Score path for dim > 64: collect the (small) query-code side to
-    the driver — the same size class the codegen path broadcasts — and
-    ship it in the kernel closure; each corpus Arrow batch then does ONE
-    exact int64 matmul against all queries. Integer addition is
-    associative, so these dots equal the unrolled-expression dots
-    bit-for-bit; no >64-term Add chain ever reaches Janino."""
-    q_rows = qy.collect()
-    q_ids = [int(r["query_id"]) for r in q_rows]
-    q_codes = [list(r["qq"]) for r in q_rows]
-    q_norms = [float(r["qn"]) for r in q_rows]
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        Q = np.array(q_codes, dtype=np.int64)
-        qi = np.array(q_ids, dtype=np.int64)
-        qn = np.array(q_norms, dtype=np.float64)
-        m = len(qi)
-        for pdf in batches:
-            if not len(pdf) or not m:
-                continue
-            C = np.vstack(
-                [np.asarray(v, dtype=np.int64) for v in pdf["cq"]]
-            )
-            dots = C @ Q.T  # integer matmul: exact, no float rounding
-            cn = pdf["cn"].to_numpy(dtype=np.float64)
-            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            cos = dots.astype(np.float64) / (cn[:, None] * qn[None, :])
-            out = pd.DataFrame(
-                {
-                    "query_id": np.tile(qi, len(nid)),
-                    "neighbor_id": np.repeat(nid, m),
-                    "cosine": cos.ravel(),
-                }
-            )
-            yield out[out["query_id"] != out["neighbor_id"]]
-
-    return c.mapInPandas(
-        score, schema="query_id long, neighbor_id long, cosine double"
-    )
 
 
 def q8_cosine_topk(
@@ -778,77 +685,30 @@ def q8_cosine_topk(
     dim: int = 64,
 ) -> DataFrame:
     """Quantized cosine top-k: both sides symmetric-int8 quantized, the
-    pair score is an EXACT int64 dot of int8 codes over the codes'
-    norms. The memory/bandwidth scale path, complementing LSH/IVF's
-    compute cuts: the resident corpus shrinks 4x (64 bytes vs 256 per
-    dim=64 vector), which is what bounds a broadcast or a cached
-    corpus at 10^9 vectors. Recall loss is the quantization angle
-    error (~1e-2 on unit gaussians) — rank changes only where true
-    cosines are closer than that.
+    pair score is _score over the int8 codes — an EXACT dot (every
+    partial sum is an integer below 2^53) over the codes' norms. The
+    memory/bandwidth scale path, complementing LSH/IVF's compute cuts:
+    the resident corpus shrinks 4x (64 bytes vs 256 per dim=64 vector),
+    which is what bounds a broadcast or a cached corpus at 10^9
+    vectors. Recall loss is the quantization angle error (~1e-2 on unit
+    gaussians) — rank changes only where true cosines are closer than
+    that.
 
     Fully deterministic (rint is IEEE round-half-even on both numpy and
     the oracle replica; integer dots are exact), so VALUES-oracle
-    checkable like the other ANN paths.
+    checkable like the other ANN paths."""
 
-    dim <= 64 scores through a flat unrolled codegen expression; larger
-    dims would build ONE >64-term Add chain — exactly the Janino /
-    Catalyst-canonicalization ceiling (CLAUDE.md) — so they score inside
-    an Arrow kernel instead: the (small, collected) query code matrix
-    ships in the closure and each corpus batch does one exact int64
-    matmul. Integer addition is associative, so the kernel dots equal
-    the unrolled-expression dots bit-for-bit."""
-    c = _eager_kernel_output(
-        df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-            _make_q8_kernel(id_col, vec_col, "nid"),
-            schema="nid long, q array<tinyint>, qn double",
-        )
-    ).select(
-        F.col("nid").alias("neighbor_id"),
-        F.col("q").alias("cq"),
-        F.col("qn").alias("cn"),
-    )
-    qy = _eager_kernel_output(
-        query_df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-            _make_q8_kernel(id_col, vec_col, "qid"),
-            schema="qid long, q array<tinyint>, qn double",
-        )
-    ).select(
-        F.col("qid").alias("query_id"),
-        F.col("q").alias("qq"),
-        F.col("qn").alias("qn"),
-    )
-    if dim <= 64:
-        # exact integer dot, unrolled to flat codegen (HOFs are
-        # interpreted); one tree stays under the ~64-term ceiling
-        terms = [
-            F.element_at("qq", i + 1).cast("long")
-            * F.element_at("cq", i + 1).cast("long")
-            for i in range(dim)
-        ]
-        idot = terms[0]
-        for t in terms[1:]:
-            idot = idot + t
-        scored = (
-            c.crossJoin(F.broadcast(qy))
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                (
-                    idot.cast("double") / (F.col("qn") * F.col("cn"))
-                ).alias("cosine"),
+    def quantized(frame, names):
+        return _eager_kernel_output(
+            frame.select(F.col(id_col), F.col(vec_col)).mapInPandas(
+                _make_q8_kernel(id_col, vec_col),
+                schema="id long, q array<tinyint>, qn double",
             )
-        )
-    else:
-        scored = _q8_kernel_score(c, qy)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+        ).toDF(*names)
+
+    c = quantized(df, ("neighbor_id", "cvec", "cn"))
+    q = quantized(query_df, ("query_id", "qvec", "qn"))
+    return _rank(_score(c.crossJoin(F.broadcast(q)), dim), k)
 
 
 def pq_fit_codebooks(
@@ -970,55 +830,6 @@ def _make_pq_score_kernel(luts, r: int):
     return score
 
 
-def _make_exact_rerank_kernel(qside):
-    """Float exact-cosine rerank kernel for dim > 64 (PQ path).
-
-    ``qside`` is the already-collected [(query_id, qvec, qn), ...]
-    list. Each Arrow batch computes per-pair left-fold dots
-    (_lf_dot_rows) against the matching query vector — the exact IEEE
-    op sequence of the unrolled codegen sum the dim<=64 branch
-    generates, so the two branches agree bit-for-bit at any dim."""
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        # round-trip q through float32: the dim<=64 branch ships qvec
-        # as array<float> (then casts each element back to double in
-        # the codegen dot), so the kernel must see the same values
-        qmap = {
-            int(qid): (
-                np.asarray(qv, dtype=np.float32).astype(np.float64),
-                float(qn),
-            )
-            for qid, qv, qn in qside
-        }
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.vstack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["cvec"]]
-            )
-            cn = pdf["cn"].to_numpy(dtype=np.float64)
-            qids = pdf["query_id"].to_numpy(dtype=np.int64)
-            cos = np.empty(len(pdf), dtype=np.float64)
-            for qid in np.unique(qids):
-                sel = qids == qid
-                qv, qn = qmap[int(qid)]
-                cos[sel] = _lf_dot_rows(C[sel], qv) / (qn * cn[sel])
-            yield pd.DataFrame(
-                {
-                    "query_id": qids,
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(
-                        dtype=np.int64
-                    ),
-                    "cosine": cos,
-                }
-            )
-
-    return score
-
-
 def pq_cosine_topk(
     df: DataFrame,
     query_df: DataFrame,
@@ -1116,12 +927,7 @@ def build_pq_index(
     from pdf_parser_spark.sources.io import write_bucketed
 
     spark = df.sparkSession
-    for t in (table, f"{table}_codebooks"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    if path is not None:
-        # stale external dirs from a prior session (whose in-memory
-        # catalog is gone) — same hazard build_lsh_index documents
-        shutil.rmtree(path, ignore_errors=True)
+    _clear_index_location(spark, [table, f"{table}_codebooks"], path)
     codebooks, coded = _pq_fit_and_code(
         df, m, ksub, id_col, vec_col, seed, max_train
     )
@@ -1192,12 +998,13 @@ def _pq_query_tail(
     dim: int,
     m: int,
 ) -> DataFrame:
-    """Scoring tail of the PQ path, shared by pq_cosine_topk (fresh
-    codes) and query_pq_index (persisted codes): build the per-query
-    LUTs driver-side, stream the code table through the LUT kernel,
-    rerank the top candidates with exact cosine. Identical inputs give
-    bit-identical output — the two callers differ only in WHERE
-    ``assigned`` and ``codebooks`` come from."""
+    """Candidate generation of the PQ path, shared by pq_cosine_topk
+    (fresh codes) and query_pq_index (persisted codes): build the
+    per-query LUTs driver-side, stream the code table through the LUT
+    kernel, cut to the top ``rerank`` per query (_rank over the approx
+    score), then _score/_rank those candidates on the true vectors.
+    Identical inputs give bit-identical output — the two callers differ
+    only in WHERE ``assigned`` and ``codebooks`` come from."""
     import numpy as np
 
     qrows = query_df.select(F.col(id_col), F.col(vec_col)).collect()
@@ -1220,56 +1027,23 @@ def _pq_query_tail(
         luts.append((int(r_[0]), lut))
         qside.append((int(r_[0]), [float(v) for v in r_[1]], qn))
 
-    scored = assigned.select("nid", "codes").mapInPandas(
+    approx = assigned.select("nid", "codes").mapInPandas(
         _make_pq_score_kernel(luts, rerank),
         schema="query_id long, neighbor_id long, approx double",
     )
-    w_r = Window.partitionBy("query_id").orderBy(
-        F.desc("approx"), F.asc("neighbor_id")
+    cand = _rank(approx, rerank, by="approx").select(
+        "query_id", "neighbor_id"
     )
-    cand = (
-        scored.withColumn("crk", F.row_number().over(w_r))
-        .filter(F.col("crk") <= rerank)
-        .select("query_id", "neighbor_id")
+    # qvec ships as array<float>, like every other path's query side
+    qdf = assigned.sparkSession.createDataFrame(
+        qside, "query_id long, qvec array<float>, qn double"
     )
-    joined = cand.join(
+    pairs = cand.join(
         assigned.select(
             F.col("nid").alias("neighbor_id"),
             F.col("vec").alias("cvec"),
             F.col("nrm").alias("cn"),
         ),
         "neighbor_id",
-    )
-    if dim <= 64:
-        qdf = assigned.sparkSession.createDataFrame(
-            qside, "query_id long, qvec array<float>, qn double"
-        )
-        exact = joined.join(F.broadcast(qdf), "query_id").select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("qvec"), F.col("cvec"), dim)
-                / (F.col("qn") * F.col("cn"))
-            ).alias("cosine"),
-        )
-    else:
-        # dim > 64 would build ONE >64-term Add chain in the rerank —
-        # the same Janino / Catalyst-canonicalization ceiling the q8
-        # path guards (round-4 ADVICE). Score inside an Arrow kernel:
-        # the (tiny, already-collected) query side ships in the
-        # closure; the left-fold dot is bit-identical to the unrolled
-        # codegen sum (np.add.accumulate == same IEEE op sequence).
-        exact = joined.select(
-            "query_id", "neighbor_id", "cvec", "cn"
-        ).mapInPandas(
-            _make_exact_rerank_kernel(qside),
-            schema="query_id long, neighbor_id long, cosine double",
-        )
-    w_k = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w_k))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    ).join(F.broadcast(qdf), "query_id")
+    return _rank(_score(pairs, dim), k)

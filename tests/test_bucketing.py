@@ -3,6 +3,7 @@ aggregations on the bucket key must run WITHOUT an Exchange — the
 shuffle was paid once at write time. This is the plan-shape contract a
 100 TB deployment relies on for its hot join keys."""
 
+import os
 import re
 
 import pytest
@@ -80,6 +81,10 @@ def test_persisted_lsh_index_query_zero_exchange(spark, tmp_path_factory):
             "/root/testdata/sf0.001/embeddings.parquet"
         )
         q = emb.filter(F.col("vec_id") < 10)
+        # a prior session's directory at the managed location of this
+        # custom-LOCATION database: the build must clear it, not fail
+        # with LOCATION_ALREADY_EXISTS
+        os.makedirs(os.path.join(wh, "lsh", "stale"))
         build_lsh_index(emb, "annidx.lsh", n_planes=8, dim=64,
                         n_tables=4, n_buckets=8)
 
@@ -160,6 +165,23 @@ def test_persisted_pq_index_matches_ad_hoc(spark, tmp_path):
             ).collect()
         )
         assert again == want
+
+        # managed (path=None) rebuild into a custom-LOCATION database
+        # over orphaned directories of both tables
+        wh = str(tmp_path / "pqwh")
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS pqidx LOCATION '{wh}'")
+        for t in ("pq_t1", "pq_t1_codebooks"):
+            os.makedirs(os.path.join(wh, t, "stale"))
+        build_pq_index(emb, "pqidx.pq_t1", m=8, ksub=16, max_train=512,
+                       n_buckets=4)
+        managed = sorted(
+            (r.query_id, r.rank, r.neighbor_id, r.cosine)
+            for r in query_pq_index(
+                spark, "pqidx.pq_t1", q, k=5, rerank=32, m=8, dim=64
+            ).collect()
+        )
+        assert managed == want
     finally:
         spark.sql("DROP TABLE IF EXISTS pq_t1")
         spark.sql("DROP TABLE IF EXISTS pq_t1_codebooks")
+        spark.sql("DROP DATABASE IF EXISTS pqidx CASCADE")

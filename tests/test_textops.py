@@ -494,18 +494,20 @@ def test_ann_scale_paths_recall_floor(spark):
     assert len(lsh & exact) / len(exact) >= 0.25, (len(lsh & exact), len(exact))
 
 
-def test_q8_wide_dim_kernel_path_matches_codegen(spark):
-    """dim > 64 scores in an Arrow kernel (one int64 matmul per batch)
-    instead of a >64-term unrolled Add chain (the Janino ceiling).
-    Zero-padding 64-dim vectors to 80 leaves the quantization scale,
-    the int8 codes, the integer dots, and the norms unchanged (every
-    intermediate is an exact integer in double), so the 80-dim kernel
-    path must reproduce the 64-dim codegen path row-for-row —
-    bit-identical cosines, same ranks."""
+@pytest.mark.parametrize("fn", ["q8_cosine_topk", "brute_force_cosine_topk"])
+def test_q8_wide_dim_kernel_path_matches_codegen(spark, fn):
+    """dim > 64 scores in the left-fold Arrow kernel instead of a
+    >64-term unrolled Add chain (the Janino ceiling). Zero-padding
+    64-dim vectors to 80 leaves every left-fold sum unchanged — for q8
+    also the quantization scale, the int8 codes, the integer dots and
+    the norms (every intermediate is an exact integer in double) — so
+    the 80-dim kernel path must reproduce the 64-dim codegen path
+    row-for-row: bit-identical cosines, same ranks."""
     from pyspark.sql import functions as F
 
-    from pdf_parser_spark.functions import q8_cosine_topk
+    from pdf_parser_spark import functions
 
+    topk = getattr(functions, fn)
     emb = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
     ).limit(200)
@@ -519,13 +521,74 @@ def test_q8_wide_dim_kernel_path_matches_codegen(spark):
 
     narrow = sorted(
         (r.query_id, r.rank, r.neighbor_id, r.cosine)
-        for r in q8_cosine_topk(emb, q64, k=5, dim=64).collect()
+        for r in topk(emb, q64, k=5, dim=64).collect()
     )
     kernel = sorted(
         (r.query_id, r.rank, r.neighbor_id, r.cosine)
-        for r in q8_cosine_topk(wide, q80, k=5, dim=80).collect()
+        for r in topk(wide, q80, k=5, dim=80).collect()
     )
     assert kernel == narrow
+
+
+def test_zero_norm_vector_ranks_last_with_null_cosine(spark, tmp_path):
+    """A zero vector has no cosine: every path scores it NULL (try_divide
+    — DuckDB's 0.0/0.0) and ranks it last, instead of raising
+    DIVIDE_BY_ZERO under ANSI. The exact path must match the contract's
+    DuckDB oracle, and the persisted-index path (pandas top-k kernels)
+    must match the window-ranked LSH path row for row, NULL included."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+
+    import __spark_entry__ as entry
+    from pdf_parser_spark.functions import (
+        brute_force_cosine_topk,
+        build_lsh_index,
+        lsh_cosine_topk,
+        query_lsh_index,
+    )
+
+    vecs = np.random.default_rng(3).standard_normal((6, 4)).astype("float32")
+    vecs[2] = 0.0
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def by_rank(df):
+        return sorted(
+            (r.query_id, r.rank, r.neighbor_id, r.cosine)
+            for r in df.collect()
+        )
+
+    exact = by_rank(brute_force_cosine_topk(emb, emb, k=5, dim=4))
+    assert [r for r in exact if r[3] is None] == sorted(
+        [(2, rank, nid, None) for rank, nid in enumerate([0, 1, 3, 4, 5], 1)]
+        + [(q, 5, 2, None) for q in (0, 1, 3, 4, 5)]
+    ), exact
+    con = duckdb.connect()
+    con.register(
+        "embeddings",
+        pa.table(
+            {
+                "vec_id": pa.array([i for i, _ in rows], pa.int64()),
+                "embedding": pa.array(
+                    [v for _, v in rows], pa.list_(pa.float32())
+                ),
+            }
+        ),
+    )
+    oracle = sorted(con.sql(entry.Q_ANN_ORACLE).fetchall())
+    assert sorted((q, n, r) for q, r, n, _ in exact) == oracle
+
+    build_lsh_index(emb, "zero_norm_lsh", n_planes=2, dim=4, n_tables=2,
+                    n_buckets=2, path=str(tmp_path / "lsh"))
+    try:
+        kw = dict(k=5, n_planes=2, dim=4, n_tables=2, hamming=1)
+        direct = by_rank(lsh_cosine_topk(emb, emb, **kw))
+        assert any(r[3] is None for r in direct), direct
+        index = query_lsh_index(spark, "zero_norm_lsh", emb, **kw)
+        assert by_rank(index) == direct
+    finally:
+        spark.sql("DROP TABLE IF EXISTS zero_norm_lsh")
 
 
 def test_embedding_near_dup(docs):

@@ -89,8 +89,9 @@ def main() -> None:
         "Both kernel passes (corpus codes, query codes) are CHECKPOINTED "
         "scans here — the numpy bucket math ran once, batch-sized for slim "
         "rows; the remaining plan is a broadcast equi-join on (table, "
-        "bucket), candidate dedup, one compiled 64-term dot per survivor, "
-        "and a per-query top-k window. No python stage re-executes.",
+        "bucket), one compiled 64-term dot per colliding pair, dedup of "
+        "the slim (query, neighbor, cosine) rows, and a per-query top-k "
+        "window. No python stage re-executes.",
         plan_of(lsh),
     ))
 
