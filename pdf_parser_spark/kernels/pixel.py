@@ -10,6 +10,13 @@ Conventions:
   and dilation (max). With a constant-0 border, k iterations of a
   length-L min/max filter equal one pass with window k*(L-1)+1, which we
   exploit for speed.
+
+Run primitives: ``row_runs`` is the one run extractor (row-major
+(rows, starts, ends) of a bool mask); ``long_runs`` gives the runs that a
+1-D ``open_rect_binary`` would paint without painting them;
+``run_links`` pairs overlapping runs of consecutive rows (``ranges``
+expands such index ranges) and ``label_edges`` labels the components of such a run graph. The CCL and
+the page-level table detection (kernels/tables.py) are built from them.
 """
 
 from __future__ import annotations
@@ -185,75 +192,99 @@ def open_rect_binary(img: np.ndarray, kw: int, kh: int, iterations: int = 1) -> 
     return b.astype(np.uint8) * 255
 
 
+def row_runs(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Runs of True along each row of a 2-D bool mask, in row-major order:
+    (rows, starts, ends), ends exclusive. One flatnonzero over the
+    transitions of the mask padded with a False column on each side; every
+    row opens and closes at False, so the flat transitions alternate
+    start, end."""
+    h, w = mask.shape
+    padded = np.zeros((h, w + 2), dtype=bool)
+    padded[:, 1:-1] = mask
+    rows, cols = np.divmod(np.flatnonzero(padded[:, 1:] != padded[:, :-1]), w + 1)
+    assert (rows[0::2] == rows[1::2]).all()
+    return rows[0::2], cols[0::2], cols[1::2]
+
+
+def long_runs(mask: np.ndarray, window: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The row runs that ``open_rect_binary(mask, kw, 1, n)`` paints, for
+    ``window = n*(kw-1)+1``, without painting them (pinned by test_pixel).
+    A 1-D erosion then dilation with a constant-0 border keeps exactly
+    the runs at least ``window`` long. Both passes anchor at window // 2,
+    so an even window moves every kept run one pixel right, and a run
+    touching the right border loses its last pixel."""
+    rows, starts, ends = row_runs(mask)
+    keep = ends - starts >= window
+    rows, starts, ends = rows[keep], starts[keep], ends[keep]
+    if window % 2 == 0:
+        starts = starts + 1
+        ends = np.minimum(ends + 1, mask.shape[1])
+    return rows, starts, ends
+
+
+def ranges(lo: np.ndarray, cnt: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Expand the ranges [lo[k], lo[k] + cnt[k]): for every member, the
+    index k of its range and its value."""
+    owner = np.repeat(np.arange(len(cnt)), cnt)
+    return owner, np.repeat(lo + cnt - np.cumsum(cnt), cnt) + np.arange(len(owner))
+
+
+def run_links(
+    rows: np.ndarray, starts: np.ndarray, ends: np.ndarray, width: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """All pairs (i, j) of runs that are 4-adjacent across rows:
+    rows[j] == rows[i] - 1 and [starts, ends) intersect. Runs must be in
+    row-major order with ends <= width (as ``row_runs`` returns them).
+    The runs of row y-1 overlapping run i form a contiguous range, found
+    with two searchsorted calls on (row, column) keys."""
+    stride = width + 1
+    lo = np.searchsorted(rows * stride + ends, (rows - 1) * stride + starts, side="right")
+    hi = np.searchsorted(rows * stride + starts, (rows - 1) * stride + ends, side="left")
+    return ranges(lo, np.maximum(hi - lo, 0))
+
+
+def label_edges(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Connected components of the graph on nodes 0..n-1 with edges
+    (a[k], b[k]): each node's label is the smallest node of its
+    component. Vectorized hook-and-compress: each round every root hooks
+    under the smallest root it shares an edge with, then pointer jumping
+    flattens the forest; the number of roots falls every round."""
+    lab = np.arange(n)
+    while True:
+        la, lb = lab[a], lab[b]
+        split = la != lb
+        if not split.any():
+            return lab
+        a, b, la, lb = a[split], b[split], la[split], lb[split]
+        np.minimum.at(lab, np.maximum(la, lb), np.minimum(la, lb))
+        while True:
+            up = lab[lab]
+            if np.array_equal(up, lab):
+                break
+            lab = up
+
+
 def connected_components(binary: np.ndarray) -> tuple[np.ndarray, int]:
     """4-connected component labeling of nonzero pixels (our spec's
     replacement for cv2.findContours on white regions, python/app.py:154).
-    Returns (labels int32 array with 0 = background, n_labels).
+    Returns (labels int32 array with 0 = background, n_labels), labels
+    numbered in first-encounter (row-major) order.
 
-    Row-run union-find: vectorized over runs, not pixels — fast enough for
-    ~1e6-pixel pages inside an Arrow batch.
+    Run-based: the runs of ``row_runs`` are the nodes, ``run_links`` the
+    edges, ``label_edges`` the union-find; no per-pixel work but the final
+    paint.
     """
     h, w = binary.shape
-    fg = binary != 0
     labels = np.zeros((h, w), dtype=np.int32)
-
-    # 1) extract ALL runs in one vectorized pass: pad a sentinel column of
-    #    zeros on each side so every run starts and ends within its row
-    padded = np.zeros((h, w + 2), dtype=np.int8)
-    padded[:, 1:-1] = fg
-    d = np.diff(padded, axis=1)
-    ys_s, starts = np.nonzero(d == 1)  # run starts (column index in 0..w-1)
-    ys_e, ends = np.nonzero(d == -1)  # run ends (exclusive)
-    n_runs = len(starts)
-    if n_runs == 0:
+    rows, starts, ends = row_runs(binary != 0)
+    if len(rows) == 0:
         return labels, 0
-    # np.nonzero is row-major, so starts/ends pair up per row in order
-    assert (ys_s == ys_e).all()
-
-    # 2) union-find over run-adjacency edges: run i (row y) touches run j
-    #    (row y-1) iff starts[i] < ends[j] and ends[i] > starts[j].
-    #    Edges found via searchsorted against the previous row's runs.
-    row_first = np.searchsorted(ys_s, np.arange(h + 1))  # run range per row
-    parent = np.arange(n_runs, dtype=np.int64)
-
-    def find(x: int) -> int:
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for y in range(1, h):
-        a0, a1 = row_first[y], row_first[y + 1]  # runs in row y
-        p0, p1 = row_first[y - 1], row_first[y]  # runs in row y-1
-        if a0 == a1 or p0 == p1:
-            continue
-        # for each run i in row y: overlapping prev runs are those with
-        # start < ends[i] and end > starts[i] — a contiguous range because
-        # runs are sorted and disjoint
-        lo = np.searchsorted(ends[p0:p1], starts[a0:a1], side="right")
-        hi = np.searchsorted(starts[p0:p1], ends[a0:a1], side="left")
-        for k in range(a1 - a0):
-            for j in range(lo[k], hi[k]):
-                ra, rb = find(a0 + k), find(p0 + j)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-    # 3) renumber roots 1..n in first-encounter (row-major) order and
-    #    paint all run spans with one vectorized flat assignment
-    roots = np.array([find(i) for i in range(n_runs)], dtype=np.int64)
-    uniq, first_idx = np.unique(roots, return_index=True)
-    order = np.argsort(first_idx)
-    remap = np.empty(len(uniq), dtype=np.int32)
-    remap[order] = np.arange(1, len(uniq) + 1, dtype=np.int32)
-    run_labels = remap[np.searchsorted(uniq, roots)]
-
-    lengths = ends - starts
-    total = int(lengths.sum())
-    span_starts = np.cumsum(lengths) - lengths
-    offsets = np.arange(total) - np.repeat(span_starts, lengths)
-    flat_idx = np.repeat(ys_s * w + starts, lengths) + offsets
-    labels.ravel()[flat_idx] = np.repeat(run_labels, lengths)
+    # a component's label is its smallest run index, i.e. its first run in
+    # row-major order, so ascending roots are first-encounter order
+    roots = label_edges(len(rows), *run_links(rows, starts, ends, w))
+    uniq, run_labels = np.unique(roots, return_inverse=True)
+    run, flat = ranges(rows * w + starts, ends - starts)
+    labels.ravel()[flat] = run_labels[run] + 1
     return labels, len(uniq)
 
 

@@ -13,6 +13,12 @@ from pdf_parser_spark.kernels.glyphs import (
     TEXT_MARGIN_X,
     TEXT_MARGIN_Y,
 )
+from pdf_parser_spark.kernels.pixel import (
+    component_bboxes,
+    connected_components,
+    open_rect_binary,
+    threshold_binary_otsu,
+)
 from pdf_parser_spark.kernels.raster import decode, detect_kind, encode
 from pdf_parser_spark.kernels.tables import (
     detect_table_bboxes,
@@ -164,3 +170,142 @@ def test_synth_tables_match_specs():
         if found >= 3:
             break
     assert found >= 3
+
+
+def _painted_chain_bboxes(gray):
+    """detect_table_bboxes as the painted chain it replaced: Otsu ink,
+    row and column openings, CCL of their union, component boxes, and the
+    horizontal-and-vertical membership check, in label order."""
+    w = gray.shape[1]
+    ink = 255 - threshold_binary_otsu(gray)
+    length = max(2, w // 100)
+    hor = open_rect_binary(ink, length, 1, 3)
+    ver = open_rect_binary(ink, 1, length, 3)
+    labels, n = connected_components(np.maximum(hor, ver))
+    out = []
+    for i, (x, y, bw, bh) in enumerate(component_bboxes(labels, n), start=1):
+        if bw < max(20, w // 10) or bh < 20:
+            continue
+        comp = labels == i
+        if hor[comp].any() and ver[comp].any():
+            out.append((x, y, x + bw, y + bh))
+    return out
+
+
+def _grid(page, xs, ys, t):
+    """Ruled grid with lines ``t`` px thick at columns ``xs``, rows ``ys``."""
+    for x in xs:
+        page[ys[0] : ys[-1] + t, x : x + t] = 0
+    for y in ys:
+        page[y : y + t, xs[0] : xs[-1] + t] = 0
+
+
+def _opened(page, win, axis, at, lo, hi):
+    """Ink whose opening (window ``win``) is [lo, hi) along ``axis`` at
+    row/column ``at``: an even window moves runs one pixel on, so draw
+    them one pixel back."""
+    d = 1 - win % 2
+    if axis == 1:
+        page[at, lo - d : hi - d] = 0
+    else:
+        page[lo - d : hi - d, at] = 0
+
+
+def _detection_pages():
+    rng = np.random.Generator(np.random.PCG64(41))
+    pages = []
+    for w in (650, 750, 850):  # w//100 = 6, 7, 8 -> window 16, 19, 22
+        win = 3 * (w // 100 - 1) + 1
+        # two tables, the top one to the right; lines 1-3 px
+        page = blank_page(420, w)
+        _grid(page, [300, 380, 470], [30, 60, 90], 1)
+        _grid(page, [20, 120, 220, 320], [200, 228, 256, 284], 2)
+        _grid(page, [420, 520], [330, 400], 3)
+        render_line(page, 30, 150, "TABLE 1 follows.")
+        pages.append(page)
+        # a frame on every border; stubs win-1, win, win+1 long off lines
+        page = blank_page(300, w)
+        _grid(page, [0, w // 2, w - 1], [0, 150, 299], 1)
+        for k, n in enumerate((win - 1, win, win + 1)):
+            page[20 + 10 * k, w // 2 + 1 : w // 2 + 1 + n] = 0
+            page[40 + 10 * k, 40 : 40 + n] = 0
+            page[160 + 10 * k, w - 1 - n : w - 1] = 0
+            page[150 - n : 150, 60 + 10 * k] = 0
+            page[200 : 200 + n, 100 + 10 * k] = 0
+        pages.append(page)
+        # segments that touch only diagonally, in both orientations:
+        # alone each fails a test; joined they would pass both
+        page = blank_page(300, w)
+        _opened(page, win, 1, 50, 100, 200)
+        _opened(page, win, 0, 200, 51, 120)
+        _opened(page, win, 1, 250, 300, 400)
+        _opened(page, win, 0, 299, 150, 250)
+        pages.append(page)
+        # side-only contacts, which the even window's shift makes out of
+        # a one-pixel gap: beside a vertical run's first row (from the
+        # left and from the right, under a covering row) and lower down
+        page = blank_page(300, w)
+        for x, lo, hi in ((120, 20, 120), (200, 201, 301)):
+            _opened(page, win, 1, 19, lo, hi)
+            _opened(page, win, 1, 20, lo, hi)
+            _opened(page, win, 0, x, 20, 80)
+        for x, y, lo, hi in ((350, 130, 351, 451), (600, 230, 500, 600)):
+            _opened(page, win, 0, x, y - 30, y + 30)
+            _opened(page, win, 1, y, lo, hi)
+        pages.append(page)
+        # staircases: a horizontal-only and a vertical-only component
+        # large in both axes (every run across them is under win)
+        page = blank_page(400, w)
+        for k in range(45):
+            page[20 + k, 20 + 2 * k : 50 + 2 * k] = 0
+            page[100 + 2 * k : 130 + 2 * k, 300 + k] = 0
+        pages.append(page)
+        # line soup, some at the borders
+        for _ in range(3):
+            page = blank_page(int(rng.integers(120, 360)), w)
+            h = page.shape[0]
+            for _ in range(int(rng.integers(5, 25))):
+                t = int(rng.integers(1, 4))
+                if rng.random() < 0.5:
+                    y, x = int(rng.integers(0, h)), int(rng.integers(-40, w))
+                    page[y : y + t, max(x, 0) : x + int(rng.integers(win - 2, w))] = 0
+                else:
+                    y, x = int(rng.integers(-40, h)), int(rng.integers(0, w))
+                    page[max(y, 0) : y + int(rng.integers(win - 2, h)), x : x + t] = 0
+            pages.append(page)
+    # synth table pages, as the corpus renders them
+    for i in (14, 34, 54):
+        doc = make_pdf_doc(i)
+        pages.extend(decode(doc.blob)[pno - 1] for pno in doc.table_specs)
+    # dense pages: all ink, a 4-px grid, 50% noise, alternating rows
+    h, w = 1000, 800
+    dense = [np.zeros((h, w), np.uint8)]
+    grid = blank_page(h, w)
+    grid[::4] = 0
+    grid[:, ::4] = 0
+    dense.append(grid)
+    dense.append(np.where(rng.random((h, w)) < 0.5, 0, 255).astype(np.uint8))
+    stripes = blank_page(h, w)
+    stripes[::2] = 0
+    dense.append(stripes)
+    pages.extend(dense)
+    # degenerate shapes
+    pages.extend([
+        np.zeros((1, 1), np.uint8), blank_page(1, 1), np.zeros((1, 700), np.uint8),
+        np.zeros((300, 1), np.uint8), blank_page(1, 700),
+    ])
+    return pages
+
+
+def test_detection_matches_painted_chain():
+    """The run-graph detection is bit-identical to the painted chain:
+    both window parities, 1-3 px lines, border lines, runs around the
+    window length, diagonal-only contacts, single-axis components,
+    side-only contacts, tables out of x order, dense and degenerate
+    pages."""
+    n_boxes = 0
+    for k, page in enumerate(_detection_pages()):
+        want = _painted_chain_bboxes(page)
+        assert detect_table_bboxes(page) == want, (k, page.shape)
+        n_boxes += len(want)
+    assert n_boxes >= 20

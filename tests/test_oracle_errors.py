@@ -39,3 +39,74 @@ def test_zero_page_container():
 def test_bad_utf8_html():
     r = extract_document("u", b"<html>\xff\xc3\x28</html>")
     assert r.error is not None and r.error.startswith("bad_encoding")
+
+
+def test_extract_document_never_raises_on_mutated_rasters():
+    """Seeded fuzz: synth raster docs with pages perturbed at the pixel
+    level (thick lines, noise, all-ink and all-paper pages, tiny and
+    narrow pages) and re-encoded, plus container byte flips and
+    truncation. extract_document must return, and every error must be
+    one of the known classes. Pages 2-5 share the first page's 5-page
+    chunk, so the table kernels run on them whenever its TABLE line
+    reads."""
+    import numpy as np
+
+    from pdf_parser_spark.kernels.clauses import VALIDATION_ERROR_PREFIX
+    from pdf_parser_spark.synth import make_pdf_doc
+
+    known = ("too_large", "empty", "bad_container", "parse_error",
+             "bad_encoding", "unknown_kind")
+    rng = np.random.Generator(np.random.PCG64(2024))
+    bases = [raster.decode(make_pdf_doc(i).blob) for i in (14, 34, 54)]
+
+    def page(like):
+        h, w = like.shape
+        kind = int(rng.integers(0, 8))
+        if kind == 0:  # thick lines, some across the whole page
+            p = like.copy()
+            for _ in range(int(rng.integers(1, 12))):
+                t, at = int(rng.integers(1, 9)), int(rng.integers(0, max(h, w)))
+                if rng.random() < 0.5:
+                    p[at : at + t, int(rng.integers(0, w)) :] = 0
+                else:
+                    p[int(rng.integers(0, h)) :, at : at + t] = 0
+            return p
+        if kind == 1:  # noise
+            p = like.copy()
+            p[rng.random(p.shape) < rng.random()] = 0
+            return p
+        if kind == 2:
+            return np.zeros((h, w), np.uint8)
+        if kind == 3:
+            return np.full((h, w), 255, np.uint8)
+        if kind == 4:  # tiny: 1x1, 1xW, Hx1 and a few pixels
+            shape = [(1, 1), (1, w), (h, 1), tuple(rng.integers(1, 6, 2))][int(rng.integers(0, 4))]
+            return rng.integers(0, 256, shape, dtype=np.uint8)
+        if kind == 5:  # narrow (w < 100, so the window is the minimum 4)
+            p = like[:, : int(rng.integers(1, 100))].copy()
+            p[:, int(rng.integers(0, p.shape[1]))] = 0
+            return p
+        if kind == 6:  # random gray levels
+            return rng.integers(0, 256, (int(rng.integers(1, 300)), int(rng.integers(1, 300))), dtype=np.uint8)
+        p = like.copy()  # a grid of lines
+        p[:: int(rng.integers(2, 40))] = 0
+        p[:, :: int(rng.integers(2, 40))] = 0
+        return p
+
+    n_table_runs = n_container = 0
+    for k in range(80):
+        pages = list(bases[k % len(bases)])
+        pages = pages[:1] + [page(pages[-1]) for _ in range(int(rng.integers(1, 4)))]
+        blob = raster.encode(pages)
+        if k % 4 == 3:  # container damage
+            b = bytearray(blob)
+            for pos in rng.integers(0, len(b), int(rng.integers(1, 6))):
+                b[pos] ^= int(rng.integers(1, 256))
+            blob = bytes(b[: int(rng.integers(0, len(b) + 1))] if rng.random() < 0.5 else b)
+            n_container += 1
+        r = extract_document(f"u{k}", blob)
+        assert r.error is None or r.error.split(":", 1)[0] in known or r.error.startswith(
+            VALIDATION_ERROR_PREFIX
+        ), (k, r.error)
+        n_table_runs += len(r.table_pages or [])
+    assert n_container == 20 and n_table_runs >= 60

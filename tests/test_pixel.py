@@ -124,3 +124,67 @@ def test_open_rect_binary_equals_erode_then_dilate():
         ref = dilate_rect(erode_rect(img, kw, kh, it), kw, kh, it)
         got = open_rect_binary(img, kw, kh, it)
         assert np.array_equal(got, ref), (h, w, kw, kh, it)
+
+    # a 1-D opening paints exactly the long runs of the run extractor
+    # (moved one pixel for an even window), along rows and along columns
+    from pdf_parser_spark.kernels.pixel import long_runs
+
+    def paint(shape, runs):
+        out = np.zeros(shape, dtype=bool)
+        for r, s, e in zip(*runs):
+            assert 0 <= s < e <= shape[1]
+            out[r, s:e] = True
+        return out
+
+    for k in range(2, 10):
+        for it in (1, 2, 3):
+            win = it * (k - 1) + 1
+            # dense ink makes runs of every length up to the full row
+            img = (rng.random((31, 47)) < 0.9).astype(np.uint8) * 255
+            img[3] = 255  # full rows and columns touch both borders
+            img[:, 5] = 255
+            img[7, :win] = 255  # exactly win long at the left border ...
+            img[7, win] = 0
+            img[9, -win:] = 255  # ... at the right border ...
+            img[9, -win - 1] = 0
+            img[11, 10 : 10 + win - 1] = 255  # ... and one short, inside
+            img[11, [9, 9 + win]] = 0
+            ink = img != 0
+            for mask, ref in (
+                (ink, open_rect_binary(img, k, 1, it)),
+                (ink.T, open_rect_binary(img, 1, k, it).T),
+            ):
+                got = paint(mask.shape, long_runs(mask, win))
+                assert np.array_equal(got, ref != 0), (k, it)
+
+
+def test_connected_components_matches_flood_fill():
+    """The run-graph CCL against a per-pixel breadth-first flood fill,
+    labels numbered in first-encounter row-major order."""
+    from collections import deque
+
+    def flood(mask):
+        h, w = mask.shape
+        labels = np.zeros((h, w), dtype=np.int32)
+        n = 0
+        for y0, x0 in zip(*np.nonzero(mask)):
+            if labels[y0, x0]:
+                continue
+            n += 1
+            labels[y0, x0] = n
+            todo = deque([(y0, x0)])
+            while todo:
+                y, x = todo.popleft()
+                for yy, xx in ((y - 1, x), (y + 1, x), (y, x - 1), (y, x + 1)):
+                    if 0 <= yy < h and 0 <= xx < w and mask[yy, xx] and not labels[yy, xx]:
+                        labels[yy, xx] = n
+                        todo.append((yy, xx))
+        return labels, n
+
+    rng = np.random.Generator(np.random.PCG64(23))
+    for h, w, p in [(1, 1, 1.0), (1, 40, 0.6), (40, 1, 0.6), (30, 30, 0.55),
+                    (25, 60, 0.45), (60, 25, 0.7), (40, 40, 0.9)]:
+        mask = rng.random((h, w)) < p
+        labels, n = connected_components(mask.astype(np.uint8))
+        ref, n_ref = flood(mask)
+        assert n == n_ref and np.array_equal(labels, ref), (h, w, p)
