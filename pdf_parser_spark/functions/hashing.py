@@ -38,8 +38,3 @@ def hash64_multi(cols: list[Column], fn: str = "xx", sep: str = ":") -> Column:
         return hash64(F.concat_ws(sep, *cols), fn)
     raise ValueError(f"hash_fn must be one of {HASH_FNS}, got {fn!r}")
 
-
-def duck_hash64(expr: str) -> str:
-    """The DuckDB SQL twin of ``hash64(col, fn='md5')`` for oracle
-    strings: pass a SQL expression, get the 60-bit int expression."""
-    return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"

@@ -7,16 +7,21 @@ Conventions:
 - grayscale uint8, 0 = ink/black, 255 = paper/white (input pages);
 - "binary" images are uint8 with values in {0, 255};
 - morphology border handling: out-of-bounds = 0 for both erosion (min)
-  and dilation (max). With a constant-0 border, k iterations of a
-  length-L min/max filter equal one pass with window k*(L-1)+1, which we
-  exploit for speed.
+  and dilation (max), anchor window // 2 as in cv2. With a constant-0
+  border, k iterations of a length-L min/max filter equal one pass with
+  window k*(L-1)+1, which we exploit for speed.
+
+One morphology per mask kind: ``erode_rect``/``dilate_rect`` take the
+min/max of any uint8 image over shifted views (small windows only), and
+``open_rect_binary``, the 1-D opening of a binary image, paints its long
+ink runs.
 
 Run primitives: ``row_runs`` is the one run extractor (row-major
 (rows, starts, ends) of a bool mask); ``long_runs`` gives the runs that a
-1-D ``open_rect_binary`` would paint without painting them;
-``run_links`` pairs overlapping runs of consecutive rows (``ranges``
-expands such index ranges) and ``label_edges`` labels the components of such a run graph. The CCL and
-the page-level table detection (kernels/tables.py) are built from them.
+1-D opening keeps; ``run_links`` pairs overlapping runs of consecutive
+rows (``ranges`` expands such index ranges) and ``label_edges`` labels the
+components of such a run graph. The CCL, the line masks and the
+page-level table detection (kernels/tables.py) are built from them.
 """
 
 from __future__ import annotations
@@ -48,148 +53,55 @@ def threshold_binary_otsu(img: np.ndarray) -> np.ndarray:
     return np.where(img > t, np.uint8(255), np.uint8(0))
 
 
-def _vanherk(ap: np.ndarray, window: int, op, identity: int, axis: int = 1) -> np.ndarray:
-    """van Herk/Gil-Werman running min/max over axis=1 of the padded
-    array: block prefix + suffix scans, then one elementwise combine —
-    3 passes total, O(1) memory reads per pixel regardless of window.
-    (A sliding_window_view + reduce formulation reads every pixel
-    ``window`` times; at 1 MB pages x 32 parallel Python workers that
-    saturates DRAM bandwidth and *inverts* core scaling — measured
-    local[32] slower than local[8] before this.)
-
-    Axis-native (no transposes): blocks are formed by reshaping the
-    filtered axis itself, so every accumulate pass streams row-contiguous
-    memory. Returns op over [j, j+window-1] for j in 0..m-window."""
-    if axis == 1:
-        h, m = ap.shape
-        nb = -(-m // window)
-        padded = np.full((h, nb * window), identity, dtype=ap.dtype)
-        padded[:, :m] = ap
-        blocks = padded.reshape(h, nb, window)
-        pref = op.accumulate(blocks, axis=2).reshape(h, nb * window)
-        suff = op.accumulate(blocks[:, :, ::-1], axis=2)[:, :, ::-1].reshape(
-            h, nb * window
-        )
-        return op(suff[:, : m - window + 1], pref[:, window - 1 : m])
-    m, w_cols = ap.shape
-    nb = -(-m // window)
-    padded = np.full((nb * window, w_cols), identity, dtype=ap.dtype)
-    padded[:m, :] = ap
-    blocks = padded.reshape(nb, window, w_cols)
-    pref = op.accumulate(blocks, axis=1).reshape(nb * window, w_cols)
-    suff = op.accumulate(blocks[:, ::-1, :], axis=1)[:, ::-1, :].reshape(
-        nb * window, w_cols
-    )
-    return op(suff[: m - window + 1, :], pref[window - 1 : m, :])
-
-
-def _sliding_1d(
-    a: np.ndarray, window: int, axis: int, op, identity: int
-) -> np.ndarray:
-    """Sliding-window min/max along ``axis`` with constant-0 padding and
-    cv2-style anchor (window // 2)."""
+def _sliding_1d(a: np.ndarray, window: int, axis: int, op) -> np.ndarray:
+    """``op`` (np.minimum or np.maximum) over the ``window`` pixels at each
+    position along ``axis``: constant-0 border, cv2 anchor window // 2,
+    one in-place pass per shifted view of the padded array."""
     if window <= 1:
         return a
-    pad_before = window // 2
-    pad_after = window - 1 - pad_before
+    n = a.shape[axis]
     pads = [(0, 0), (0, 0)]
-    pads[axis] = (pad_before, pad_after)
-    ap = np.pad(a, pads, mode="constant", constant_values=0)
-    return _vanherk(ap, window, op, identity, axis)
-
-
-def _sliding_min_1d(a: np.ndarray, window: int, axis: int) -> np.ndarray:
-    return _sliding_1d(a, window, axis, np.minimum, 255)
-
-
-def _sliding_max_1d(a: np.ndarray, window: int, axis: int) -> np.ndarray:
-    return _sliding_1d(a, window, axis, np.maximum, 0)
+    pads[axis] = (window // 2, (window - 1) // 2)
+    ap = np.pad(a, pads).swapaxes(0, axis)
+    out = op(ap[:n], ap[1 : n + 1])
+    for k in range(2, window):
+        op(out, ap[k : k + n], out=out)
+    return out.swapaxes(0, axis)
 
 
 def erode_rect(img: np.ndarray, kw: int, kh: int, iterations: int = 1) -> np.ndarray:
     """Erosion (min filter) with a kw x kh rectangular kernel, ``iterations``
     times. Equivalent single-pass window: n*(k-1)+1 per axis (valid because
-    the constant-0 border is the global minimum)."""
-    ww = iterations * (kw - 1) + 1
-    wh = iterations * (kh - 1) + 1
-    out = _sliding_min_1d(img, ww, axis=1) if ww > 1 else img
-    if wh > 1:
-        out = _sliding_min_1d(out, wh, axis=0)
-    return out
+    the constant-0 border is the global minimum). Each pixel is read
+    ``window`` times per axis; the only production window is 3 (the grid
+    pass's 2x2 x2 erosion), where that costs less than running-min scans,
+    and the long opening windows go through ``open_rect_binary``."""
+    out = _sliding_1d(img, iterations * (kw - 1) + 1, 1, np.minimum)
+    return _sliding_1d(out, iterations * (kh - 1) + 1, 0, np.minimum)
 
 
 def dilate_rect(img: np.ndarray, kw: int, kh: int, iterations: int = 1) -> np.ndarray:
-    ww = iterations * (kw - 1) + 1
-    wh = iterations * (kh - 1) + 1
-    out = _sliding_max_1d(img, ww, axis=1) if ww > 1 else img
-    if wh > 1:
-        out = _sliding_max_1d(out, wh, axis=0)
-    return out
-
-
-def _sliding_bool(bp: np.ndarray, window: int, axis: int, op, identity: bool, pad_value: bool) -> np.ndarray:
-    """Sliding bool AND/OR via van Herk scans, ALLOCATION-LEAN: the
-    border pad and the block pad share one buffer, both scans accumulate
-    in place (the suffix on a contiguous reversed copy), and only the
-    combined output is a fresh array. The original formulation's six
-    full-frame array writes per pass made the kernel memory-bandwidth
-    bound at high core counts (this is the hottest per-page loop)."""
-    if window <= 1:
-        return bp
-    pad_before = window // 2
-    if axis == 1:
-        h, m = bp.shape
-        mp = m + window - 1
-        nb = -(-mp // window)
-        buf = np.empty((h, nb * window), dtype=bool)
-        buf[:, :pad_before] = pad_value
-        buf[:, pad_before : pad_before + m] = bp
-        buf[:, pad_before + m : mp] = pad_value  # border pad (after)
-        buf[:, mp:] = identity                   # block padding
-        blocks = buf.reshape(h, nb, window)
-        rev = np.ascontiguousarray(blocks[:, :, ::-1])
-        op.accumulate(blocks, axis=2, out=blocks)  # prefix, in place
-        op.accumulate(rev, axis=2, out=rev)        # suffix, in place
-        suff = rev[:, :, ::-1].reshape(h, nb * window)
-        return op(suff[:, : mp - window + 1], buf[:, window - 1 : mp])
-    m, w_cols = bp.shape
-    mp = m + window - 1
-    nb = -(-mp // window)
-    buf = np.empty((nb * window, w_cols), dtype=bool)
-    buf[:pad_before] = pad_value
-    buf[pad_before : pad_before + m] = bp
-    buf[pad_before + m : mp] = pad_value
-    buf[mp:] = identity
-    blocks = buf.reshape(nb, window, w_cols)
-    rev = np.ascontiguousarray(blocks[:, ::-1, :])
-    op.accumulate(blocks, axis=1, out=blocks)
-    op.accumulate(rev, axis=1, out=rev)
-    suff = rev[:, ::-1, :].reshape(nb * window, w_cols)
-    return op(suff[: mp - window + 1], buf[window - 1 : mp])
+    """Dilation (max filter), the twin of ``erode_rect``."""
+    out = _sliding_1d(img, iterations * (kw - 1) + 1, 1, np.maximum)
+    return _sliding_1d(out, iterations * (kh - 1) + 1, 0, np.maximum)
 
 
 def open_rect_binary(img: np.ndarray, kw: int, kh: int, iterations: int = 1) -> np.ndarray:
-    """Morphological opening (erode x n then dilate x n) for BINARY
-    {0,255} images: identical output to
-    ``dilate_rect(erode_rect(img, kw, kh, n), kw, kh, n)`` (pinned by
-    test_pixel), but the whole chain runs in the bool domain — one
-    uint8->bool conversion, logical accumulates throughout, one
-    conversion back. This is the ruling-line-mask hot path (erode x3 /
-    dilate x3 per axis per page, python/app.py:119-137)."""
-    ww = iterations * (kw - 1) + 1
-    wh = iterations * (kh - 1) + 1
-    b = img != 0
-    # erosion: constant-0 border (False), min == AND
-    if ww > 1:
-        b = _sliding_bool(b, ww, 1, np.logical_and, True, False)
-    if wh > 1:
-        b = _sliding_bool(b, wh, 0, np.logical_and, True, False)
-    # dilation: constant-0 border, max == OR
-    if ww > 1:
-        b = _sliding_bool(b, ww, 1, np.logical_or, False, False)
-    if wh > 1:
-        b = _sliding_bool(b, wh, 0, np.logical_or, False, False)
-    return b.astype(np.uint8) * 255
+    """Morphological opening (erode x n then dilate x n) of a BINARY
+    {0,255} image with a 1-D kernel (kw == 1 or kh == 1): the ruling-line
+    masks, erode x3 / dilate x3 per axis (python/app.py:119-137). Paints
+    the ``long_runs`` of the ink, which is what
+    ``dilate_rect(erode_rect(img, kw, kh, n), kw, kh, n)`` keeps (pinned
+    by test_pixel); a column kernel is the row kernel of the transpose."""
+    if kw > 1 and kh > 1:
+        raise ValueError(f"open_rect_binary needs a 1-D kernel, got {kw}x{kh}")
+    if kh > 1:
+        return open_rect_binary(img.T, kh, kw, iterations).T
+    w = img.shape[1]
+    rows, starts, ends = long_runs(img != 0, iterations * (kw - 1) + 1)
+    out = np.zeros(img.shape, dtype=np.uint8)
+    out.ravel()[ranges(rows * w + starts, ends - starts)[1]] = 255
+    return out
 
 
 def row_runs(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -207,8 +119,9 @@ def row_runs(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
 
 def long_runs(mask: np.ndarray, window: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """The row runs that ``open_rect_binary(mask, kw, 1, n)`` paints, for
-    ``window = n*(kw-1)+1``, without painting them (pinned by test_pixel).
+    """The row runs that a 1-D opening of ``mask`` keeps, for
+    ``window = n*(kw-1)+1`` (pinned against the uint8 erode -> dilate
+    chain by test_pixel).
     A 1-D erosion then dilation with a constant-0 border keeps exactly
     the runs at least ``window`` long. Both passes anchor at window // 2,
     so an even window moves every kept run one pixel right, and a run

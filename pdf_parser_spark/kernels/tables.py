@@ -17,12 +17,14 @@ kernels. Reference quirks preserved deliberately (SURVEY.md §7.4.3):
 - empty first-pass OCR retries with the offset-scanning pass
   (python/app.py:190-191, F2).
 
-Two passes with different masks. Page-level detection
-(``detect_table_bboxes``) never paints a frame: the ruling lines are the
-long ink runs of the page, joined as a run graph. The grid pass on the
-crop (``get_tables_data``) paints the opened line masks, because it needs
-the cell interiors as pixels; its Otsu threshold and window come from the
-crop, so the page's runs cannot stand in for it.
+Both passes find the ruling lines as long ink runs (``pixel.long_runs``),
+the runs a 1-D opening keeps. Page-level detection
+(``detect_table_bboxes``) never paints a frame: it joins the page's runs
+as a run graph. The grid pass on the crop (``get_tables_data``) paints
+the crop's runs as the line masks (``open_rect_binary``), because it
+needs the cell interiors as pixels for the erode, Otsu, CCL and OCR that
+follow; its Otsu threshold and window come from the crop, so the page's
+runs cannot stand in for it.
 """
 
 from __future__ import annotations
@@ -56,9 +58,9 @@ def _line_masks(gray: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     binary = threshold_binary_otsu(gray)
     ink = 255 - binary
     length = max(2, gray.shape[1] // 100)
-    # open_rect_binary == dilate_rect(erode_rect(...)) for binary input
-    # (pinned by test_pixel), one bool-domain chain instead of four
-    # uint8 passes
+    # open_rect_binary paints the ink runs at least 3*(length-1)+1 long,
+    # which is what dilate_rect(erode_rect(...)) keeps of binary input
+    # (pinned by test_glyphs_tables against the uint8 chain)
     hor = open_rect_binary(ink, length, 1, 3)
     ver = open_rect_binary(ink, 1, length, 3)
     return hor, ver

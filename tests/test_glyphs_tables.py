@@ -16,11 +16,13 @@ from pdf_parser_spark.kernels.glyphs import (
 from pdf_parser_spark.kernels.pixel import (
     component_bboxes,
     connected_components,
-    open_rect_binary,
+    dilate_rect,
+    erode_rect,
     threshold_binary_otsu,
 )
 from pdf_parser_spark.kernels.raster import decode, detect_kind, encode
 from pdf_parser_spark.kernels.tables import (
+    _line_masks,
     detect_table_bboxes,
     extract_table,
     get_tables_data,
@@ -172,15 +174,22 @@ def test_synth_tables_match_specs():
     assert found >= 3
 
 
+def _uint8_line_masks(gray):
+    """The ruling-line masks as the reference computes them: Otsu ink,
+    then erode x3 / dilate x3 per axis with the uint8 min/max filters."""
+    ink = 255 - threshold_binary_otsu(gray)
+    length = max(2, gray.shape[1] // 100)
+    hor = dilate_rect(erode_rect(ink, length, 1, 3), length, 1, 3)
+    ver = dilate_rect(erode_rect(ink, 1, length, 3), 1, length, 3)
+    return hor, ver
+
+
 def _painted_chain_bboxes(gray):
     """detect_table_bboxes as the painted chain it replaced: Otsu ink,
     row and column openings, CCL of their union, component boxes, and the
     horizontal-and-vertical membership check, in label order."""
     w = gray.shape[1]
-    ink = 255 - threshold_binary_otsu(gray)
-    length = max(2, w // 100)
-    hor = open_rect_binary(ink, length, 1, 3)
-    ver = open_rect_binary(ink, 1, length, 3)
+    hor, ver = _uint8_line_masks(gray)
     labels, n = connected_components(np.maximum(hor, ver))
     out = []
     for i, (x, y, bw, bh) in enumerate(component_bboxes(labels, n), start=1):
@@ -309,3 +318,21 @@ def test_detection_matches_painted_chain():
         assert detect_table_bboxes(page) == want, (k, page.shape)
         n_boxes += len(want)
     assert n_boxes >= 20
+
+
+def test_line_masks_match_uint8_chain():
+    """The grid pass's painted long runs equal the uint8 erode -> dilate
+    chain on the synth table crops and on the dense 1000x800 pages."""
+    crops = []
+    for i in (14, 34, 54):
+        doc = make_pdf_doc(i)
+        for pno in doc.table_specs:
+            page = decode(doc.blob)[pno - 1]
+            for left, top, right, bottom in detect_table_bboxes(page):
+                crops.append(page[max(0, top - 10) : bottom + 10, max(0, left - 10) : right + 10])
+    dense = [p for p in _detection_pages() if p.shape == (1000, 800)]
+    assert len(crops) >= 3 and len(dense) == 4
+    for k, gray in enumerate(crops + dense):
+        hor, ver = _line_masks(gray)
+        want_hor, want_ver = _uint8_line_masks(gray)
+        assert np.array_equal(hor, want_hor) and np.array_equal(ver, want_ver), (k, gray.shape)

@@ -110,3 +110,64 @@ def test_extract_document_never_raises_on_mutated_rasters():
         ), (k, r.error)
         n_table_runs += len(r.table_pages or [])
     assert n_container == 20 and n_table_runs >= 60
+
+
+def test_extract_document_never_raises_on_mutated_html():
+    """Seeded fuzz over synth html bytes: byte flips, truncation, invalid
+    UTF-8 and NUL bytes, unbalanced tags and deeply nested tags.
+    extract_document must return, every blob that reaches the html path
+    stays there, and every error is an html-path class."""
+    import numpy as np
+
+    from pdf_parser_spark.synth import make_html_doc
+
+    known = ("too_large", "empty", "bad_encoding", "parse_error")
+    rng = np.random.Generator(np.random.PCG64(2025))
+    bases = [make_html_doc(i).html for i in range(0, 40, 3)]
+    bad_bytes = [b"\xff", b"\xc3\x28", b"\x80", b"\xed\xa0\x80", b"\xf4\x90\x80\x80",
+                 b"\xe2\x82", b"\x00", b"\x00" * 7]
+    tags = [b"<div>", b"</div>", b"<p>", b"</p>", b"<a href='x'>", b"</a>",
+            b"<script>", b"</script>", b"<style>", b"<title>", b"</title>",
+            b"<nav>", b"</footer>", b"<!--", b"-->", b"<![CDATA[", b"<", b">",
+            b"&#x110000;", b"&#0;", b"&bogus", b"<p class='a", b"</>", b"<?xml"]
+
+    def mutate(blob, kind):
+        b = bytearray(blob)
+        if kind == 0:  # byte flips, the leading "<" kept
+            for pos in rng.integers(1, len(b), int(rng.integers(1, 40))):
+                b[pos] ^= int(rng.integers(1, 256))
+        elif kind == 1:  # truncation, down to nothing
+            del b[int(rng.integers(0, len(b) + 1)) :]
+        elif kind == 2:  # invalid UTF-8 and NUL bytes
+            for _ in range(int(rng.integers(1, 6))):
+                pos = int(rng.integers(1, len(b) + 1))
+                b[pos:pos] = bad_bytes[int(rng.integers(0, len(bad_bytes)))]
+        elif kind == 3:  # unbalanced tags: spliced in and cut out
+            for _ in range(int(rng.integers(1, 30))):
+                pos = int(rng.integers(1, len(b) + 1))
+                b[pos:pos] = tags[int(rng.integers(0, len(tags)))]
+            for _ in range(int(rng.integers(0, 10))):
+                lo = int(rng.integers(1, len(b)))
+                del b[lo : lo + int(rng.integers(1, 20))]
+        else:  # deeply nested, unclosed, closed or over-closed
+            tag = [b"div", b"a", b"p", b"b", b"nav", b"li"][int(rng.integers(0, 6))]
+            depth = int(rng.integers(1, 20000))
+            closes = depth * int(rng.integers(0, 3))
+            b = bytearray(b"<html><body>" + b"<%s>" % tag * depth
+                          + b"deep text here " * 8 + b"</%s>" % tag * closes)
+        return bytes(b)
+
+    counts = {}
+    for k in range(240):
+        blob = bases[k % len(bases)]
+        # one mutation, or flips, bad bytes and tags together, then a cut
+        for kind in [k % 5] if k % 6 else [0, 2, 3, 1]:
+            blob = mutate(blob, kind)
+        r = extract_document(f"h{k}", blob)
+        cls = None if r.error is None else r.error.split(":", 1)[0]
+        assert cls is None or cls in known, (k, r.error)
+        assert r.kind == "html" or cls in ("too_large", "empty"), (k, r.kind, r.error)
+        counts[cls] = counts.get(cls, 0) + 1
+    big = b"<p>" + b"x" * MAX_DOC_BYTES
+    assert extract_document("big", big).error == "too_large"
+    assert counts.get(None, 0) >= 100 and counts.get("bad_encoding", 0) >= 20, counts

@@ -101,34 +101,33 @@ def test_connected_components_diagonal_not_connected():
 
 
 def test_open_rect_binary_equals_erode_then_dilate():
-    """The bool-domain opening must be byte-identical to the uint8
-    erode->dilate chain on binary images (it replaced that chain in the
-    ruling-line hot path)."""
-    import numpy as np
+    """The 1-D opening is byte-identical to the uint8 erode->dilate chain
+    on binary images, along rows and along columns, for both window
+    parities; a 2-D kernel is refused."""
+    import pytest
 
-    from pdf_parser_spark.kernels.pixel import (
-        dilate_rect,
-        erode_rect,
-        open_rect_binary,
-    )
+    from pdf_parser_spark.kernels.pixel import long_runs, open_rect_binary
 
     rng = np.random.Generator(np.random.PCG64(17))
     for h, w, kw, kh, it in [
-        (60, 80, 8, 1, 3),
+        (60, 80, 8, 1, 3),  # window 22
         (60, 80, 1, 8, 3),
-        (37, 53, 5, 5, 2),
-        (10, 10, 2, 2, 1),
-        (5, 200, 41, 1, 3),
+        (37, 53, 5, 1, 2),  # window 9
+        (37, 53, 1, 5, 2),
+        (10, 10, 2, 1, 1),  # window 2
+        (10, 10, 1, 2, 1),
+        (5, 200, 41, 1, 3),  # window 121
+        (200, 5, 1, 41, 3),
     ]:
         img = (rng.integers(0, 2, (h, w), dtype=np.uint8)) * 255
         ref = dilate_rect(erode_rect(img, kw, kh, it), kw, kh, it)
         got = open_rect_binary(img, kw, kh, it)
         assert np.array_equal(got, ref), (h, w, kw, kh, it)
+    with pytest.raises(ValueError):
+        open_rect_binary(img, 2, 2, 1)
 
-    # a 1-D opening paints exactly the long runs of the run extractor
+    # a 1-D opening keeps exactly the long runs of the run extractor
     # (moved one pixel for an even window), along rows and along columns
-    from pdf_parser_spark.kernels.pixel import long_runs
-
     def paint(shape, runs):
         out = np.zeros(shape, dtype=bool)
         for r, s, e in zip(*runs):
@@ -151,11 +150,36 @@ def test_open_rect_binary_equals_erode_then_dilate():
             img[11, [9, 9 + win]] = 0
             ink = img != 0
             for mask, ref in (
-                (ink, open_rect_binary(img, k, 1, it)),
-                (ink.T, open_rect_binary(img, 1, k, it).T),
+                (ink, dilate_rect(erode_rect(img, k, 1, it), k, 1, it)),
+                (ink.T, dilate_rect(erode_rect(img, 1, k, it), 1, k, it).T),
             ):
                 got = paint(mask.shape, long_runs(mask, win))
                 assert np.array_equal(got, ref != 0), (k, it)
+
+
+def test_erode_dilate_equal_sliding_window_formula():
+    """erode_rect/dilate_rect against the textbook formula: the min/max
+    over a ``sliding_window_view`` of the image padded with 0, anchored
+    at window // 2 (the even windows pin the anchor), along each axis,
+    for 3-level and random images and windows longer than the axis."""
+    from numpy.lib.stride_tricks import sliding_window_view
+
+    def ref(img, window, axis, reduce):
+        pads = [(0, 0), (0, 0)]
+        pads[axis] = (window // 2, window - 1 - window // 2)
+        view = sliding_window_view(np.pad(img, pads), window, axis=axis)
+        return reduce(view, axis=-1)
+
+    rng = np.random.Generator(np.random.PCG64(29))
+    levels = np.array([0, 128, 255], dtype=np.uint8)
+    for h, w in [(1, 1), (1, 13), (13, 1), (6, 4), (17, 23), (40, 9)]:
+        for img in (rng.choice(levels, (h, w)), rng.integers(0, 256, (h, w), dtype=np.uint8)):
+            for window in range(1, 10):
+                for axis, (kw, kh) in ((1, (window, 1)), (0, (1, window))):
+                    got = erode_rect(img, kw, kh)
+                    assert np.array_equal(got, ref(img, window, axis, np.min)), (h, w, window, axis)
+                    got = dilate_rect(img, kw, kh)
+                    assert np.array_equal(got, ref(img, window, axis, np.max)), (h, w, window, axis)
 
 
 def test_connected_components_matches_flood_fill():
