@@ -501,8 +501,8 @@ def q_ann_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not spark.catalog.tableExists(table):
         # EXTERNAL table under /tmp: the session warehouse lives in the
         # caller's CWD, which the driver's harness may not let us write.
-        # Deliberately NOT scratch-registered: the catalog entry keeps
-        # pointing here for the session's lifetime (the bench corpus
+        # Deliberately NOT deleted after the query: the catalog entry
+        # keeps pointing here for the session's lifetime (the bench corpus
         # under /tmp is the same persistence precedent); the next build
         # rmtree-overwrites it.
         idx_dir = os.path.join(tempfile.gettempdir(), f"pps_ann_idx_{tag}")
@@ -2543,32 +2543,33 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("url"),
         F.sha2(F.col("text"), 256).alias("doc_sha"),
     )
-    root = tempfile.mkdtemp(prefix="pps_streamdd_")
-    from pdf_parser_spark.functions.dedup import _register_scratch
-
-    _register_scratch(root)  # tiny, but don't leak per invocation
-    in_dir, ckpt = f"{root}/in", f"{root}/ckpt"
-    base.union(dup).coalesce(1).write.mode("overwrite").parquet(in_dir)
-    src = spark.readStream.schema("url string, doc_sha string").parquet(
-        in_dir
-    )
     name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
     # scope the state shuffle to 4 partitions for the 80-row feed (the
     # partition count is baked into the fresh checkpoint per run)
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, "4")
+    # the memory sink holds the result on the driver, so the feed and
+    # the checkpoint are deleted as soon as the stream has drained
     try:
-        q = (
-            stream_dedup(src)
-            .writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with tempfile.TemporaryDirectory(
+            prefix="pps_streamdd_", ignore_cleanup_errors=True
+        ) as root:
+            in_dir = f"{root}/in"
+            base.union(dup).coalesce(1).write.parquet(in_dir)
+            src = spark.readStream.schema(
+                "url string, doc_sha string"
+            ).parquet(in_dir)
+            q = (
+                stream_dedup(src)
+                .writeStream.format("memory")
+                .queryName(name)
+                .option("checkpointLocation", f"{root}/ckpt")
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
         spark.conf.set(key, old)
     return spark.table(name).select("doc_sha", "url", "dup_index")

@@ -8,17 +8,13 @@ Measures, in one process:
    is the regime the repo's own measurement notes mandate. The JSON
    carries median AND [min, max] spread per query so a future delta
    can be judged against the observed band, not a single draw.
-2. end-to-end extraction throughput (docs/sec) at BOTH core levels
-   (median-of-3 each) — the BASELINE.md target metric.
-3. a local[32] single-pass smoke total over all queries (checks the
-   wide-session path still runs; throughput-indicative only).
+2. bare extraction-stage throughput (docs/sec, median-of-3) in the
+   same session.
 
     python bench.py
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_BENCH_DOCS (default 2000),
 SPARK_GRAFT_BENCH_MEASURE_CORES (default 8),
-SPARK_GRAFT_BENCH_SMOKE_CORES (default $SPARK_GRAFT_CPUS or 32; "0"
-skips the smoke pass), SPARK_GRAFT_BENCH_SKIP_EXTRACTION=1 to run
-queries only.
+SPARK_GRAFT_BENCH_SKIP_EXTRACTION=1 to run queries only.
 
 Headline ``value`` = sum of local[8] per-query medians + the local[8]
 extraction median wall. (Rounds 1-3 reported a local[32]-derived
@@ -48,7 +44,6 @@ def bench_queries(
     ``repeat_cap_sec`` are not repeated (their signal already dwarfs
     the noise; median == the single sample)."""
     import __spark_entry__ as entrymod
-    from pdf_parser_spark.functions.dedup import cleanup_embedding_scratch
 
     out: dict[str, dict] = {}
     for name, fn in entrymod.queries().items():
@@ -60,28 +55,11 @@ def bench_queries(
             times.append(dt)
             if dt > repeat_cap_sec:
                 break
-        # each embedding_near_dup repeat materialized a scratch table;
-        # the result is consumed (count above), so drop them now
-        cleanup_embedding_scratch()
         out[name] = {
             "median": _median(times),
             "spread": [round(min(times), 3), round(max(times), 3)],
             "runs": [round(t, 3) for t in times],
         }
-    return out
-
-
-def smoke_queries(spark, sf_dir: str) -> dict[str, float]:
-    """Single pass per query — wide-session smoke, not a measurement."""
-    import __spark_entry__ as entrymod
-    from pdf_parser_spark.functions.dedup import cleanup_embedding_scratch
-
-    out: dict[str, float] = {}
-    for name, fn in entrymod.queries().items():
-        t0 = time.time()
-        fn(spark, sf_dir).count()
-        out[name] = round(time.time() - t0, 3)
-    cleanup_embedding_scratch()
     return out
 
 
@@ -118,7 +96,7 @@ def bench_extraction(spark, n_docs: int) -> dict:
 
 def _session(cores: int):
     """Fresh session pinned to ``cores`` (bypasses the SPARK_GRAFT_CPUS
-    env override inside get_spark so the two bench levels stay fixed)."""
+    env override inside get_spark so the measured level stays fixed)."""
     from pdf_parser_spark.session import get_spark
 
     os.environ["SPARK_GRAFT_CPUS"] = str(cores)
@@ -131,12 +109,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
     measure_cores = int(os.environ.get("SPARK_GRAFT_BENCH_MEASURE_CORES", "8"))
-    smoke_cores = int(
-        os.environ.get(
-            "SPARK_GRAFT_BENCH_SMOKE_CORES",
-            os.environ.get("SPARK_GRAFT_CPUS", "32"),
-        )
-    )
     skip_extraction = (
         os.environ.get("SPARK_GRAFT_BENCH_SKIP_EXTRACTION") == "1"
     )
@@ -154,24 +126,10 @@ def main() -> None:
         sum(queries.values()) + float(extraction.get("wall_sec", 0.0)), 3
     )
 
-    # --- smoke level (single pass, local[32]) ---
-    smoke: dict = {}
-    if smoke_cores and smoke_cores != measure_cores:
-        spark = _session(smoke_cores)
-        sq = smoke_queries(spark, sf_dir)
-        sx = {} if skip_extraction else bench_extraction(spark, n_docs)
-        spark.stop()
-        smoke = {
-            "cores": smoke_cores,
-            "total": round(sum(sq.values()) + float(sx.get("wall_sec", 0.0)), 3),
-            "queries": sq,
-            "extraction": sx,
-        }
-
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
-    # Full detail (per-run samples, spread bands, the local[32] smoke
-    # pass) goes to BENCH/last_draw.json; stdout carries ONE compact
+    # Full detail (per-run samples, spread bands) goes to
+    # BENCH/last_draw.json; stdout carries ONE compact
     # line. The driver's stdout tail capture is ~2000 chars — round 4's
     # line (spread + smoke inlined) overflowed it and BENCH_r04.json
     # recorded "parsed": null. Keep this line < ~1700 bytes: compact
@@ -188,7 +146,6 @@ def main() -> None:
                 "stats": stats,
                 "spread": spread,
                 "extraction": extraction,
-                "smoke": smoke,
             },
             f,
             indent=1,

@@ -6,7 +6,7 @@ stats, quality scoring, language id, fingerprinting).
 
 Everything here is built from JVM-side pyspark.sql.functions expressions
 (plus Arrow-batched numpy kernels where megabyte expression plans would
-choke codegen — see embedding_near_dup) — no per-row Python UDFs
+choke codegen — see similarity's SRP code kernel) — no per-row Python UDFs
 anywhere — so the plans stay inside whole-stage codegen and scale with
 the cluster.
 """

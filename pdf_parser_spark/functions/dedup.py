@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .hashing import hash64, hash64_multi
+from .similarity import _lf_sq_rows, _lsh_codes, _lsh_probes, _score
 
 
 def exact_dedup(
@@ -378,59 +379,29 @@ def hashed_bow_embedding(
     )
 
 
-_SCRATCH_DIRS: list[str] = []
-_SCRATCH_ATEXIT = False
-
-
-def cleanup_embedding_scratch() -> None:
-    """Remove the scratch parquet dirs embedding_near_dup materialized.
-    Call once every DataFrame returned from it has been fully consumed
-    (also registered atexit, so long-lived sessions don't leak a copy of
-    the embedding table into /tmp per invocation)."""
-    import shutil
-
-    while _SCRATCH_DIRS:
-        shutil.rmtree(_SCRATCH_DIRS.pop(), ignore_errors=True)
-
-
-def _register_scratch(d: str) -> None:
-    global _SCRATCH_ATEXIT
-    if not _SCRATCH_ATEXIT:
-        import atexit
-
-        atexit.register(cleanup_embedding_scratch)
-        _SCRATCH_ATEXIT = True
-    _SCRATCH_DIRS.append(d)
-
-
-def _make_md5_sided_builder(
-    planes: list[list[float]],
+def _make_md5_embed_kernel(
     dim: int,
-    n_planes: int,
     id_col: str,
     text_col: str,
     memo_cap: int = 200_000,
     memo: dict | None = None,
 ):
-    """Factory for the Arrow-batched (tokenize -> md5 bucket counts ->
-    float32 normalize -> plane sign bits) kernel. The token->bucket memo
-    is cleared whenever it exceeds ``memo_cap`` (checked per batch) so an
-    adversarial-vocab shard can't bloat a long-lived executor worker;
-    ``memo`` is injectable so tests can observe the bound directly."""
+    """Factory for the Arrow-batched md5 hashed-BoW kernel (tokenize ->
+    md5 bucket counts -> float32 normalize) -> ``(doc_id, embedding)``,
+    value-identical to hashed_bow_embedding(hash_fn="md5"): counts are
+    exact integers, the norm is the same sequential left fold
+    (_lf_sq_rows), same float32 cast, same md5-60bit bucket. The
+    token->bucket memo is cleared whenever it exceeds ``memo_cap``
+    (checked per batch) so an adversarial-vocab shard can't bloat a
+    long-lived executor worker; ``memo`` is injectable so tests can
+    observe the bound directly."""
 
-    def build_sided(batches):
+    def embed(batches):
         import hashlib
 
         import numpy as np
         import pandas as pd
 
-        P = np.array(planes, dtype=np.float64)
-        cols = (
-            ["doc_id"]
-            + [f"e_{i}" for i in range(dim)]
-            + ["nrm"]
-            + [f"bit_{i}" for i in range(n_planes)]
-        )
         bucket_of: dict[str, int] = {} if memo is None else memo
         for pdf in batches:
             if len(bucket_of) > memo_cap:
@@ -460,26 +431,13 @@ def _make_md5_sided_builder(
                 ids.append(int(did))
                 rows.append(counts)
             if not ids:
-                yield pd.DataFrame({c: [] for c in cols})
                 continue
             C = np.vstack(rows)
-            norm = np.sqrt(np.add.accumulate(C * C, axis=1)[:, -1])
+            norm = np.sqrt(_lf_sq_rows(C))
             E32 = (C / np.maximum(norm, 1e-12)[:, None]).astype(np.float32)
-            Ed = E32.astype(np.float64)
-            acc = np.add.accumulate(
-                Ed[:, None, :] * P[None, :, :], axis=2
-            )[:, :, -1]
-            bits = (acc > 0).astype(np.int32)
-            nrm = np.sqrt(np.add.accumulate(Ed * Ed, axis=1)[:, -1])
-            out = pd.DataFrame({"doc_id": ids})
-            for i in range(dim):
-                out[f"e_{i}"] = E32[:, i]
-            out["nrm"] = nrm
-            for i in range(n_planes):
-                out[f"bit_{i}"] = bits[:, i]
-            yield out
+            yield pd.DataFrame({"doc_id": ids, "embedding": list(E32)})
 
-    return build_sided
+    return embed
 
 
 def embedding_near_dup(
@@ -491,155 +449,51 @@ def embedding_near_dup(
     hash_fn: str = "xx",
     n_planes: int = 16,
     multiprobe: bool = True,
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs: hashed-BoW embed, SRP-LSH bucket
     for candidates, exact cosine verify >= threshold. The scale path for
     semantic dedup: candidate volume ~ corpus / 2^n_planes per bucket.
 
-    The (doc_id, embedding, bucket) relation — n_docs x (dim floats +
-    one long), tiny next to the corpus — is MATERIALIZED to parquet
-    before the self-join, so the 64-aggregate embedding subplan runs
-    once instead of once per join side (the round-1 plan computed it
-    twice and was the #1 bench cost). 16 planes shrink buckets 256x
-    vs 8 planes (defusing the per-bucket quadratic blowup at corpus
-    scale); recall is held by multi-probe — the left side also probes
-    every bucket at Hamming distance 1, so any pair whose sign vectors
-    differ in at most one plane is still a candidate."""
-    import tempfile
+    One SRP table of ``n_planes`` planes from the shared similarity
+    code: the embedding is coded ONCE (_lsh_codes, eagerly
+    checkpointed) and both self-join sides explode that one relation,
+    then _score computes the cosine. 16 planes shrink buckets 256x vs 8
+    planes (defusing the per-bucket quadratic blowup at corpus scale);
+    recall is held by multi-probe — the probe side also probes every
+    bucket at Hamming distance 1, so any pair whose sign vectors differ
+    in at most one plane is still a candidate.
 
-    from .similarity import random_hyperplanes
-
-    def fold(terms):
-        out = terms[0]
-        for t in terms[1:]:
-            out = out + t
-        return out
-
-    # --- stage 1+2: materialize the per-doc "sided" table
-    # (doc_id, e_0..e_{dim-1}, nrm, bit_0..bit_{n_planes-1}) — FLAT
-    # columns, n_docs rows, tiny next to the corpus. Built by ONE
-    # Arrow-batched numpy kernel per md5 contract variant (tokenize ->
-    # bucket counts -> float32 normalize -> plane sign bits): no
-    # shuffle at all (same shape as the extraction stage), and none of
-    # the megabyte expression plans whose Janino compilation dominated
-    # the relational formulation (64-agg + 16 dim-term trees measured
-    # seconds of compile and fell past the 64KB method limit into
-    # interpreted fallback). Exact parity with the unrolled expressions
-    # and the pure-Python VALUES oracle: np.add.accumulate is the same
-    # sequential left-fold, counts are exact integers, same float32
-    # cast, same md5-60bit bucket. The xxhash64 default keeps the
-    # relational path (xxhash64 exists only JVM-side).
-    import os
-
-    planes = random_hyperplanes(dim, n_planes)
-    spark = df.sparkSession
-    # one mkdtemp root per invocation holds EVERY intermediate (sided
-    # table + the xx path's embedding step), registered for cleanup at
-    # exit / via cleanup_embedding_scratch() — repeated invocations in a
-    # long-lived session must not accumulate embedding-table copies
-    root = scratch_dir or tempfile.mkdtemp(prefix="pps_embnd_")
-    if scratch_dir is None:
-        _register_scratch(root)
-    out_dir = os.path.join(root, "sided")
-    sided_schema = ", ".join(
-        ["doc_id long"]
-        + [f"e_{i} float" for i in range(dim)]
-        + ["nrm double"]
-        + [f"bit_{i} int" for i in range(n_planes)]
-    )
-
+    The md5 contract variant embeds in one Arrow kernel pass
+    (_make_md5_embed_kernel: md5 exists only as a conv/substring
+    expression tree JVM-side); xxhash64 uses hashed_bow_embedding."""
     if hash_fn == "md5":
-        build_sided = _make_md5_sided_builder(
-            planes, dim, n_planes, id_col, text_col
-        )
         # the single parquet file of documents would give one input
-        # split — repartition so every core gets a slice. Batch sizing
-        # needs no per-op override: the session's byte-capped Arrow
-        # batching (session.py) gives slim text rows large batches.
-        (
+        # split — repartition so every core gets a slice
+        emb = (
             df.select(F.col(id_col), F.col(text_col))
-            .repartition(spark.sparkContext.defaultParallelism)
-            .mapInPandas(build_sided, schema=sided_schema)
-            .write.mode("overwrite")
-            .parquet(out_dir)
+            .repartition(df.sparkSession.sparkContext.defaultParallelism)
+            .mapInPandas(
+                _make_md5_embed_kernel(dim, id_col, text_col),
+                schema="doc_id long, embedding array<float>",
+            )
         )
     else:
-        counts = _hashed_bow_counts(df, dim, text_col, id_col, hash_fn)
-        cnt = [F.col(f"b{i}").cast("double") for i in range(dim)]
-        denom = F.greatest(
-            F.sqrt(fold([c * c for c in cnt])), F.lit(1e-12)
-        )
-        flat = counts.select(
-            "doc_id",
-            *[
-                (c / denom).cast("float").alias(f"e_{i}")
-                for i, c in enumerate(cnt)
-            ],
-        )
-        emb_dir = os.path.join(root, "e")
-        flat.write.mode("overwrite").parquet(emb_dir)
-        emb = spark.read.parquet(emb_dir)
-
-        def add_bits(batches):
-            import numpy as np
-            P = np.array(planes, dtype=np.float64)
-            for pdf in batches:
-                e = pdf[[f"e_{i}" for i in range(dim)]].to_numpy(np.float64)
-                acc = np.add.accumulate(
-                    e[:, None, :] * P[None, :, :], axis=2
-                )[:, :, -1]
-                bits = (acc > 0).astype(np.int32)
-                nrm = np.sqrt(np.add.accumulate(e * e, axis=1)[:, -1])
-                out = pdf.copy()
-                out["nrm"] = nrm
-                for i in range(n_planes):
-                    out[f"bit_{i}"] = bits[:, i]
-                yield out
-
-        emb.mapInPandas(add_bits, schema=sided_schema).write.mode(
-            "overwrite"
-        ).parquet(out_dir)
-    sided = spark.read.parquet(out_dir)
-
-    # --- stage 3: single-column bucket join (multi-probe Hamming<=1)
-    # + exact cosine verify; every expression here is tiny except the
-    # one dim-term dot per candidate pair.
-    bucket = fold(
-        [
-            F.shiftleft(F.col(f"bit_{i}").cast("long"), i)
-            for i in range(n_planes)
-        ]
+        emb = hashed_bow_embedding(df, dim, text_col, id_col, hash_fn)
+    coded = _lsh_codes(emb, "doc_id", "embedding", dim, n_planes, 1)
+    a = _lsh_probes(
+        coded, ("query_id", "qvec", "qn"), n_planes, 1, int(multiprobe)
     )
-    probe_cols = [bucket]
-    if multiprobe:
-        probe_cols += [
-            bucket.bitwiseXOR(F.lit(1 << j).cast("long"))
-            for j in range(n_planes)
-        ]
-    a = sided.select(
-        F.col("doc_id").alias("id_a"),
-        *[F.col(f"e_{i}").alias(f"a_{i}") for i in range(dim)],
-        F.col("nrm").alias("na"),
-        F.explode(F.array(*probe_cols)).alias("bucket"),
+    b = _lsh_probes(coded, ("neighbor_id", "cvec", "cn"), n_planes, 1, 0)
+    pairs = a.join(b.hint("shuffle_hash"), ["table", "bucket"]).filter(
+        F.col("query_id") < F.col("neighbor_id")
     )
-    b = sided.select(
-        F.col("doc_id").alias("id_b"),
-        *[F.col(f"e_{i}").alias(f"b_{i}") for i in range(dim)],
-        F.col("nrm").alias("nb"),
-        bucket.alias("bucket"),
-    )
-    dot = fold(
-        [
-            F.col(f"a_{i}").cast("double") * F.col(f"b_{i}").cast("double")
-            for i in range(dim)
-        ]
-    )
-    cos = dot / (F.col("na") * F.col("nb"))
     return (
-        a.join(b.hint("shuffle_hash"), "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.round(cos, 6).alias("cosine"))
+        _score(pairs, dim)
+        .select(
+            F.col("query_id").alias("id_a"),
+            F.col("neighbor_id").alias("id_b"),
+            F.round("cosine", 6).alias("cosine"),
+        )
         .filter(F.col("cosine") >= threshold)
         .distinct()
     )

@@ -6,6 +6,8 @@ quantization (ad hoc, and as a persisted index). Each path only
 GENERATES candidate pairs ``(query_id, neighbor_id, qvec, qn, cvec,
 cn)``; one scorer (_score) and one ranker (_rank) finish all of them,
 so every path computes the same cosine and the same tie order.
+dedup.embedding_near_dup reuses the SRP code pass (_lsh_codes,
+_lsh_probes) and _score for its self-join.
 
 Bucket codes, list assignment and quantization run in Arrow-batched
 numpy kernels; the cosine is a flat codegen expression up to the 64-term
@@ -169,8 +171,8 @@ def _eager_kernel_output(df: DataFrame, batch_rows: int = 4096) -> DataFrame:
       ~0.35s). Scoping the setting here keeps callers free to tune the
       session batch down for MB-scale blob columns without dragging
       embedding kernels with it.
-    At cluster scale swap localCheckpoint for a parquet materialization
-    (the embedding_near_dup pattern) to survive executor loss."""
+    At cluster scale swap localCheckpoint for a reliable checkpoint
+    (checkpoint() to a checkpoint dir) to survive executor loss."""
     spark = df.sparkSession
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key, None)
@@ -221,8 +223,9 @@ def _make_lsh_code_kernel(
     SRP code per table). The bucket math lives in numpy vector ops, NOT
     in unrolled expressions — n_tables * n_planes * dim literal terms
     stall Catalyst canonicalization and fall past Janino's method limit
-    (the embedding_near_dup lesson). Every dot/norm is a SEQUENTIAL
-    left fold (_lf_dot_rows), bit-identical to the pure-Python
+    (16 planes x 64 dims measured seconds of compile and interpreted
+    fallback). Every dot/norm is a SEQUENTIAL left fold
+    (_lf_dot_rows), bit-identical to the pure-Python
     VALUES-oracle replica regardless of Arrow batch shape — a BLAS
     matmul's blocked summation would differ in the low bits and could
     flip near-tie sign bits between engine and replica."""
@@ -253,25 +256,21 @@ def _make_lsh_code_kernel(
     return code
 
 
-def _lsh_buckets(
+def _lsh_codes(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    names: tuple[str, str, str],
     dim: int,
     n_planes: int,
     n_tables: int,
-    hamming: int,
     eager: bool = True,
 ) -> DataFrame:
-    """The one SRP-LSH derivation (lsh_cosine_topk, build_lsh_index,
-    query_lsh_index): plane sets seeded per table, codes from one Arrow
-    kernel pass, then one row per (table, bucket) — plus, with
-    ``hamming=1``, one per bucket a single plane flip away (query-side
-    multi-probe). ``names`` names the (id, vec, norm) columns; ``eager``
-    checkpoints the kernel output (_eager_kernel_output)."""
-    if hamming not in (0, 1):
-        raise ValueError("multi-probe supports hamming 0 or 1")
+    """The one SRP code pass (lsh_cosine_topk, build_lsh_index,
+    query_lsh_index, dedup.embedding_near_dup): plane sets seeded per
+    table, one Arrow kernel pass emitting
+    ``(id, vec, nrm, b_0..b_{n_tables-1})``.
+    ``eager`` checkpoints the kernel output (_eager_kernel_output), so
+    every probe/explode of the result reuses the same codes."""
     planes_per_table = [
         random_hyperplanes(dim, n_planes, seed=7 + t)
         for t in range(n_tables)
@@ -281,8 +280,22 @@ def _lsh_buckets(
         schema="id long, vec array<float>, nrm double, "
         + ", ".join(f"b_{t} long" for t in range(n_tables)),
     )
-    if eager:
-        coded = _eager_kernel_output(coded)
+    return _eager_kernel_output(coded) if eager else coded
+
+
+def _lsh_probes(
+    coded: DataFrame,
+    names: tuple[str, str, str],
+    n_planes: int,
+    n_tables: int,
+    hamming: int,
+) -> DataFrame:
+    """One row per (table, bucket) of an _lsh_codes relation — plus,
+    with ``hamming=1``, one per bucket a single plane flip away
+    (query-side multi-probe). ``names`` names the (id, vec, norm)
+    columns."""
+    if hamming not in (0, 1):
+        raise ValueError("multi-probe supports hamming 0 or 1")
     flips = range(n_planes) if hamming else ()
     buckets = [
         F.struct(F.lit(t).alias("table"), b.alias("bucket"))
@@ -336,7 +349,7 @@ def _make_ivf_assign_kernel(
     nearest list ids by squared L2 distance, ties to the LOWER list id).
     Numpy vector ops per centroid replace nlist * dim unrolled literal
     terms per row — the expression form stalls Catalyst canonicalization
-    and overflows Janino (the embedding_near_dup lesson). Every dot is a
+    and overflows Janino (see _make_lsh_code_kernel). Every dot is a
     SEQUENTIAL left fold (_lf_dot_rows), so distances are bit-identical
     to the pure-Python replica whatever the Arrow batch shape; distance
     grouping mirrors the replica: ``(v.v - 2 v.c) + c.c``; argsort is
@@ -464,13 +477,13 @@ def lsh_cosine_topk(
     slim (query, neighbor, cosine) rows of pairs that actually
     collided."""
     # query side first: it validates ``hamming`` before the corpus pass
-    q = _lsh_buckets(
-        query_df, id_col, vec_col, ("query_id", "qvec", "qn"),
-        dim, n_planes, n_tables, hamming,
+    q = _lsh_probes(
+        _lsh_codes(query_df, id_col, vec_col, dim, n_planes, n_tables),
+        ("query_id", "qvec", "qn"), n_planes, n_tables, hamming,
     )
-    c = _lsh_buckets(
-        df, id_col, vec_col, ("neighbor_id", "cvec", "cn"),
-        dim, n_planes, n_tables, 0,
+    c = _lsh_probes(
+        _lsh_codes(df, id_col, vec_col, dim, n_planes, n_tables),
+        ("neighbor_id", "cvec", "cn"), n_planes, n_tables, 0,
     )
     pairs = c.join(F.broadcast(q), ["table", "bucket"])
     return _rank(_score(pairs, dim), k, dedup=True)
@@ -528,9 +541,9 @@ def build_lsh_index(
     from pdf_parser_spark.sources.io import write_bucketed
 
     _clear_index_location(df.sparkSession, [table], path)
-    c = _lsh_buckets(
-        df, id_col, vec_col, ("neighbor_id", "cvec", "cn"),
-        dim, n_planes, n_tables, 0, eager=False,
+    c = _lsh_probes(
+        _lsh_codes(df, id_col, vec_col, dim, n_planes, n_tables, eager=False),
+        ("neighbor_id", "cvec", "cn"), n_planes, n_tables, 0,
     )
     write_bucketed(
         c, table, bucket_col="bucket", n_buckets=n_buckets, path=path
@@ -624,9 +637,9 @@ def query_lsh_index(
     parameters (same candidates, same scorer, same total tie order) —
     pinned by tests and by the shared contract oracle.
     ``n_planes``/``n_tables``/``dim`` must match the build."""
-    q = _lsh_buckets(
-        query_df, id_col, vec_col, ("query_id", "qvec", "qn"),
-        dim, n_planes, n_tables, hamming,
+    q = _lsh_probes(
+        _lsh_codes(query_df, id_col, vec_col, dim, n_planes, n_tables),
+        ("query_id", "qvec", "qn"), n_planes, n_tables, hamming,
     )
     pairs = spark.table(table).join(F.broadcast(q), ["table", "bucket"])
     scored = _score(pairs, dim)

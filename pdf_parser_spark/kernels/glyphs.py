@@ -57,9 +57,7 @@ def _make_tiles() -> np.ndarray:
 
 
 TILES = _make_tiles()
-_TILE_LOOKUP = {TILES[i].tobytes(): ALPHABET[i] for i in range(len(ALPHABET))}
 _BLANK = np.zeros((GLYPH_H, GLYPH_W), dtype=bool)
-_TILE_LOOKUP[_BLANK.tobytes()] = " "
 
 # bit-packed lookup (12 bytes per tile) for the vectorized line decoder
 _PACKED_LOOKUP = {

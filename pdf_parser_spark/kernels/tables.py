@@ -225,19 +225,18 @@ def get_tables_data(gray: np.ndarray) -> list[list[Cell]]:
 
 def extract_table(gray: np.ndarray) -> list[list[str]]:
     """Full per-page table extraction — the re-expression of extract_table
-    (python/app.py:211-234): detect bboxes, crop the page with a +/-10
-    margin, reconstruct each grid, keep only the FIRST table's grid and
-    strip cells to text (quirk F4)."""
-    h, w = gray.shape
+    (python/app.py:211-234): detect bboxes, crop the page at the FIRST
+    table's bbox with a +/-10 margin, reconstruct its grid and strip
+    cells to text (quirk F4). The reference grids every table and keeps
+    the first; get_tables_data is pure and never raises, so gridding
+    only the first gives the same output."""
     bounding = detect_table_bboxes(gray)
-    prediction_list: list[list[list[Cell]]] = []
-    for left, top, right, bottom in bounding:
-        x1 = max(0, left - 10)
-        y1 = max(0, top - 10)
-        x2 = min(w, right + 10)
-        y2 = min(h, bottom + 10)
-        cropped = gray[y1:y2, x1:x2]
-        prediction_list.append(get_tables_data(cropped))
-    if prediction_list:
-        return [[cell.text for cell in row] for row in prediction_list[0]]
-    return []
+    if not bounding:
+        return []
+    h, w = gray.shape
+    left, top, right, bottom = bounding[0]
+    cropped = gray[
+        max(0, top - 10) : min(h, bottom + 10),
+        max(0, left - 10) : min(w, right + 10),
+    ]
+    return [[cell.text for cell in row] for row in get_tables_data(cropped)]

@@ -610,6 +610,39 @@ def test_embedding_near_dup(docs):
     assert not any({a, b} & {5, 6} for a, b in pairs)
 
 
+@pytest.mark.parametrize("dim", [32, 80])
+def test_embedding_near_dup_matches_values_replica(spark, dim):
+    """embedding_near_dup(md5) equals the independent pure-Python
+    replica that writes the contract's VALUES oracle, at dim 32 and at
+    dim 80 — above _UNROLL_MAX, where _score takes its Arrow path,
+    which the dim-64 contract row never reaches."""
+    import importlib.util
+    import os
+
+    from pdf_parser_spark.functions import embedding_near_dup
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "gen_values_oracles",
+        os.path.join(repo, "tools", "gen_values_oracles.py"),
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    sf = "/root/testdata/sf0.001"
+    want = sorted(
+        (a, b, float(r))
+        for a, b, r in gen.gen_embedding_pairs(sf, threshold=0.95, dim=dim)
+    )
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    got = sorted(
+        (r.id_a, r.id_b, r.cosine)
+        for r in embedding_near_dup(
+            docs, threshold=0.95, dim=dim, hash_fn="md5"
+        ).collect()
+    )
+    assert want and got == want
+
+
 def test_embed_kernel_memo_bounded(spark):
     """The executor-side token->bucket memo must not grow without bound
     over a task's batches: an adversarial-vocab 100 TB shard would bloat
@@ -617,10 +650,8 @@ def test_embed_kernel_memo_bounded(spark):
     Spark) with an injected memo and a high-vocab stream."""
     import pandas as pd
 
-    from pdf_parser_spark.functions.dedup import _make_md5_sided_builder
-    from pdf_parser_spark.functions.similarity import random_hyperplanes
+    from pdf_parser_spark.functions.dedup import _make_md5_embed_kernel
 
-    planes = random_hyperplanes(16, 4)
     cap = 50
 
     def batches(tag):
@@ -636,40 +667,20 @@ def test_embed_kernel_memo_bounded(spark):
             )
 
     memo: dict = {}
-    capped = _make_md5_sided_builder(
-        planes, 16, 4, "doc_id", "text", memo_cap=cap, memo=memo
+    capped = _make_md5_embed_kernel(
+        16, "doc_id", "text", memo_cap=cap, memo=memo
     )
     out_capped = pd.concat(list(capped(batches("a"))), ignore_index=True)
     # bound: cap + one batch's fresh vocab (clear happens at batch entry)
     assert len(memo) <= cap + 80, len(memo)
     # identical output with an unbounded memo
-    uncapped = _make_md5_sided_builder(
-        planes, 16, 4, "doc_id", "text", memo_cap=10**9
-    )
+    uncapped = _make_md5_embed_kernel(16, "doc_id", "text", memo_cap=10**9)
     out_full = pd.concat(list(uncapped(batches("a"))), ignore_index=True)
-    pd.testing.assert_frame_equal(out_capped, out_full)
-
-
-def test_embedding_scratch_cleanup(spark, docs):
-    """Every embedding_near_dup invocation materializes a scratch table;
-    cleanup_embedding_scratch must remove all of them once results are
-    consumed (ADVICE: bench repeats were leaking one copy per run)."""
-    import os
-
-    from pdf_parser_spark.functions import embedding_near_dup
-    from pdf_parser_spark.functions.dedup import (
-        _SCRATCH_DIRS,
-        cleanup_embedding_scratch,
-    )
-
-    for hash_fn in ("md5", "xx"):
-        embedding_near_dup(docs, threshold=0.9, dim=32, hash_fn=hash_fn).count()
-    live = list(_SCRATCH_DIRS)
-    assert len(live) >= 2
-    assert all(os.path.isdir(d) for d in live)
-    cleanup_embedding_scratch()
-    assert not _SCRATCH_DIRS
-    assert not any(os.path.exists(d) for d in live)
+    assert len(out_capped) == 12
+    assert out_capped["doc_id"].tolist() == out_full["doc_id"].tolist()
+    assert [e.tolist() for e in out_capped["embedding"]] == [
+        e.tolist() for e in out_full["embedding"]
+    ]
 
 
 def test_simhash_near_dup(spark):

@@ -71,11 +71,12 @@ def main() -> None:
 
     emb = embedding_near_dup(d, threshold=0.95, hash_fn="md5")
     sections.append((
-        "embedding_near_dup (verify join over the materialized embedding table)",
-        "The embed subplan runs ONCE (numpy kernel -> parquet); both join "
-        "sides scan the tiny materialized (embedding, nrm, SRP-bit) table. "
-        "Multi-probe explode on the left, single shuffled-hash join on the "
-        "packed bucket, one compiled 64-term dot per candidate pair.",
+        "embedding_near_dup (self-join over the checkpointed SRP codes)",
+        "The embed kernel and the shared SRP code kernel run ONCE, before "
+        "this plan (eager checkpoint); both join sides scan that one "
+        "(id, vec, nrm, code) relation. Multi-probe explode on the left, "
+        "shuffled-hash join on (table, bucket), one compiled 64-term dot "
+        "per candidate pair (_score).",
         plan_of(emb),
     ))
 
