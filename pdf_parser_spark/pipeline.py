@@ -11,10 +11,12 @@ Scale design notes (the parts that must survive 1000 executors / 100 TB):
   deterministic logical shard, stable across runs and cluster sizes,
   uniform by construction (url hashing is the salt; giant-document skew
   cannot concentrate because neighboring urls scatter).
-- the only wide exchange before the write is ``repartition(n, part_id)``;
+- the only wide exchange before the write is ``repartition(part_id)``;
   everything upstream of it is a narrow scan, and the fat ``html`` bytes
   cross that one exchange exactly once, already column-pruned to
-  (url, html, part_id).
+  (url, html, part_id). AQE coalesces its buckets by bytes, so the
+  extract stage (the only Python in the job) runs as many tasks as the
+  wave's bytes need, each paying a Python task's fixed cost.
 - waves: partitions are processed in ``waves`` batches; each wave is
   committed atomically (dynamic partition overwrite) and its lineage rows
   appended AFTER the data commit. A crash mid-wave leaves un-marked
@@ -22,16 +24,16 @@ Scale design notes (the parts that must survive 1000 executors / 100 TB):
   (tests/test_resume.py kills between waves and asserts this).
 - lineage aggregates are computed by reading BACK the written parquet
   (column-pruned: part_id + tiny columns), so metrics reflect what was
-  actually committed, not what the stage thought it produced.
+  actually committed, not what the stage thought it produced; the
+  lineage rows are built from it in the JVM and appended uncollected.
 """
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass
-from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import schemas
@@ -53,10 +55,6 @@ class RunStats:
     waves_run: int
 
 
-def _utc(epoch_s: float) -> datetime:
-    return datetime.fromtimestamp(epoch_s, tz=timezone.utc)
-
-
 def with_part_id(df: DataFrame, n_parts: int) -> DataFrame:
     return df.withColumn(
         "part_id", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int")
@@ -74,6 +72,53 @@ def done_parts(io: TableIO, run_id: str) -> list[int]:
         .collect()
     )
     return sorted(r.part_id for r in rows)
+
+
+def extract_wave(salted: DataFrame, wave: list[int], n_parts: int) -> DataFrame:
+    """The extracted rows of one wave's parts. The one wide exchange
+    co-locates each resume shard; AQE sizes its tasks by bytes. part_id is
+    deterministic from url, so it is recomputed on the result side instead
+    of being carried through the stage (the stage schema stays pure)."""
+    staged = (
+        salted.filter(F.col("part_id").isin(wave))
+        .select("url", "html", "part_id")
+        .repartition("part_id")
+    )
+    return with_part_id(extract_stage(staged), n_parts)
+
+
+def lineage_rows(io: TableIO, wave: list[int], run_id: str, started: float,
+                 finished: float, observed: dict[str, float]) -> DataFrame:
+    """The wave's ``schemas.LINEAGE`` rows, one per committed part: the
+    read-back aggregate of ``extracted`` plus literal columns, planned in
+    the JVM. ``metrics`` holds the wall time and the ``observed`` ones."""
+    metrics = {"wall_sec": finished - started, **observed}
+    committed = (
+        io.read(EXTRACTED_TABLE)
+        .filter(F.col("part_id").isin(wave))
+        .groupBy("part_id")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum(F.coalesce(F.col("n_chars"), F.lit(0))).alias("n_bytes"),
+            F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias("n_ok"),
+            F.sum(
+                F.when(F.col("error").isNotNull(), 1).otherwise(0)
+            ).alias("n_err"),
+        )
+    )
+    cols = {
+        "run_id": F.lit(run_id),
+        "status": F.lit("done"),
+        "started_at": F.timestamp_seconds(F.lit(started)),
+        "finished_at": F.timestamp_seconds(F.lit(finished)),
+        "metrics": F.create_map(*[F.lit(x) for kv in metrics.items() for x in kv]),
+    }
+    # cast to the declared schema: it also widens the map of non-null
+    # literals to the table's nullable-valued map type
+    return committed.select(*[
+        cols.get(f.name, F.col(f.name)).cast(f.dataType).alias(f.name)
+        for f in schemas.LINEAGE
+    ])
 
 
 def run_extraction(
@@ -97,13 +142,8 @@ def run_extraction(
     tune_for_fat_binary_scan(spark)
     io = TableIO(spark, out_root)
     already = set(done_parts(io, run_id))
-    all_parts = list(range(n_parts))
-    todo = [p for p in all_parts if p not in already]
-
-    n_tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    wave_lists = [
-        todo[i::waves] for i in range(waves) if todo[i::waves]
-    ]
+    todo = [p for p in range(n_parts) if p not in already]
+    wave_lists = [todo[i::waves] for i in range(waves) if todo[i::waves]]
     docs_total = 0
     waves_run = 0
     salted = with_part_id(input_df, n_parts)
@@ -112,22 +152,10 @@ def run_extraction(
         if max_waves is not None and waves_run >= max_waves:
             break
         started = time.time()
-        subset = salted.filter(F.col("part_id").isin(wave))
-        # the one wide exchange: co-locate each resume-shard, fat bytes
-        # cross it exactly once, pruned to (url, html, part_id)
-        subset = subset.select("url", "html", "part_id").repartition(
-            min(n_tasks, max(1, len(wave))), "part_id"
-        )
-        # part_id is deterministic from url — recompute on the result side
-        # instead of carrying/joining it through the stage (no extra
-        # shuffle, and the stage schema stays pure)
-        results = with_part_id(extract_stage(subset), n_parts)
         # A4 analogue (SURVEY.md §2.4): df.observe rides the write job —
         # zero extra passes — and lands in the lineage metrics map
-        from pyspark.sql import Observation
-
-        obs = Observation(f"wave-{waves_run}")
-        results = results.observe(
+        obs = Observation()
+        results = extract_wave(salted, wave, n_parts).observe(
             obs,
             F.count(F.lit(1)).alias("obs_docs"),
             F.sum(
@@ -138,40 +166,12 @@ def run_extraction(
         io.overwrite_partitions(results, EXTRACTED_TABLE, "part_id")
         observed = {k: float(v or 0) for k, v in obs.get.items()}
 
-        finished = time.time()
-
-        # lineage from what was COMMITTED, read back once per wave
-        committed = (
-            io.read(EXTRACTED_TABLE)
-            .filter(F.col("part_id").isin(wave))
-            .groupBy("part_id")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.coalesce(F.col("n_chars"), F.lit(0))).alias("n_bytes"),
-                F.sum(
-                    F.when(F.col("error").isNull(), 1).otherwise(0)
-                ).alias("n_ok"),
-                F.sum(
-                    F.when(F.col("error").isNotNull(), 1).otherwise(0)
-                ).alias("n_err"),
-            )
-            .collect()
-        )
-        metrics = {
-            "wall_sec": float(finished - started),
-            "obs_docs": observed.get("obs_docs", 0.0),
-            "obs_errs": observed.get("obs_errs", 0.0),
-            "obs_chars": observed.get("obs_chars", 0.0),
-        }
-        lineage = [
-            (
-                run_id, r.part_id, r.n_docs, r.n_bytes, r.n_ok, r.n_err,
-                "done", _utc(started), _utc(finished), metrics,
-            )
-            for r in committed
-        ]
-        io.append(spark.createDataFrame(lineage, schemas.LINEAGE), LINEAGE_TABLE)
-        docs_total += sum(r.n_docs for r in committed)
+        # appended only after the data commit above; the committed doc
+        # count rides the append, no extra pass
+        docs = Observation()
+        lineage = lineage_rows(io, wave, run_id, started, time.time(), observed)
+        io.append(lineage.observe(docs, F.sum("n_docs").alias("n_docs")), LINEAGE_TABLE)
+        docs_total += int(docs.get["n_docs"] or 0)
         waves_run += 1
 
     return RunStats(

@@ -16,8 +16,8 @@ local[32] (SURVEY.md §4):
   3-byte rows -> one batch per partition;
 - python worker reuse: the UDF stages are called per batch, fork cost
   must amortize;
-- shuffle partitions sized for the local harness; a cluster submit
-  overrides via --conf (jobs/extract.py exposes it).
+- shuffle partitions: the extract job's ``repartition(part_id)`` starts from
+  them and AQE coalesces by bytes; --conf overrides (jobs/extract.py).
 """
 
 from __future__ import annotations

@@ -46,15 +46,48 @@ def test_extract_scan_prunes_to_url_html(spark, corpus_path):
 
 
 def test_salted_repartition_single_exchange(spark, corpus_path):
-    from pdf_parser_spark.operators import extract_stage
-    from pdf_parser_spark.pipeline import with_part_id
+    from pdf_parser_spark.pipeline import extract_wave, with_part_id
 
     base = with_part_id(spark.read.parquet(corpus_path), 16)
-    staged = base.select("url", "html", "part_id").repartition(8, "part_id")
-    plan = plan_of(extract_stage(staged))
-    # exactly one Exchange (the salted repartition) in the whole pipeline
+    plan = plan_of(extract_wave(base, list(range(16)), 16))
+    # exactly one Exchange (the salted repartition) in the whole pipeline,
+    # by column with no fixed count, so AQE sizes the extract tasks
     assert count_nodes(plan, "Exchange") == 1
-    assert "REPARTITION_BY_NUM" in plan
+    assert "REPARTITION_BY_COL" in plan
+
+
+def test_lineage_rows_run_no_python(spark, corpus_df, tmp_path):
+    """The lineage rows are a JVM plan over the committed ``extracted``
+    parquet: no Python-list ``createDataFrame`` scan, no Python node."""
+    from pdf_parser_spark import schemas
+    from pdf_parser_spark.pipeline import (
+        EXTRACTED_TABLE,
+        LINEAGE_TABLE,
+        lineage_rows,
+        run_extraction,
+    )
+    from pdf_parser_spark.sources import TableIO
+
+    out_root = str(tmp_path / "out")
+    run_extraction(spark, corpus_df, out_root, run_id="lin", n_parts=4)
+    io = TableIO(spark, out_root)
+    observed = {"obs_docs": 80.0, "obs_errs": 0.0, "obs_chars": 0.0}
+    lineage = lineage_rows(io, [0, 1, 2, 3], "lin", 0.0, 1.0, observed)
+
+    plan = plan_of(lineage)
+    assert count_nodes(plan, "Scan parquet") == 1
+    assert f"{out_root}/{EXTRACTED_TABLE}" in plan
+    assert "Scan ExistingRDD" not in plan
+    assert not re.search(r"\(\d+\) \w*(Python|Pandas|Arrow)", plan)
+
+    def types(schema):
+        return [(f.name, f.dataType) for f in schema]
+
+    assert types(lineage.schema) == types(schemas.LINEAGE)
+    assert types(io.read(LINEAGE_TABLE).schema) == types(schemas.LINEAGE)
+    for r in io.read(LINEAGE_TABLE).collect():
+        assert set(r.metrics) == {"wall_sec", "obs_docs", "obs_errs", "obs_chars"}
+    assert sum(r.n_docs for r in lineage.collect()) == corpus_df.count()
 
 
 def test_q3_broadcasts_customer(spark):

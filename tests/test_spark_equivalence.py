@@ -80,3 +80,77 @@ def test_clauses_map_column(corpus_df, oracle_results):
             assert dict(got) == o.clauses, u
             # insertion order is preserved via clauses_json
             assert list(json.loads(rows[u].clauses_json)) == list(o.clauses)
+
+
+def _extract_tasks_and_output(spark, monkeypatch, corpus_df, out_root, run_id):
+    """Run the job; return the task count of its extract stage (the last
+    stage of the data write's last job, under its own job group), the
+    committed rows by url and the lineage ``n_docs`` by part."""
+    from pdf_parser_spark.pipeline import (
+        EXTRACTED_TABLE,
+        LINEAGE_TABLE,
+        run_extraction,
+    )
+    from pdf_parser_spark.sources import TableIO
+
+    sc = spark.sparkContext
+    write = TableIO.overwrite_partitions
+
+    def grouped_write(self, *a, **k):
+        sc.setJobGroup(run_id, "extract write")
+        try:
+            return write(self, *a, **k)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(TableIO, "overwrite_partitions", grouped_write)
+    run_extraction(spark, corpus_df, out_root, run_id=run_id, n_parts=8)
+    monkeypatch.undo()
+
+    tracker = sc.statusTracker()
+    job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(run_id)))
+    tasks = tracker.getStageInfo(max(job.stageIds)).numTasks
+    io = TableIO(spark, out_root)
+    lineage = {r.part_id: r.n_docs for r in io.read(LINEAGE_TABLE).collect()}
+    return tasks, _collect_by_url(io.read(EXTRACTED_TABLE)), lineage
+
+
+def test_run_extraction_task_count_independence(
+    spark, corpus_df, oracle_results, monkeypatch, tmp_path
+):
+    """The committed rows and lineage do not depend on how many tasks the
+    extract stage runs: AQE-sized, one task per shuffle partition, and a
+    single task."""
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    runs = {}
+    for name, key, value in [
+        ("aqe", None, None),
+        ("uncoalesced", "spark.sql.adaptive.coalescePartitions.enabled", "false"),
+        ("one", "spark.sql.shuffle.partitions", "1"),
+    ]:
+        old = spark.conf.get(key) if key else None
+        try:
+            if key:
+                spark.conf.set(key, value)
+            runs[name] = _extract_tasks_and_output(
+                spark, monkeypatch, corpus_df, str(tmp_path / name), f"tc-{name}"
+            )
+        finally:
+            if key:
+                spark.conf.set(key, old)
+
+    assert runs["aqe"][0] < n_shuffle
+    assert runs["uncoalesced"][0] == n_shuffle
+    assert runs["one"][0] == 1
+    assert_identical(runs["aqe"][1], oracle_results)
+
+    def fields(rows):
+        return {
+            u: (r.extracted_text, r.clauses_json, r.tables_json, r.error)
+            for u, r in rows.items()
+        }
+
+    for name in ("uncoalesced", "one"):
+        assert fields(runs[name][1]) == fields(runs["aqe"][1]), name
+        assert runs[name][2] == runs["aqe"][2], name
+    assert sum(runs["aqe"][2].values()) == len(oracle_results)

@@ -19,8 +19,7 @@ def plan_of(df, mode: str = "formatted") -> str:
 
 def main() -> None:
     import __spark_entry__ as m
-    from pdf_parser_spark.operators import extract_stage
-    from pdf_parser_spark.pipeline import with_part_id
+    from pdf_parser_spark.pipeline import extract_wave, with_part_id
     from pdf_parser_spark.session import get_spark
     from pdf_parser_spark.synth import gen_rows
     from pdf_parser_spark import schemas
@@ -33,13 +32,13 @@ def main() -> None:
     sections = []
 
     corpus = spark.createDataFrame(list(gen_rows(20)), schemas.INPUT)
-    salted = with_part_id(corpus, 16).select("url", "html", "part_id").repartition(8, "part_id")
     sections.append((
         "Fused extraction pipeline (salted repartition -> extract stage)",
-        "One Exchange total (the salted repartition); the multi-MB html "
-        "bytes cross it once, pruned to (url, html, part_id); everything "
-        "after MapInPandas is result-sized.",
-        plan_of(extract_stage(salted)),
+        "One Exchange total (the salted repartition, by column: AQE sizes "
+        "the extract tasks by bytes); the multi-MB html bytes cross it once, "
+        "pruned to (url, html, part_id); everything after MapInPandas is "
+        "result-sized.",
+        plan_of(extract_wave(with_part_id(corpus, 16), list(range(16)), 16)),
     ))
 
     q3 = m.q3_top_revenue(spark, sf)
