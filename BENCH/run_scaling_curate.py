@@ -13,7 +13,9 @@ language mix and sampling strata are unchanged — while randomizing the
 other and the LSH/verify work scales like a real crawl's duplicate
 rate instead of quadratically in the replication factor.
 
-    python BENCH/run_scaling_curate.py [--replicas 32] [--cores 2,8]
+    python BENCH/run_scaling_curate.py [--replicas 32] [--cores 1,4]
+
+``--cores`` defaults to N = nproc // 4 and 4N, as in run_scaling.py.
 """
 
 from __future__ import annotations
@@ -23,6 +25,8 @@ import json
 import os
 import subprocess
 import sys
+
+from run_scaling import default_cores
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -55,14 +59,14 @@ print("built", len(out["doc_id"]))
 """
 
 WORKER = r"""
-import json, shutil, sys, time
+import json, os, shutil, sys, time
 sys.path.insert(0, {repo!r})
-import os
-os.environ["SPARK_GRAFT_MASTER"] = "local[{cores}]"
+os.environ["SPARK_GRAFT_CPUS"] = "{cores}"
 from pdf_parser_spark.functions import curate
 from pdf_parser_spark.session import get_spark
-spark = get_spark(app_name="curate-scale-{cores}", shuffle_partitions={cores})
+spark = get_spark(app_name="curate-scale-{cores}")
 spark.sparkContext.setLogLevel("ERROR")
+spark.conf.set("spark.sql.shuffle.partitions", "{cores}")
 # >= 4 input splits per core so the narrow (no-shuffle) stages
 # parallelize too; row groups are ~1 MB so splits land on group edges
 spark.conf.set("spark.sql.files.maxPartitionBytes", str(1024 * 1024))
@@ -99,7 +103,7 @@ spark.stop()
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--replicas", type=int, default=32)
-    ap.add_argument("--cores", default="2,8")
+    ap.add_argument("--cores", default=default_cores())
     args = ap.parse_args()
     corpus = f"/tmp/pps_curate_scale_docs_x{args.replicas}"
 

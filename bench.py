@@ -1,25 +1,25 @@
 """Benchmark harness (driver contract: prints ONE JSON line).
 
-Measures, in one process:
-1. per-query MEDIAN-of-3 wall at local[8] — the decidable signal.
+Measures, in one process at local[min(8, nproc)]:
+1. per-query MEDIAN-of-3 wall — the decidable signal.
    This VM shows up to 2x run-to-run variance at >= 16 advertised
    cores (CLAUDE.md / BENCH/BASELINE.md), so local[32] per-query
    numbers cannot attribute a round-over-round regression; <= 8 cores
    is the regime the repo's own measurement notes mandate. The JSON
    carries median AND [min, max] spread per query so a future delta
    can be judged against the observed band, not a single draw.
-2. bare extraction-stage throughput (docs/sec, median-of-3) in the
-   same session.
+2. throughput of the real extraction job (``pipeline.run_extraction``,
+   docs/sec, median-of-3 after one warm-up job) in the same session.
 
     python bench.py
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_BENCH_DOCS (default 2000),
-SPARK_GRAFT_BENCH_MEASURE_CORES (default 8),
+SPARK_GRAFT_BENCH_MEASURE_CORES (default min(8, nproc)),
 SPARK_GRAFT_BENCH_SKIP_EXTRACTION=1 to run queries only.
 
-Headline ``value`` = sum of local[8] per-query medians + the local[8]
-extraction median wall. (Rounds 1-3 reported a local[32]-derived
-total; round 4 switched after the round-3 judge found the local[32]
-per-query signal undecidable — see BENCH/BASELINE.md.)
+Headline ``value`` = sum of the per-query medians + the extraction
+median wall. (Rounds 1-3 reported a local[32]-derived total; round 4
+switched after the round-3 judge found the local[32] per-query signal
+undecidable — see BENCH/BASELINE.md.)
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ import json
 import os
 import statistics
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -64,11 +65,11 @@ def bench_queries(
 
 
 def bench_extraction(spark, n_docs: int) -> dict:
+    """Wall of the real job, ``pipeline.run_extraction``, over an
+    ``n_docs`` synthetic corpus: one warm-up job, then the median of 3,
+    each into a fresh output directory."""
     from pdf_parser_spark.jobs.gen_corpus import corpus_df
-    from pdf_parser_spark.operators import extract_stage
-    from pdf_parser_spark.session import tune_for_fat_binary_scan
-
-    tune_for_fat_binary_scan(spark)
+    from pdf_parser_spark.pipeline import run_extraction
 
     corpus_path = f"/tmp/pps_bench_corpus_{n_docs}"
     marker = os.path.join(corpus_path, "_SUCCESS")
@@ -79,11 +80,18 @@ def bench_extraction(spark, n_docs: int) -> dict:
 
     df = spark.read.parquet(corpus_path)
     walls = []
-    n_ok = 0
-    for _ in range(3):
-        t0 = time.time()
-        n_ok = extract_stage(df).filter("error IS NULL").count()
-        walls.append(time.time() - t0)
+    with tempfile.TemporaryDirectory(prefix="pps_bench_") as tmp:
+        for i in range(4):
+            out = os.path.join(tmp, str(i))
+            t0 = time.time()
+            run_extraction(spark, df, out, run_id="bench")
+            walls.append(time.time() - t0)
+        n_ok = (
+            spark.read.parquet(os.path.join(out, "extracted"))
+            .filter("error IS NULL")
+            .count()
+        )
+    walls = walls[1:]
     wall = _median(walls)
     return {
         "docs": n_docs,
@@ -95,8 +103,8 @@ def bench_extraction(spark, n_docs: int) -> dict:
 
 
 def _session(cores: int):
-    """Fresh session pinned to ``cores`` (bypasses the SPARK_GRAFT_CPUS
-    env override inside get_spark so the measured level stays fixed)."""
+    """Fresh session at local[``cores``]: SPARK_GRAFT_CPUS picks the
+    master of a plain python launch (session.get_spark)."""
     from pdf_parser_spark.session import get_spark
 
     os.environ["SPARK_GRAFT_CPUS"] = str(cores)
@@ -108,13 +116,18 @@ def _session(cores: int):
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    measure_cores = int(os.environ.get("SPARK_GRAFT_BENCH_MEASURE_CORES", "8"))
+    measure_cores = int(
+        os.environ.get(
+            "SPARK_GRAFT_BENCH_MEASURE_CORES",
+            min(8, len(os.sched_getaffinity(0))),
+        )
+    )
     skip_extraction = (
         os.environ.get("SPARK_GRAFT_BENCH_SKIP_EXTRACTION") == "1"
     )
     n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "2000"))
 
-    # --- measurement level (median-of-3, local[8]) ---
+    # --- measurement level (median-of-3, local[measure_cores]) ---
     spark = _session(measure_cores)
     stats = bench_queries(spark, sf_dir)
     extraction = {} if skip_extraction else bench_extraction(spark, n_docs)

@@ -63,7 +63,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--keeper", choices=("min_id", "longest"),
                     default="min_id",
                     help="near-dup cluster survivor policy")
-    ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -73,7 +72,7 @@ def main(argv: list[str] | None = None) -> int:
 
     # don't tear down a session we merely joined (embedded/test use)
     pre_existing = SparkSession.getActiveSession() is not None
-    spark = get_spark(app_name=f"curate-{args.run_id}", master=args.master)
+    spark = get_spark(app_name=f"curate-{args.run_id}")
     try:
         t0 = time.monotonic()
         df = spark.read.parquet(args.input)

@@ -46,7 +46,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--drain-timeout-secs", type=int, default=3600,
                     help="max wall for an availableNow backlog drain")
     ap.add_argument("--max-files-per-trigger", type=int, default=64)
-    ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -55,9 +54,7 @@ def main(argv: list[str] | None = None) -> int:
     from pdf_parser_spark.streaming import stream_curate_stateless
 
     pre_existing = SparkSession.getActiveSession() is not None
-    spark = get_spark(
-        app_name=f"curate-stream-{args.run_id}", master=args.master
-    )
+    spark = get_spark(app_name=f"curate-stream-{args.run_id}")
     try:
         t0 = time.monotonic()
         sink = f"{args.output}/curated"

@@ -1,12 +1,14 @@
 """The packaged extraction job — the engine's spark-submit surface
 (north rule: "run via spark-submit --py-files").
 
-    spark-submit --py-files dist/pdf_parser_spark.zip \
-        -m ... pdf_parser_spark/jobs/extract.py \
+    spark-submit --master spark://host:7077 \
+        --py-files dist/pdf_parser_spark.zip \
+        pdf_parser_spark/jobs/extract.py \
         --input /data/pages --output /data/out --run-id run1 \
         [--n-parts 64] [--waves 1]
 
-or locally:
+The launcher's --master/--conf settings win over the engine defaults
+(session.get_spark). Or locally, where SPARK_GRAFT_CPUS=N picks local[N]:
 
     python -m pdf_parser_spark.jobs.extract --input ... --output ... --run-id r1
 
@@ -26,13 +28,12 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--n-parts", type=int, default=64, help="resume-shard count")
     ap.add_argument("--waves", type=int, default=1, help="commit batches")
-    ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
     from pdf_parser_spark.pipeline import run_extraction
     from pdf_parser_spark.session import get_spark
 
-    spark = get_spark(app_name=f"extract-{args.run_id}", master=args.master)
+    spark = get_spark(app_name=f"extract-{args.run_id}")
     try:
         input_df = spark.read.parquet(args.input)
         stats = run_extraction(

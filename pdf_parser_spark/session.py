@@ -1,7 +1,14 @@
-"""SparkSession factory with the engine's scale-oriented defaults.
+"""SparkSession factory: one recipe of engine defaults, each applied only
+where the launcher left the key unset.
 
-Every knob is chosen for the 100 TB design point and merely *works* at
-local[32] (SURVEY.md §4):
+``spark-submit --master/--conf/--driver-memory`` therefore win over every
+default below. In a plain ``python`` launch, ``SPARK_GRAFT_CPUS=N`` picks
+``local[N]``; with neither, the master is ``local[*]``. Callers that need
+a fixed runtime value (tests, plan dumps, scaling runs) set it on the
+built session with ``spark.conf.set``.
+
+The defaults are chosen for the 100 TB design point and merely *work* on
+one machine (SURVEY.md §4):
 
 - AQE on: runtime shuffle coalescing + skew-join splitting;
 - Arrow on + BYTE-capped record batches: pages are MB-scale fat rows;
@@ -17,7 +24,7 @@ local[32] (SURVEY.md §4):
 - python worker reuse: the UDF stages are called per batch, fork cost
   must amortize;
 - shuffle partitions: the extract job's ``repartition(part_id)`` starts from
-  them and AQE coalesces by bytes; --conf overrides (jobs/extract.py).
+  them and AQE coalesces by bytes.
 """
 
 from __future__ import annotations
@@ -27,11 +34,28 @@ import os
 import tempfile
 import zipfile
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 ARROW_BATCH_ROWS = 2048
 ARROW_BATCH_BYTES = 16 * 1024 * 1024
 PKG_ROOT = os.path.dirname(os.path.abspath(__file__))
+
+ENGINE_DEFAULTS = {
+    "spark.sql.shuffle.partitions": "32",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(ARROW_BATCH_BYTES),
+    "spark.python.worker.reuse": "true",
+    "spark.sql.session.timeZone": "UTC",
+    # fat binary rows: keep scan partitions small enough to fit
+    "spark.sql.files.maxPartitionBytes": "64m",
+    "spark.sql.sources.partitionOverwriteMode": "dynamic",
+    "spark.driver.memory": "8g",
+}
 
 
 def tune_for_fat_binary_scan(spark: SparkSession) -> None:
@@ -45,43 +69,22 @@ def tune_for_fat_binary_scan(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "32")
 
 
-def get_spark(
-    app_name: str = "pdf-parser-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[32]")
+def get_spark(app_name: str = "pdf-parser-spark") -> SparkSession:
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        # under spark-submit its settings live in the JVM it started;
+        # SparkConf() sees them only once connected to that gateway. A
+        # plain python launch must not start the JVM here: it would start
+        # before spark.driver.memory applies
+        SparkContext._ensure_initialized()  # noqa: SLF001
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    if cpus and master.startswith("local"):
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-        )
-    b = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(ARROW_BATCH_ROWS),
-        )
-        .config(
-            "spark.sql.execution.arrow.maxBytesPerBatch",
-            str(ARROW_BATCH_BYTES),
-        )
-        .config("spark.python.worker.reuse", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # fat binary rows: keep scan partitions small enough to fit
-        .config("spark.sql.files.maxPartitionBytes", "64m")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-    )
-    spark = b.getOrCreate()
+    conf = SparkConf()
+    for key, value in {
+        "spark.app.name": app_name,
+        "spark.master": f"local[{cpus}]" if cpus else "local[*]",
+        **ENGINE_DEFAULTS,
+    }.items():
+        conf.setIfMissing(key, value)
+    spark = SparkSession.builder.config(conf=conf).getOrCreate()
     ship_package(spark)
     return spark
 
@@ -92,7 +95,8 @@ def package_zip(pkg_root: str = PKG_ROOT) -> str:
     paths and bytes), so a changed byte gives a new file and stale code is
     never shipped; the same sources reuse the existing zip. A fresh zip is
     written under a temp name and ``os.replace``d, so concurrent builders
-    never see a partial file."""
+    never see a partial file. A tree with no ``.py`` sources (say, a
+    package imported from a zip) is refused: its zip would ship nothing."""
     base = os.path.dirname(pkg_root)
     sources = []
     for dirpath, dirnames, files in os.walk(pkg_root):
@@ -102,6 +106,8 @@ def package_zip(pkg_root: str = PKG_ROOT) -> str:
                 full = os.path.join(dirpath, fn)
                 with open(full, "rb") as f:
                     sources.append((os.path.relpath(full, base), f.read()))
+    if not sources:
+        raise FileNotFoundError(f"no .py sources under {pkg_root}")
     h = hashlib.sha256()
     for rel, data in sources:
         h.update(rel.encode() + b"\0" + data + b"\0")
@@ -123,9 +129,11 @@ def ship_package(spark: SparkSession) -> None:
     regardless of the launch cwd: addPyFile the package zip once per
     SparkContext. Workers only inherit the driver's CWD (not its
     sys.path), so running any entry point from outside the repo root
-    would otherwise fail to unpickle mapInPandas closures."""
+    would otherwise fail to unpickle mapInPandas closures. A package
+    imported from a zip (``spark-submit --py-files``) is not on disk, and
+    the executors already have that zip: nothing to ship."""
     sc = spark.sparkContext
-    if getattr(sc, "_pps_pkg_added", False):
+    if getattr(sc, "_pps_pkg_added", False) or not os.path.isdir(PKG_ROOT):
         return
     sc.addPyFile(package_zip())
     sc._pps_pkg_added = True  # noqa: SLF001

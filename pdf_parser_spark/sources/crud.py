@@ -14,10 +14,13 @@ analogue of an Iceberg MERGE (S12's Spark primitive).
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..pipeline import EXTRACTED_TABLE, with_part_id
+from ..kernels.clauses import serialize_clauses
+from ..pipeline import EXTRACTED_TABLE
 from .io import TableIO
 
 
@@ -59,48 +62,41 @@ def lookup_clause(io: TableIO, doc_sha: str, clause_key: str) -> DataFrame:
 
 
 def update_clause(
-    spark: SparkSession,
-    io: TableIO,
-    doc_sha: str,
-    clause_key: str,
-    new_text: str,
-    n_parts: int,
+    io: TableIO, doc_sha: str, clause_key: str, new_text: str
 ) -> int:
     """Patch one clause key of one document (S12). The reference
     spread-merges one key into the JSONB blob (pdf.controller.js:146-154)
     and newline-normalizes the edited value (:139; utils.js:78-87 -> X9).
+    A key already present keeps its place, like the spread-merge.
 
-    Implementation: rewrite ONLY the partition(s) containing the row via
-    dynamic partition overwrite. Returns the number of rows updated."""
+    The row's three clause encodings stay in step: ``clauses_json`` and
+    ``extracted_text`` are rebuilt from the edited map with the kernels'
+    serializers. Only the partition(s) containing the row are rewritten,
+    via dynamic partition overwrite. Returns the number of rows updated."""
     table = io.read(EXTRACTED_TABLE)
-    hit = table.filter(F.col("doc_sha") == doc_sha)
-    parts = [r.part_id for r in hit.select("part_id").distinct().collect()]
-    if not parts:
+    is_hit = F.col("doc_sha") == doc_sha
+    hits = table.filter(is_hit).select("part_id", "clauses").collect()
+    if not hits:
         return 0
-    n_hit = hit.count()
-    cleaned = new_text.replace("\n", "")  # X9 newline strip
-    part_rows = table.filter(F.col("part_id").isin(parts))
-    updated = part_rows.withColumn(
-        "clauses",
-        F.when(
-            F.col("doc_sha") == doc_sha,
-            F.map_concat(
-                F.map_filter(
-                    F.coalesce(
-                        F.col("clauses"),
-                        F.create_map().cast("map<string,string>"),
-                    ),
-                    lambda k, _v: k != F.lit(clause_key),
-                ),
-                F.create_map(F.lit(clause_key), F.lit(cleaned)),
-            ),
-        ).otherwise(F.col("clauses")),
+    # rows of one doc_sha came from the same bytes: same clause map
+    clauses = dict(hits[0].clauses or {})
+    clauses[clause_key] = new_text.replace("\n", "")  # X9 newline strip
+    edited = {
+        "clauses": F.create_map(
+            *[F.lit(x) for kv in clauses.items() for x in kv]
+        ),
+        "clauses_json": F.lit(json.dumps(clauses, ensure_ascii=False)),
+        "extracted_text": F.lit(serialize_clauses(clauses)),
+    }
+    part_rows = table.filter(F.col("part_id").isin({r.part_id for r in hits}))
+    updated = part_rows.withColumns(
+        {c: F.when(is_hit, v).otherwise(F.col(c)) for c, v in edited.items()}
     )
     io.overwrite_partitions(updated, EXTRACTED_TABLE, "part_id")
-    return n_hit
+    return len(hits)
 
 
-def truncate(spark: SparkSession, io: TableIO, n_parts: int) -> None:
+def truncate(spark: SparkSession, io: TableIO) -> None:
     """DELETE all (S13): overwrite with an empty frame of the same
     schema (Iceberg: DELETE FROM)."""
     schema = io.read(EXTRACTED_TABLE).schema

@@ -10,8 +10,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from pdf_parser_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_MASTER", "local[4]")
-    s = get_spark(app_name="pdf-parser-spark-tests", shuffle_partitions=8)
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+    s = get_spark(app_name="pdf-parser-spark-tests")
+    s.conf.set("spark.sql.shuffle.partitions", "8")
     yield s
     s.stop()
 

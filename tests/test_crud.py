@@ -1,8 +1,10 @@
 """CRUD equivalents of the reference's REST endpoints (S10-S13)."""
 
-import pytest
-from pyspark.sql import functions as F
+import json
 
+import pytest
+
+from pdf_parser_spark.kernels.clauses import serialize_clauses
 from pdf_parser_spark.pipeline import run_extraction
 from pdf_parser_spark.sources import TableIO
 from pdf_parser_spark.sources.crud import (
@@ -48,19 +50,32 @@ def test_lookup_clause_projection(extracted_io):
     assert row2.clause_text is None
 
 
+def _rows(io):
+    return {r.url: r.asDict() for r in read_all(io).collect()}
+
+
 def test_update_clause(spark, extracted_io):
     sha, clauses = _some_pdf_sha(extracted_io)
     key = next(iter(clauses))
-    n = update_clause(
-        spark, extracted_io, sha, key, "edited\ntext value", n_parts=4
-    )
+    before = _rows(extracted_io)
+    n = update_clause(extracted_io, sha, key, "edited\ntext value")
     assert n == 1
     row = lookup_clause(extracted_io, sha, key).first()
     assert row.clause_text == "editedtext value"  # X9 newline strip
-    # other rows untouched
-    total = read_all(extracted_io).count()
-    assert lookup(extracted_io, sha).count() == 1
-    assert total == read_all(extracted_io).count()
+    after = _rows(extracted_io)
+    assert after.keys() == before.keys()
+    (url,) = [u for u, r in after.items() if r["doc_sha"] == sha]
+    edited = after.pop(url)
+    # the edited key keeps its place; the three encodings agree
+    assert list(edited["clauses"]) == list(clauses)
+    assert edited["clauses"] == {**clauses, key: "editedtext value"}
+    assert edited["clauses_json"] == json.dumps(
+        edited["clauses"], ensure_ascii=False
+    )
+    assert edited["extracted_text"] == serialize_clauses(edited["clauses"])
+    # every other row is unchanged
+    before.pop(url)
+    assert after == before
 
 
 def test_truncate(spark, corpus_df, tmp_path):
@@ -68,5 +83,5 @@ def test_truncate(spark, corpus_df, tmp_path):
     run_extraction(spark, corpus_df, root, run_id="t", n_parts=2)
     io = TableIO(spark, root)
     assert read_all(io).count() > 0
-    truncate(spark, io, n_parts=2)
+    truncate(spark, io)
     assert read_all(io).count() == 0

@@ -2,10 +2,14 @@
 sha256 of the package sources and written to the temp dir, never into
 the repository. No Spark needed."""
 
+import glob
 import os
 import shutil
 import tempfile
+import types
 import zipfile
+
+import pytest
 
 from pdf_parser_spark import session
 
@@ -76,3 +80,23 @@ def test_package_zip_keyed_by_sources(tmp_path, monkeypatch):
         os.path.basename(p) for p in {z1, z2, session.package_zip()}
     )
     assert _tree(REPO) == repo_before
+
+
+def test_package_not_on_disk_ships_nothing(tmp_path, monkeypatch):
+    # imported from the --py-files zip: PKG_ROOT is a path inside the zip
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    in_zip = str(tmp_path / "pdf_parser_spark-0.zip" / "pdf_parser_spark")
+    with pytest.raises(FileNotFoundError):
+        session.package_zip(in_zip)
+    empty = tmp_path / "empty" / "pdf_parser_spark"
+    empty.mkdir(parents=True)
+    (empty / "notes.txt").write_text("no sources\n")
+    with pytest.raises(FileNotFoundError):
+        session.package_zip(str(empty))
+    assert not glob.glob(str(tmp_path / "*.zip"))
+
+    added = []
+    sc = types.SimpleNamespace(addPyFile=added.append)
+    monkeypatch.setattr(session, "PKG_ROOT", in_zip)
+    session.ship_package(types.SimpleNamespace(sparkContext=sc))
+    assert added == []

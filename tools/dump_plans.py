@@ -6,6 +6,7 @@ headline operators, annotated — the ".explain and iterate" evidence.
 
 from __future__ import annotations
 
+import os
 import sys
 
 sys.path.insert(0, ".")
@@ -26,7 +27,9 @@ def main() -> None:
     from pdf_parser_spark.functions import exact_dedup
 
     sf = "/root/testdata/sf0.001"
-    spark = get_spark(app_name="dump-plans", master="local[4]", shuffle_partitions=8)
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+    spark = get_spark(app_name="dump-plans")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     spark.sparkContext.setLogLevel("ERROR")
 
     sections = []
