@@ -13,7 +13,9 @@ The launcher's --master/--conf settings win over the engine defaults
     python -m pdf_parser_spark.jobs.extract --input ... --output ... --run-id r1
 
 Re-running with the same --run-id RESUMES: partitions marked done in the
-lineage sidecar are skipped (anti-join J2, SURVEY.md §2.3)."""
+lineage sidecar are skipped (anti-join J2, SURVEY.md §2.3). Wave i of
+--waves N is the partitions with part_id % N == i, so a resume with the
+same --waves runs only the waves the earlier run had left."""
 
 from __future__ import annotations
 
@@ -27,7 +29,10 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--output", required=True, help="output root (tables: extracted, lineage)")
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--n-parts", type=int, default=64, help="resume-shard count")
-    ap.add_argument("--waves", type=int, default=1, help="commit batches")
+    ap.add_argument("--waves", type=int, default=1,
+                    help="commit batches: wave i is the parts with "
+                         "part_id %% waves == i; keep it when resuming "
+                         "to finish the original plan's waves")
     args = ap.parse_args(argv)
 
     from pdf_parser_spark.pipeline import run_extraction

@@ -17,15 +17,21 @@ Scale design notes (the parts that must survive 1000 executors / 100 TB):
   (url, html, part_id). AQE coalesces its buckets by bytes, so the
   extract stage (the only Python in the job) runs as many tasks as the
   wave's bytes need, each paying a Python task's fixed cost.
-- waves: partitions are processed in ``waves`` batches; each wave is
-  committed atomically (dynamic partition overwrite) and its lineage rows
-  appended AFTER the data commit. A crash mid-wave leaves un-marked
+- waves: wave ``i`` of ``waves`` is the parts with ``part_id % waves ==
+  i`` that are not done yet. Like ``part_id`` from ``url``, membership
+  depends only on ``(part_id, waves)``, so a resumed run with the same
+  ``waves`` finishes the remaining waves of the original plan. Each wave
+  is committed atomically (dynamic partition overwrite) and its lineage
+  rows appended AFTER the data commit. A crash mid-wave leaves un-marked
   partitions that the next run fully rewrites — no dup, no loss
   (tests/test_resume.py kills between waves and asserts this).
 - lineage aggregates are computed by reading BACK the written parquet
   (column-pruned: part_id + tiny columns), so metrics reflect what was
   actually committed, not what the stage thought it produced; the
   lineage rows are built from it in the JVM and appended uncollected.
+  The read-back opens only the wave's own part directories, and the
+  job's tables are read with their declared schemas: a wave's checkpoint
+  costs the same whichever wave it is, and no read infers a schema.
 """
 
 from __future__ import annotations
@@ -65,7 +71,7 @@ def done_parts(io: TableIO, run_id: str) -> list[int]:
     if not io.exists(LINEAGE_TABLE):
         return []
     rows = (
-        io.read(LINEAGE_TABLE)
+        io.read(LINEAGE_TABLE, schemas.LINEAGE)
         .filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
         .select("part_id")
         .distinct()
@@ -90,12 +96,14 @@ def extract_wave(salted: DataFrame, wave: list[int], n_parts: int) -> DataFrame:
 def lineage_rows(io: TableIO, wave: list[int], run_id: str, started: float,
                  finished: float, observed: dict[str, float]) -> DataFrame:
     """The wave's ``schemas.LINEAGE`` rows, one per committed part: the
-    read-back aggregate of ``extracted`` plus literal columns, planned in
-    the JVM. ``metrics`` holds the wall time and the ``observed`` ones."""
+    read-back aggregate of the wave's partitions of ``extracted`` plus
+    literal columns, planned in the JVM. A part with no committed rows
+    has no partition and gets no row. ``metrics`` holds the wall time and
+    the ``observed`` ones."""
     metrics = {"wall_sec": finished - started, **observed}
     committed = (
-        io.read(EXTRACTED_TABLE)
-        .filter(F.col("part_id").isin(wave))
+        io.read_partitions(EXTRACTED_TABLE, schemas.EXTRACTED_WITH_PART,
+                           "part_id", wave)
         .groupBy("part_id")
         .agg(
             F.count("*").alias("n_docs"),
@@ -132,18 +140,23 @@ def run_extraction(
 ) -> RunStats:
     """Run (or resume) the extraction job.
 
-    ``waves``: how many commit batches to split the remaining partitions
-    into (1 = single atomic job, max throughput; >1 = incremental
-    checkpoints). ``max_waves`` stops early after that many waves — the
-    test harness uses it to simulate a mid-run kill.
+    ``waves``: how many commit batches the parts fall into (1 = single
+    atomic job, max throughput; >1 = incremental checkpoints). Wave ``i``
+    is the not-yet-done parts with ``part_id % waves == i``, so a resume
+    with the same ``waves`` runs only the original plan's remaining
+    waves. ``max_waves`` stops early after that many waves — the test
+    harness uses it to simulate a mid-run kill.
     """
     from .session import tune_for_fat_binary_scan
 
     tune_for_fat_binary_scan(spark)
     io = TableIO(spark, out_root)
     already = set(done_parts(io, run_id))
-    todo = [p for p in range(n_parts) if p not in already]
-    wave_lists = [todo[i::waves] for i in range(waves) if todo[i::waves]]
+    wave_lists = [
+        [p for p in range(i, n_parts, waves) if p not in already]
+        for i in range(waves)
+    ]
+    wave_lists = [w for w in wave_lists if w]
     docs_total = 0
     waves_run = 0
     salted = with_part_id(input_df, n_parts)

@@ -49,6 +49,12 @@ EXTRACTED = T.StructType(
     ]
 )
 
+# the extracted table: the stage's rows plus their resume shard, the
+# table's partition column (read back from its ``part_id=`` directories)
+EXTRACTED_WITH_PART = T.StructType(
+    list(EXTRACTED.fields) + [T.StructField("part_id", T.IntegerType(), True)]
+)
+
 # per-partition lineage/metrics sidecar (north rule checkpoint-resume)
 LINEAGE = T.StructType(
     [

@@ -1,11 +1,15 @@
 """SparkSession factory: one recipe of engine defaults, each applied only
 where the launcher left the key unset.
 
-``spark-submit --master/--conf/--driver-memory`` therefore win over every
-default below. In a plain ``python`` launch, ``SPARK_GRAFT_CPUS=N`` picks
-``local[N]``; with neither, the master is ``local[*]``. Callers that need
-a fixed runtime value (tests, plan dumps, scaling runs) set it on the
-built session with ``spark.conf.set``.
+``spark-submit --master/--conf`` therefore win over every default below.
+In a plain ``python`` launch, ``SPARK_GRAFT_CPUS=N`` picks ``local[N]``;
+with neither, the master is ``local[*]``. The driver's heap is fixed when
+its JVM starts, so the recipe's ``spark.driver.memory`` applies only to a
+launch whose JVM ``get_spark`` starts itself (a plain ``python`` launch);
+under spark-submit that is ``--driver-memory``'s job. A live session is
+returned as it is: callers that need a fixed runtime value (tests, plan
+dumps, scaling runs) set it on the built session with ``spark.conf.set``,
+and a later ``get_spark`` keeps it.
 
 The defaults are chosen for the 100 TB design point and merely *work* on
 one machine (SURVEY.md §4):
@@ -54,8 +58,8 @@ ENGINE_DEFAULTS = {
     # fat binary rows: keep scan partitions small enough to fit
     "spark.sql.files.maxPartitionBytes": "64m",
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
-    "spark.driver.memory": "8g",
 }
+DRIVER_MEMORY = "8g"
 
 
 def tune_for_fat_binary_scan(spark: SparkSession) -> None:
@@ -70,6 +74,10 @@ def tune_for_fat_binary_scan(spark: SparkSession) -> None:
 
 
 def get_spark(app_name: str = "pdf-parser-spark") -> SparkSession:
+    live = SparkSession.getActiveSession()
+    if live is not None:
+        ship_package(live)
+        return live
     if "PYSPARK_GATEWAY_PORT" in os.environ:
         # under spark-submit its settings live in the JVM it started;
         # SparkConf() sees them only once connected to that gateway. A
@@ -77,12 +85,16 @@ def get_spark(app_name: str = "pdf-parser-spark") -> SparkSession:
         # before spark.driver.memory applies
         SparkContext._ensure_initialized()  # noqa: SLF001
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    conf = SparkConf()
-    for key, value in {
+    recipe = {
         "spark.app.name": app_name,
         "spark.master": f"local[{cpus}]" if cpus else "local[*]",
         **ENGINE_DEFAULTS,
-    }.items():
+    }
+    if SparkContext._gateway is None:  # noqa: SLF001
+        # the JVM starts below, so its heap can still be sized
+        recipe["spark.driver.memory"] = DRIVER_MEMORY
+    conf = SparkConf()
+    for key, value in recipe.items():
         conf.setIfMissing(key, value)
     spark = SparkSession.builder.config(conf=conf).getOrCreate()
     ship_package(spark)

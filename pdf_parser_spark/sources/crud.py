@@ -19,21 +19,10 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import schemas
 from ..kernels.clauses import serialize_clauses
 from ..pipeline import EXTRACTED_TABLE
 from .io import TableIO
-
-
-def _extracted_schema_with_part():
-    from pyspark.sql import types as T
-
-    from .. import schemas
-
-    # StructType.add mutates in place — never call it on the shared schema
-    return T.StructType(
-        list(schemas.EXTRACTED.fields)
-        + [T.StructField("part_id", T.IntegerType(), True)]
-    )
 
 
 def read_all(io: TableIO) -> DataFrame:
@@ -41,7 +30,7 @@ def read_all(io: TableIO) -> DataFrame:
         return io.read(EXTRACTED_TABLE)
     except Exception:
         # truncated table: directory holds no data files -> explicit schema
-        return io.spark.createDataFrame([], _extracted_schema_with_part())
+        return io.spark.createDataFrame([], schemas.EXTRACTED_WITH_PART)
 
 
 def lookup(io: TableIO, doc_sha: str) -> DataFrame:

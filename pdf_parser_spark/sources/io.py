@@ -25,6 +25,8 @@ SAME scenario through both a semantic stub and the parquet path).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -52,20 +54,51 @@ class TableIO:
     def _path(self, name: str) -> str:
         return f"{self.root}/{name}"
 
+    def _fs(self, path: str):
+        """The Hadoop FileSystem and Path of ``path`` (any scheme the
+        cluster can reach, not just file://)."""
+        sc = self.spark.sparkContext
+        hpath = sc._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+        return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath  # noqa: SLF001
+
     def exists(self, name: str) -> bool:
         if self.iceberg:
             return self.spark.catalog.tableExists(self._path(name))
-        # parquet: probe the directory through Hadoop FS (works for any
-        # scheme the cluster can reach, not just file://)
-        sc = self.spark.sparkContext
-        hpath = sc._jvm.org.apache.hadoop.fs.Path(self._path(name))  # noqa: SLF001
-        fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())  # noqa: SLF001
+        fs, hpath = self._fs(self._path(name))
         return fs.exists(hpath)
 
-    def read(self, name: str) -> DataFrame:
+    def read(self, name: str, schema: StructType | None = None) -> DataFrame:
+        """The whole table. A parquet table read with its declared
+        ``schema`` skips the schema-inference job; an Iceberg table
+        carries its own."""
         if self.iceberg:
             return self.spark.read.table(self._path(name))
-        return self.spark.read.parquet(self._path(name))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._path(name))
+
+    def read_partitions(self, name: str, schema: StructType, col: str,
+                        values: list[int]) -> DataFrame:
+        """The rows of ``name`` whose partition column ``col`` is in
+        ``values``. Iceberg filters the table on ``col``. Parquet reads
+        only the ``col=<v>`` directories that one listing of the table
+        root shows, as explicit paths under ``basePath`` with the declared
+        ``schema``: no other partition directory is listed, and a value
+        with no committed rows (no directory) reads as no rows."""
+        if self.iceberg:
+            return self.spark.read.table(self._path(name)).filter(
+                F.col(col).isin(values))
+        root = self._path(name)
+        fs, hroot = self._fs(root)
+        wanted = {f"{col}={v}" for v in values}
+        paths = [
+            f"{root}/{st.getPath().getName()}"
+            for st in (fs.listStatus(hroot) if fs.exists(hroot) else [])
+            if st.isDirectory() and st.getPath().getName() in wanted
+        ]
+        return (
+            self.spark.read.schema(schema).option("basePath", root)
+            .parquet(*paths)
+        )
 
     def append(self, df: DataFrame, name: str) -> None:
         if self.iceberg:

@@ -64,6 +64,30 @@ def test_iceberg_branch_dispatch(monkeypatch):
     ]
 
 
+class _FilterRecordingDF:
+    def __init__(self, calls, name):
+        self.calls = calls
+        self.name = name
+
+    def filter(self, cond):
+        self.calls.append(("filter", self.name, str(cond)))
+        return self
+
+
+def test_iceberg_partition_read_filters(monkeypatch, spark):
+    """On Iceberg a partition read is a filter on the partition column
+    (the catalog prunes); there are no directories to pick."""
+    calls = []
+    monkeypatch.setattr(tio, "_iceberg_available", lambda spark: True)
+    fake = _FakeSpark(calls)
+    fake.read.table = lambda name: _FilterRecordingDF(calls, name)
+    t = tio.TableIO(fake, "cat.db")
+    t.read_partitions("extracted", None, "part_id", [1, 3])
+    ((op, name, cond),) = calls
+    assert (op, name) == ("filter", "cat.db/extracted")
+    assert "part_id" in cond and "IN" in cond.upper()
+
+
 class _SemanticTable:
     """Behavioral stand-in for an Iceberg table partitioned on one
     column: append adds rows; overwritePartitions replaces EXACTLY the

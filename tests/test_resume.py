@@ -3,13 +3,16 @@ layer 3): kill after k waves, re-run, assert completed partitions are not
 recomputed and the final output has no duplicates and no losses."""
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
+from pdf_parser_spark import schemas
 from pdf_parser_spark.pipeline import (
     EXTRACTED_TABLE,
     LINEAGE_TABLE,
     done_parts,
+    lineage_rows,
     run_extraction,
 )
 from pdf_parser_spark.sources import TableIO
@@ -98,8 +101,6 @@ def test_rerun_after_unmarked_partition_is_idempotent(spark, corpus_df, tmp_path
     lin = io.read(LINEAGE_TABLE).filter("part_id <> 1").collect()
     import shutil
 
-    from pdf_parser_spark import schemas
-
     shutil.rmtree(os.path.join(out_root, LINEAGE_TABLE))
     io.append(spark.createDataFrame(lin, schemas.LINEAGE), LINEAGE_TABLE)
 
@@ -110,3 +111,103 @@ def test_rerun_after_unmarked_partition_is_idempotent(spark, corpus_df, tmp_path
     n_input = corpus_df.count()
     assert result.count() == n_input
     assert result.select("url").distinct().count() == n_input
+
+
+def test_resume_finishes_the_planned_waves(spark, corpus_df, tmp_path):
+    """Wave i is the parts with part_id % waves == i: a run killed after
+    wave 0 and resumed with the same ``waves`` runs wave 1 alone."""
+    out_root = str(tmp_path / "out3")
+    io = TableIO(spark, out_root)
+    s1 = run_extraction(
+        spark, corpus_df, out_root, run_id="r3", n_parts=8, waves=2,
+        max_waves=1,
+    )
+    assert s1.waves_run == 1
+    done1 = done_parts(io, "r3")
+    assert done1 == [0, 2, 4, 6]
+
+    s2 = run_extraction(
+        spark, corpus_df, out_root, run_id="r3", n_parts=8, waves=2,
+    )
+    assert s2.waves_run == 1
+    assert (s2.parts_done_before, s2.parts_processed) == (4, 4)
+    resumed = sorted(set(done_parts(io, "r3")) - set(done1))
+    assert resumed == [1, 3, 5, 7]
+    assert s1.docs_processed + s2.docs_processed == corpus_df.count()
+
+
+def _part_dirs(out_root: str) -> set[int]:
+    table = os.path.join(out_root, EXTRACTED_TABLE)
+    return {
+        int(d.split("=", 1)[1]) for d in os.listdir(table)
+        if d.startswith("part_id=")
+    }
+
+
+def test_lineage_read_back_scans_only_its_wave(spark, corpus_df, tmp_path):
+    out_root = str(tmp_path / "out4")
+    run_extraction(spark, corpus_df, out_root, run_id="r4", n_parts=64)
+    io = TableIO(spark, out_root)
+    committed = _part_dirs(out_root)
+    empty = sorted(set(range(64)) - committed)
+    for wave in ([p for p in range(64) if p % 2 == 1],
+                 [empty[0], min(committed), empty[-1]]):
+        assert set(wave) - committed  # holds a part with no rows
+        assert set(wave) & committed
+        lineage = lineage_rows(io, wave, "r4", 0.0, 1.0, {})
+        files = lineage.inputFiles()
+        assert files
+        for f in files:
+            m = re.search(r"/part_id=(\d+)/[^/]+$", f)
+            assert m and int(m.group(1)) in wave, f
+        got = sorted(r.part_id for r in lineage.collect())
+        assert got == sorted(set(wave) & committed)
+
+
+def _listing_jobs(sc, group: str) -> list[str]:
+    """Descriptions of the group's jobs that listed leaf files (Spark's
+    parallel partition discovery)."""
+    jsc = sc._jsc.sc()  # noqa: SLF001
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    out = []
+    for i in range(jobs.length()):
+        job = jobs.apply(i)
+        g, d = job.jobGroup(), job.description()
+        if g.isDefined() and g.get() == group and d.isDefined() \
+                and d.get().startswith("Listing leaf files"):
+            out.append(d.get())
+    return out
+
+
+def test_wave_checkpoints_list_no_leaf_files(spark, corpus_df, tmp_path):
+    """A 2-wave kill-and-resume over 64 parts runs no parallel listing of
+    the extracted table: each wave's read-back opens at most its own 32
+    part directories."""
+    out_root = str(tmp_path / "out5")
+    sc = spark.sparkContext
+    group = f"listing-{tmp_path.name}"
+    sc.setJobGroup(group, "kill and resume")
+    try:
+        run_extraction(
+            spark, corpus_df, out_root, run_id="r5", n_parts=64, waves=2,
+            max_waves=1,
+        )
+        run_extraction(
+            spark, corpus_df, out_root, run_id="r5", n_parts=64, waves=2,
+        )
+    finally:
+        sc.setJobGroup(None, None)
+    assert _listing_jobs(sc, group) == []
+
+    # the probe sees a listing when one runs: the whole table has more
+    # part directories than the parallel-discovery threshold
+    assert len(_part_dirs(out_root)) > 32
+    control = f"{group}-whole"
+    sc.setJobGroup(control, "whole-table read")
+    try:
+        TableIO(spark, out_root).read(
+            EXTRACTED_TABLE, schemas.EXTRACTED_WITH_PART).inputFiles()
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(_listing_jobs(sc, control)) == 1

@@ -1,6 +1,7 @@
 """The packaged extraction job under spark-submit: the launcher's
-``--master`` and ``--conf`` win over the session defaults, and the job
-imports the package from the ``--py-files`` zip alone."""
+``--master`` and ``--conf`` win over the session defaults, the recipe's
+driver memory is left to ``--driver-memory``, and the job imports the
+package from the ``--py-files`` zip alone."""
 
 import glob
 import json
@@ -65,3 +66,6 @@ def test_spark_submit_launcher_settings_win(spark, corpus_df, corpus_rows, tmp_p
     props = env["Spark Properties"]
     assert props["spark.master"] == "local[2]"
     assert props["spark.sql.shuffle.partitions"] == "3"
+    # the driver JVM was started by spark-submit with its own heap: the
+    # recipe's driver memory could not apply and is not recorded
+    assert "spark.driver.memory" not in props
