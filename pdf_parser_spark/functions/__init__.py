@@ -1,8 +1,10 @@
 """Training-data pipeline operators over document/embedding tables:
-deduplication (exact, n-gram Jaccard, MinHash+LSH, SimHash), similarity
-search (cosine top-k: brute force, SRP-LSH, IVF, int8, product
-quantization, and persisted LSH/PQ indexes), and text analysis (token
-stats, quality scoring, language id, fingerprinting).
+deduplication (exact; n-gram Jaccard, MinHash+LSH and incremental
+near-dup, which share one exact-Jaccard verify; SimHash; verbatim spans,
+which share one token stream), similarity search (cosine top-k: brute
+force, SRP-LSH, IVF, int8, product quantization, and persisted LSH/PQ
+indexes), and text analysis (token stats, quality scoring, language id,
+fingerprinting).
 
 Everything here is built from JVM-side pyspark.sql.functions expressions
 (plus Arrow-batched numpy kernels where megabyte expression plans would
@@ -25,7 +27,6 @@ from .dedup import (  # noqa: F401
     hashed_bow_embedding,
     incremental_dedup,
     minhash_lsh_candidates,
-    minhash_signatures,
     ngram_jaccard_pairs,
     shingle,
     simhash64,

@@ -3,6 +3,9 @@
 All pure DataFrame expressions (JVM-side, whole-stage-codegen friendly).
 Scale notes per operator are in the docstrings — these are the operators a
 10^12-document training-data pipeline runs before anything else.
+The shingle near-dup operators build only their own candidate pairs and
+share one exact-Jaccard verify (``_verify``); the span operators share one
+token stream (``_tokens``).
 """
 
 from __future__ import annotations
@@ -40,8 +43,6 @@ def shingle(
     slice — is interpreted in Spark and measured ~2x slower despite being
     shuffle-free; the shuffle here carries token-sized rows keyed by
     doc_id and is cheap.)"""
-    from pyspark.sql import Window
-
     words = F.split(F.trim(F.col(text_col)), " ")
     tok = df.select(
         F.col(id_col).alias("doc_id"),
@@ -60,6 +61,42 @@ def shingle(
         .select("doc_id", "shingle")
         .distinct()
     )
+
+
+def _jaccard(
+    inter: DataFrame, sizes_a: DataFrame, sizes_b: DataFrame,
+    a: str, b: str, threshold: float,
+) -> DataFrame:
+    """Pairs ``(a, b, n_inter)`` with their exact ``jaccard`` >= threshold:
+    the union by inclusion-exclusion from each side's per-doc shingle
+    counts ``sizes_*`` (doc_id, count). The size joins carry no broadcast
+    hint — AQE picks the join from the sizes' runtime bytes."""
+    n_i = F.col("n_inter")
+    return (
+        inter.join(sizes_a.toDF(a, "n_a"), a)
+        .join(sizes_b.toDF(b, "n_b"), b)
+        .withColumn("jaccard", n_i / (F.col("n_a") + F.col("n_b") - n_i))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _verify(
+    cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame,
+    a: str, b: str, threshold: float,
+) -> DataFrame:
+    """Exact n-gram Jaccard verify of candidate pairs ``cand`` (a, b):
+    the shingles each pair shares, counted by joining ``sh_a`` on ``a``
+    and ``sh_b`` on (``b``, shingle). The verify touches candidate pairs
+    only, never all pairs."""
+    inter = (
+        sh_a.withColumnRenamed("doc_id", a)
+        .join(cand, a)
+        .join(sh_b.select(F.col("doc_id").alias(b), "shingle"), [b, "shingle"])
+        .groupBy(a, b)
+        .agg(F.count("*").alias("n_inter"))
+    )
+    sizes_a, sizes_b = (sh.groupBy("doc_id").count() for sh in (sh_a, sh_b))
+    return _jaccard(inter, sizes_a, sizes_b, a, b, threshold)
 
 
 def ngram_jaccard_pairs(
@@ -89,7 +126,6 @@ def ngram_jaccard_pairs(
         .select("shingle")
     )
     sh = sh.join(rare, "shingle", "left_semi")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
@@ -100,49 +136,31 @@ def ngram_jaccard_pairs(
         )
         .agg(F.count("*").alias("n_inter"))
     )
-    sz_a = sizes.select(
-        F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a")
-    )
-    sz_b = sizes.select(
-        F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b")
-    )
-    return (
-        inter.join(F.broadcast(sz_a), "id_a")
-        .join(F.broadcast(sz_b), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "n_inter", "jaccard")
+    sizes = sh.groupBy("doc_id").count()
+    return _jaccard(inter, sizes, sizes, "id_a", "id_b", threshold).select(
+        "id_a", "id_b", "n_inter", "jaccard"
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    num_perm: int = 16,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_fn: str = "xx",
-) -> DataFrame:
-    """MinHash signatures: num_perm permutations simulated as
-    hash64(perm_salt || shingle); signature = per-doc min per
-    permutation. One explode + one groupBy; all hashing JVM-side.
-    ``hash_fn="md5"`` makes signatures DuckDB-reproducible (contract
-    oracle); "xx" (xxhash64) is the fast default.
+def _lsh_side(
+    df: DataFrame, num_perm: int, bands: int, n: int,
+    text_col: str, id_col: str, hash_fn: str,
+) -> tuple[DataFrame, DataFrame]:
+    """One side of a MinHash-LSH join: its shingles, eagerly checkpointed
+    (they feed the signatures AND the exact verify — left lazy, the
+    tokenize+shingle pass runs once per consumer), and its
+    (doc_id, band, band_hash) bucket rows. Both LSH operators route here,
+    so their bucket spaces can never fork (CLAUDE.md: never fork logic).
 
-    Scale: shuffle carries (doc_id, 8*num_perm bytes) — constant per doc
-    regardless of document size. num_perm=16 with 4-row bands gives the
-    standard S-curve around J~0.5 (b=4, r=4)."""
-    sh = shingle(df, n, text_col, id_col)
-    return _signatures_from_shingles(sh, num_perm, hash_fn)
-
-
-def _signatures_from_shingles(
-    sh: DataFrame, num_perm: int, hash_fn: str
-) -> DataFrame:
+    Signatures: num_perm permutations simulated as hash64(perm_salt ||
+    shingle); signature = per-doc min per permutation. One explode + one
+    groupBy; all hashing JVM-side. ``hash_fn="md5"`` makes signatures
+    DuckDB-reproducible (contract oracle); "xx" (xxhash64) is the fast
+    default. Scale: the signature shuffle carries (doc_id, 8*num_perm
+    bytes) — constant per doc regardless of document size. num_perm=16
+    with 4-row bands gives the standard S-curve around J~0.5 (b=4,
+    r=4)."""
+    sh = shingle(df, n, text_col, id_col).localCheckpoint(eager=True)
     if hash_fn == "md5":
         # Kirsch-Mitzenmacher two-hash family: ONE md5 per shingle,
         # perm_i = h1 + i*h2 with h1 52-bit / h2 40-bit slices (sum
@@ -150,7 +168,7 @@ def _signatures_from_shingles(
         # Spark and DuckDB both error on bigint overflow). 16 md5
         # calls per shingle -> 1 measured this as the minhash hot cost.
         md5 = F.md5(F.col("shingle"))
-        sh = sh.select(
+        hashed = sh.select(
             "doc_id",
             F.conv(F.substring(md5, 1, 13), 16, 10)
             .cast("long")
@@ -164,23 +182,14 @@ def _signatures_from_shingles(
             for i in range(num_perm)
         ]
     else:
+        hashed = sh
         aggs = [
             F.min(
                 hash64(F.concat(F.lit(f"p{i}:"), F.col("shingle")), hash_fn)
             ).alias(f"mh_{i}")
             for i in range(num_perm)
         ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
-def _band_buckets(
-    sig: DataFrame, num_perm: int, bands: int, hash_fn: str
-) -> DataFrame:
-    """Signature table -> (doc_id, band, band_hash) bucket rows. The
-    ONE place band hashing is defined — minhash_lsh_candidates (batch)
-    and incremental_dedup (cross-snapshot) both route here, so a change
-    to the band construction can never fork their bucket spaces
-    (CLAUDE.md: never fork logic)."""
+    sig = hashed.groupBy("doc_id").agg(*aggs)
     rows_per_band = num_perm // bands
     band_cols = []
     for b in range(bands):
@@ -194,13 +203,14 @@ def _band_buckets(
                 hash64_multi(cols, hash_fn).alias("band_hash"),
             )
         )
-    return sig.select(
+    buckets = sig.select(
         "doc_id", F.explode(F.array(*band_cols)).alias("bk")
     ).select(
         "doc_id",
         F.col("bk.band").alias("band"),
         F.col("bk.band_hash").alias("band_hash"),
     )
+    return sh, buckets
 
 
 def minhash_lsh_candidates(
@@ -219,11 +229,7 @@ def minhash_lsh_candidates(
     Scale: candidates come from groupBy(band, band_hash) buckets —
     quadratic blowup is bounded per bucket, and the verify join touches
     only candidate pairs, never all pairs."""
-    # one tokenize+shingle pass, shared by the signature build AND the
-    # exact-verify join below (left lazy, it executes three times)
-    sh = shingle(df, n, text_col, id_col).localCheckpoint(eager=True)
-    sig = _signatures_from_shingles(sh, num_perm, hash_fn)
-    buckets = _band_buckets(sig, num_perm, bands, hash_fn)
+    sh, buckets = _lsh_side(df, num_perm, bands, n, text_col, id_col, hash_fn)
     a = buckets.alias("a")
     b = buckets.alias("b")
     cand = (
@@ -234,42 +240,9 @@ def minhash_lsh_candidates(
         )
         .distinct()
     )
-    # exact verify on candidates only (sh is the checkpointed shingle
-    # relation from above — no recomputation)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    inter = (
-        sh.withColumnRenamed("doc_id", "id_a")
-        .join(cand, "id_a")
-        .join(
-            sh.select(
-                F.col("doc_id").alias("id_b"), F.col("shingle")
-            ),
-            ["id_b", "shingle"],
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_inter"))
+    return _verify(cand, sh, sh, "id_a", "id_b", threshold).select(
+        "id_a", "id_b", "jaccard"
     )
-    out = (
-        inter.join(
-            F.broadcast(
-                sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a"))
-            ),
-            "id_a",
-        )
-        .join(
-            F.broadcast(
-                sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b"))
-            ),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return out
 
 
 def simhash_near_dup(
@@ -694,6 +667,22 @@ def simhash64(
     return agg.select("doc_id", sim.alias("simhash"))
 
 
+def _tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(doc_id, pos, w) rows: the space-split tokens of each document,
+    empty tokens dropped BEFORE numbering, so ``pos`` counts real tokens
+    only and both engines number the same positions. The one token
+    stream of the span operators (gram hashing and passage cutting)."""
+    words = F.split(F.trim(F.col(text_col)), " ")
+    tok = df.select(
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(words).alias("p0", "w"),
+    ).filter(F.col("w") != "")
+    w0 = Window.partitionBy("doc_id").orderBy("p0")
+    return tok.select(
+        "doc_id", (F.row_number().over(w0) - 1).alias("pos"), "w"
+    )
+
+
 def _token_grams(
     df: DataFrame,
     min_len: int,
@@ -702,20 +691,10 @@ def _token_grams(
     hash_fn: str,
 ) -> DataFrame:
     """(doc_id, pos, h) rows: one hash per ``min_len``-token gram over
-    the empty-filtered, re-indexed token stream — the shared front end
-    of duplicate_passages and decontaminate (window lead, one doc_id
-    shuffle; the winnow_fingerprints shape)."""
-    from pyspark.sql import Window
-
-    words = F.split(F.trim(F.col(text_col)), " ")
-    tok0 = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(words).alias("p0", "w"),
-    ).filter(F.col("w") != "")
-    w0 = Window.partitionBy("doc_id").orderBy("p0")
-    tok = tok0.select(
-        "doc_id", (F.row_number().over(w0) - 1).alias("pos"), "w"
-    )
+    the ``_tokens`` stream — the shared front end of duplicate_passages
+    and decontaminate (window lead, one doc_id shuffle; the
+    winnow_fingerprints shape)."""
+    tok = _tokens(df, text_col, id_col)
     wl = Window.partitionBy("doc_id").orderBy("pos")
     leads = [F.lead("w", j).over(wl) for j in range(1, min_len)]
     return (
@@ -735,8 +714,6 @@ def _merge_islands(
 ) -> DataFrame:
     """Gaps-and-islands: seed matches on one (a, b, pos_a - pos_b)
     diagonal with consecutive pos_a merge into one maximal span."""
-    from pyspark.sql import Window
-
     wi = Window.partitionBy(a_id, b_id, "d").orderBy("pos_a")
     isl = seeds.withColumn("grp", F.col("pos_a") - F.row_number().over(wi))
     return (
@@ -850,8 +827,6 @@ def cut_duplicate_passages(
     is output-sized; the groupBy array sort/join runs once per CUT
     document — the only higher-order functions in the plan, on
     cut-slice data, never in the full-corpus hot path."""
-    from pyspark.sql import Window
-
     if spans is None:
         spans = duplicate_passages(
             df, min_len, max_gram_df, text_col, id_col, hash_fn
@@ -873,15 +848,7 @@ def cut_duplicate_passages(
         cut_ids.withColumnRenamed("doc_id", id_col), on=id_col,
         how="left_semi",
     )
-    words = F.split(F.trim(F.col(text_col)), " ")
-    tok0 = touched.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(words).alias("p0", "w"),
-    ).filter(F.col("w") != "")
-    w0 = Window.partitionBy("doc_id").orderBy("p0")
-    tok = tok0.select(
-        "doc_id", (F.row_number().over(w0) - 1).cast("long").alias("pos"), "w"
-    )
+    tok = _tokens(touched, text_col, id_col)
     # ONE definition of the collapsed-text projection and its spaces+1
     # token count, used by BOTH branches below — the pass-through's
     # byte-equality with the rebuild depends on these staying in
@@ -1011,18 +978,17 @@ def incremental_dedup(
     later dump against it — the same pay-the-shuffle-once-at-write move
     as sources/io.write_bucketed; bucketing both tables by band_hash
     makes the candidate join exchange-free). The verify join touches
-    candidate pairs only, with both per-doc size relations broadcast.
+    candidate pairs only; AQE picks the join for each side's per-doc
+    size relation from its runtime bytes.
 
     Returns (new_id, ref_id, jaccard) with jaccard >= threshold.
     """
-    def _prep(df: DataFrame):
-        sh = shingle(df, n, text_col, id_col).localCheckpoint(eager=True)
-        sig = _signatures_from_shingles(sh, num_perm, hash_fn)
-        return sh, _band_buckets(sig, num_perm, bands, hash_fn)
-
-    sh_new, bk_new = _prep(new_df)
-    sh_ref, bk_ref = _prep(ref_df)
-
+    sh_new, bk_new = _lsh_side(
+        new_df, num_perm, bands, n, text_col, id_col, hash_fn
+    )
+    sh_ref, bk_ref = _lsh_side(
+        ref_df, num_perm, bands, n, text_col, id_col, hash_fn
+    )
     cand = (
         bk_new.withColumnRenamed("doc_id", "new_id")
         .join(
@@ -1032,55 +998,8 @@ def incremental_dedup(
         .select("new_id", "ref_id")
         .distinct()
     )
-    # size relations restricted to candidate docs BEFORE the broadcast:
-    # the full ref corpus has O(corpus) per-doc sizes, the candidate set
-    # is bucket-bounded — only the latter is broadcastable at 100 TB
-    sizes_new = (
-        sh_new.join(
-            cand.select(F.col("new_id").alias("doc_id")).distinct(),
-            "doc_id",
-            "left_semi",
-        )
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_a"))
-    )
-    sizes_ref = (
-        sh_ref.join(
-            cand.select(F.col("ref_id").alias("doc_id")).distinct(),
-            "doc_id",
-            "left_semi",
-        )
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_b"))
-    )
-    inter = (
-        sh_new.withColumnRenamed("doc_id", "new_id")
-        .join(cand, "new_id")
-        .join(
-            sh_ref.select(
-                F.col("doc_id").alias("ref_id"), F.col("shingle")
-            ),
-            ["ref_id", "shingle"],
-        )
-        .groupBy("new_id", "ref_id")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    return (
-        inter.join(
-            F.broadcast(sizes_new.withColumnRenamed("doc_id", "new_id")),
-            "new_id",
-        )
-        .join(
-            F.broadcast(sizes_ref.withColumnRenamed("doc_id", "ref_id")),
-            "ref_id",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_inter")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "ref_id", "jaccard")
+    return _verify(cand, sh_new, sh_ref, "new_id", "ref_id", threshold).select(
+        "new_id", "ref_id", "jaccard"
     )
 
 
@@ -1166,8 +1085,6 @@ def global_dup_spans(
     covered span, positions in empty-filtered token coordinates, both
     bounds inclusive.
     """
-    from pyspark.sql import Window
-
     grams = _token_grams(df, min_len, text_col, id_col, hash_fn)
     dup_h = (
         grams.groupBy("h")

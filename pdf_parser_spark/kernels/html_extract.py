@@ -66,10 +66,6 @@ class Block:
 class HtmlResult:
     text: str
     title: str
-    n_blocks: int
-    n_content_blocks: int
-    total_chars: int
-    anchor_chars: int
 
 
 class _Extractor(HTMLParser):
@@ -133,21 +129,14 @@ def extract_html(blob: bytes) -> HtmlResult:
     p.close()
 
     content: list[str] = []
-    n_blocks = 0
-    total_chars = 0
-    anchor_chars = 0
     for blk in p.blocks:
-        norm = _norm(blk.text)
-        if not norm:
-            continue
-        n_blocks += 1
-        total_chars += len(norm)
-        anchor_chars += min(blk.anchor_len, len(norm))
         if blk.boiler:
             continue
-        density = blk.anchor_len / max(1, len(blk.text.strip()))
+        raw = blk.text
+        density = blk.anchor_len / max(1, len(raw.strip()))
         if density > LINK_DENSITY_MAX:
             continue
+        norm = _norm(raw)
         if len(norm) < MIN_BLOCK_CHARS:
             continue
         content.append(norm)
@@ -155,8 +144,4 @@ def extract_html(blob: bytes) -> HtmlResult:
     return HtmlResult(
         text="\n\n".join(content),
         title=_norm("".join(p.title_parts)),
-        n_blocks=n_blocks,
-        n_content_blocks=len(content),
-        total_chars=total_chars,
-        anchor_chars=anchor_chars,
     )

@@ -29,6 +29,9 @@ Scale design notes (the parts that must survive 1000 executors / 100 TB):
   (column-pruned: part_id + tiny columns), so metrics reflect what was
   actually committed, not what the stage thought it produced; the
   lineage rows are built from it in the JVM and appended uncollected.
+  Every part of the wave gets a row: a part with no input rows has no
+  partition directory and is marked done with 0 docs, so a resume does
+  not run its wave again.
   The read-back opens only the wave's own part directories, and the
   job's tables are read with their declared schemas: a wave's checkpoint
   costs the same whichever wave it is, and no read infers a schema.
@@ -95,12 +98,14 @@ def extract_wave(salted: DataFrame, wave: list[int], n_parts: int) -> DataFrame:
 
 def lineage_rows(io: TableIO, wave: list[int], run_id: str, started: float,
                  finished: float, observed: dict[str, float]) -> DataFrame:
-    """The wave's ``schemas.LINEAGE`` rows, one per committed part: the
+    """The wave's ``schemas.LINEAGE`` rows, one per part of the wave: the
     read-back aggregate of the wave's partitions of ``extracted`` plus
-    literal columns, planned in the JVM. A part with no committed rows
-    has no partition and gets no row. ``metrics`` holds the wall time and
-    the ``observed`` ones."""
+    literal columns, planned in the JVM. A part with no committed rows has
+    no partition; its row reads 0 docs, so it is done too and a resume
+    never runs it again. ``metrics`` holds the wall time and the
+    ``observed`` ones."""
     metrics = {"wall_sec": finished - started, **observed}
+    parts = io.spark.range(1).select(F.explode(F.lit(wave)).alias("part_id"))
     committed = (
         io.read_partitions(EXTRACTED_TABLE, schemas.EXTRACTED_WITH_PART,
                            "part_id", wave)
@@ -123,7 +128,7 @@ def lineage_rows(io: TableIO, wave: list[int], run_id: str, started: float,
     }
     # cast to the declared schema: it also widens the map of non-null
     # literals to the table's nullable-valued map type
-    return committed.select(*[
+    return parts.join(committed, "part_id", "left").fillna(0).select(*[
         cols.get(f.name, F.col(f.name)).cast(f.dataType).alias(f.name)
         for f in schemas.LINEAGE
     ])

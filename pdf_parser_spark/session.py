@@ -12,9 +12,15 @@ dumps, scaling runs) set it on the built session with ``spark.conf.set``,
 and a later ``get_spark`` keeps it.
 
 The defaults are chosen for the 100 TB design point and merely *work* on
-one machine (SURVEY.md §4):
+one machine (SURVEY.md §4). The recipe holds only values that differ from
+Spark's own defaults. The engine also relies on two Spark defaults that it
+does not restate: AQE on (runtime shuffle coalescing + skew-join
+splitting) and python worker reuse (the UDF stages are called per batch,
+fork cost must amortize). Every partitioned write sets its own overwrite
+mode (``TableIO.overwrite_partitions`` dynamic, ``crud.truncate``
+static), so no session-wide ``partitionOverwriteMode`` is needed. The
+recipe:
 
-- AQE on: runtime shuffle coalescing + skew-join splitting;
 - Arrow on + BYTE-capped record batches: pages are MB-scale fat rows;
   round 1 fixed the batch at 8 ROWS to keep JVM-side ArrowWriter
   vectors small enough to dodge humongous-allocation GC churn (measured:
@@ -25,8 +31,6 @@ one machine (SURVEY.md §4):
   batch thousands at a time instead of paying a Python round-trip every
   8 rows. Verified: 64 KB rows -> 4-row batches under a 256 KB cap,
   3-byte rows -> one batch per partition;
-- python worker reuse: the UDF stages are called per batch, fork cost
-  must amortize;
 - shuffle partitions: the extract job's ``repartition(part_id)`` starts from
   them and AQE coalesces by bytes.
 """
@@ -47,17 +51,12 @@ PKG_ROOT = os.path.dirname(os.path.abspath(__file__))
 
 ENGINE_DEFAULTS = {
     "spark.sql.shuffle.partitions": "32",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
     "spark.sql.execution.arrow.maxBytesPerBatch": str(ARROW_BATCH_BYTES),
-    "spark.python.worker.reuse": "true",
     "spark.sql.session.timeZone": "UTC",
     # fat binary rows: keep scan partitions small enough to fit
     "spark.sql.files.maxPartitionBytes": "64m",
-    "spark.sql.sources.partitionOverwriteMode": "dynamic",
 }
 DRIVER_MEMORY = "8g"
 

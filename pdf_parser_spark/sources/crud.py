@@ -26,18 +26,17 @@ from .io import TableIO
 
 
 def read_all(io: TableIO) -> DataFrame:
-    try:
-        return io.read(EXTRACTED_TABLE)
-    except Exception:
-        # truncated table: directory holds no data files -> explicit schema
-        return io.spark.createDataFrame([], schemas.EXTRACTED_WITH_PART)
+    """The extracted table, read with its declared schema: no read runs a
+    schema-inference job, and a truncated table (no data files) reads as
+    no rows. Every operation below reads through here."""
+    return io.read(EXTRACTED_TABLE, schemas.EXTRACTED_WITH_PART)
 
 
 def lookup(io: TableIO, doc_sha: str) -> DataFrame:
     """Point lookup: partition pruning happens for free if the caller
     carries part_id; otherwise this is a predicate-pushdown scan on the
     doc_sha column (min/max parquet stats prune most files)."""
-    return io.read(EXTRACTED_TABLE).filter(F.col("doc_sha") == doc_sha)
+    return read_all(io).filter(F.col("doc_sha") == doc_sha)
 
 
 def lookup_clause(io: TableIO, doc_sha: str, clause_key: str) -> DataFrame:
@@ -62,7 +61,7 @@ def update_clause(
     ``extracted_text`` are rebuilt from the edited map with the kernels'
     serializers. Only the partition(s) containing the row are rewritten,
     via dynamic partition overwrite. Returns the number of rows updated."""
-    table = io.read(EXTRACTED_TABLE)
+    table = read_all(io)
     is_hit = F.col("doc_sha") == doc_sha
     hits = table.filter(is_hit).select("part_id", "clauses").collect()
     if not hits:
@@ -88,8 +87,7 @@ def update_clause(
 def truncate(spark: SparkSession, io: TableIO) -> None:
     """DELETE all (S13): overwrite with an empty frame of the same
     schema (Iceberg: DELETE FROM)."""
-    schema = io.read(EXTRACTED_TABLE).schema
-    empty = spark.createDataFrame([], schema)
+    empty = spark.createDataFrame([], read_all(io).schema)
     if io.iceberg:
         io.overwrite_partitions(empty, EXTRACTED_TABLE, "part_id")
     else:

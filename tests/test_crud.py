@@ -85,3 +85,6 @@ def test_truncate(spark, corpus_df, tmp_path):
     assert read_all(io).count() > 0
     truncate(spark, io)
     assert read_all(io).count() == 0
+    # a truncated table reads as no rows, so truncating it again works
+    truncate(spark, io)
+    assert read_all(io).count() == 0

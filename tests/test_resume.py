@@ -160,8 +160,33 @@ def test_lineage_read_back_scans_only_its_wave(spark, corpus_df, tmp_path):
         for f in files:
             m = re.search(r"/part_id=(\d+)/[^/]+$", f)
             assert m and int(m.group(1)) in wave, f
-        got = sorted(r.part_id for r in lineage.collect())
-        assert got == sorted(set(wave) & committed)
+        n_docs = {r.part_id: r.n_docs for r in lineage.collect()}
+        assert sorted(n_docs) == sorted(wave)  # empty parts get a row too
+        assert {p for p, n in n_docs.items() if n == 0} == set(wave) - committed
+
+
+def test_resume_skips_the_done_wave_with_empty_parts(spark, corpus_df, tmp_path):
+    """80 rows in 64 parts leave parts with no rows. They are marked done
+    with 0 docs, so a run killed after wave 0 of 2 resumes wave 1 alone."""
+    out_root = str(tmp_path / "out6")
+    io = TableIO(spark, out_root)
+    s1 = run_extraction(
+        spark, corpus_df, out_root, run_id="r6", n_parts=64, waves=2,
+        max_waves=1,
+    )
+    assert s1.waves_run == 1
+    assert done_parts(io, "r6") == list(range(0, 64, 2))
+    assert set(range(0, 64, 2)) - _part_dirs(out_root)  # wave 0 has empty parts
+
+    s2 = run_extraction(
+        spark, corpus_df, out_root, run_id="r6", n_parts=64, waves=2,
+    )
+    assert (s2.parts_done_before, s2.waves_run) == (32, 1)
+    assert done_parts(io, "r6") == list(range(64))
+    lin = io.read(LINEAGE_TABLE, schemas.LINEAGE).filter(F.col("run_id") == "r6")
+    zero = {r.part_id for r in lin.filter("n_docs = 0").collect()}
+    assert zero == set(range(64)) - _part_dirs(out_root)
+    assert s1.docs_processed + s2.docs_processed == corpus_df.count()
 
 
 def _listing_jobs(sc, group: str) -> list[str]:

@@ -49,19 +49,22 @@ def test_minhash_lsh_superset_of_high_jaccard(docs):
     )
 
     exact = {
-        (r.id_a, r.id_b)
+        (r.id_a, r.id_b): r.jaccard
         for r in ngram_jaccard_pairs(docs, n=3, threshold=0.8).collect()
     }
     lsh = {
-        (r.id_a, r.id_b)
+        (r.id_a, r.id_b): r.jaccard
         for r in minhash_lsh_candidates(
             docs, num_perm=16, bands=4, threshold=0.8
         ).collect()
     }
     # identical docs share all minhashes -> always candidates; verify step
     # guarantees no false positives above threshold
-    assert exact <= lsh or lsh <= exact  # same verify -> equal sets
+    assert exact.keys() <= lsh.keys() or lsh.keys() <= exact.keys()
     assert (0, 1) in lsh and (3, 4) in lsh
+    # one verify: every candidate's Jaccard is the exact n-gram value
+    assert (0, 2) in lsh
+    assert all(j == exact[p] for p, j in lsh.items())
 
 
 def test_simhash_locality(docs):
@@ -1135,6 +1138,15 @@ def test_incremental_dedup_cross_side_only(spark):
         for r in incremental_dedup(new, ref, threshold=0.5).collect()
     }
     assert (200, 100) in pairs and (201, 100) in pairs
+
+    def shingles(text):
+        w = text.strip(" ").split(" ")
+        return {" ".join(w[i:i + 3]) for i in range(len(w) - 2)} - {""}
+
+    texts = {r.doc_id: r.text for r in new.union(ref).collect()}
+    for (nid, rid), j in pairs.items():
+        a, b = shingles(texts[nid]), shingles(texts[rid])
+        assert j == len(a & b) / len(a | b)
     assert all(nid in (200, 201) and rid == 100 for nid, rid in pairs)
     # within-side dups (201 vs 200, 102 vs 101) are not this operator's
     # output — and novel content survives
