@@ -484,8 +484,8 @@ def q_ann_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query_lsh_index): the SRP code table is materialized ONCE as a
     bucketed table (build-if-absent), then queried with a ZERO-shuffle
     plan — broadcast probes, codegen cosine, partition-local Arrow
-    top-k, coalesce(1) merge; no Exchange node, no SRP kernel re-run
-    (plan-pinned in tests/test_bucketing.py). Parameters match
+    top-k, coalesce(1), the shared _rank; no Exchange node, no SRP
+    kernel re-run (plan-pinned in tests/test_bucketing.py). Parameters match
     q_lsh_cosine_topk exactly, and the persisted path is row- and
     bit-identical to the direct path, so the SAME independent
     pure-Python VALUES oracle checks it."""
@@ -2843,23 +2843,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q6_forecast_revenue": q6_forecast_revenue,
         "q5_local_supplier_volume": q5_local_supplier_volume,
         "q10_returned_items": q10_returned_items,
-        "q14_promo_revenue": q14_promo_revenue,
-        "customer_deciles": q_customer_deciles,
-        "lang_profile": q_lang_profile,
-        "corpus_stats": q_corpus_stats,
-        "bm25_search": q_bm25_search,
-        "chunk_documents": q_chunk_documents,
-        "normalize_text": q_normalize_text,
-        "language_id": q_language_id,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_keep_best": q_dedup_keep_best,
-        "dedup_split": q_dedup_split,
-        "multimodal_features": q_multimodal_features,
-        "gopher_filter": q_gopher_filter,
-        "gopher_filter_cjk": q_gopher_filter_cjk,
-        "stratified_sample": q_stratified_sample,
-        "pack_shards": q_pack_shards,
-        "url_dedup": q_url_dedup,
         "blocklist_filter": q_blocklist_filter,
         "domain_quota": q_domain_quota,
         "redact_pii": q_redact_pii,
@@ -2877,6 +2860,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cut_passages": q_cut_passages,
         "decontaminate": q_decontaminate,
         "unigram_logprob": q_unigram_logprob,
+        "q14_promo_revenue": q14_promo_revenue,
+        "customer_deciles": q_customer_deciles,
+        "lang_profile": q_lang_profile,
+        "corpus_stats": q_corpus_stats,
+        "bm25_search": q_bm25_search,
+        "chunk_documents": q_chunk_documents,
+        "normalize_text": q_normalize_text,
+        "language_id": q_language_id,
+        "dedup_clusters": q_dedup_clusters,
+        "dedup_keep_best": q_dedup_keep_best,
+        "dedup_split": q_dedup_split,
+        "multimodal_features": q_multimodal_features,
+        "gopher_filter": q_gopher_filter,
+        "gopher_filter_cjk": q_gopher_filter_cjk,
+        "stratified_sample": q_stratified_sample,
+        "pack_shards": q_pack_shards,
+        "url_dedup": q_url_dedup,
     }
 
 

@@ -5,14 +5,16 @@ Seven cosine top-k paths: exact brute force, and the scale paths SRP-LSH
 quantization (ad hoc, and as a persisted index). Each path only
 GENERATES candidate pairs ``(query_id, neighbor_id, qvec, qn, cvec,
 cn)``; one scorer (_score) and one ranker (_rank) finish all of them,
-so every path computes the same cosine and the same tie order.
+so every path computes the same cosine and the same tie order — the
+persisted LSH index too, after its partition-local top-k cut.
 dedup.embedding_near_dup reuses the SRP code pass (_lsh_codes,
 _lsh_probes) and _score for its self-join.
 
-Bucket codes, list assignment and quantization run in Arrow-batched
-numpy kernels; the cosine is a flat codegen expression up to the 64-term
-ceiling and the same left fold in an Arrow kernel beyond it. There are
-no per-row Python UDFs.
+Bucket codes, list assignment, int8 quantization and PQ codes come from
+one Arrow-batched coding pass (_code_pass) that hands each batch's
+float64 matrix to a per-path numpy coder; the cosine is a flat codegen
+expression up to the 64-term ceiling and the same left fold in an Arrow
+kernel beyond it. There are no per-row Python UDFs.
 """
 
 from __future__ import annotations
@@ -66,10 +68,7 @@ def _lf_cosine_kernel(batches):
     for pdf in batches:
         if not len(pdf):
             continue
-        Q, C = (
-            np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[col]])
-            for col in ("qvec", "cvec")
-        )
+        Q, C = _matrix(pdf["qvec"]), _matrix(pdf["cvec"])
         den = pdf["qn"].to_numpy(np.float64) * pdf["cn"].to_numpy(np.float64)
         cos = _lf_dot_rows(Q, C) / np.where(den == 0.0, 1.0, den)
         yield pd.DataFrame(
@@ -207,6 +206,86 @@ def _lf_sq_rows(V):
     return np.add.accumulate(V * V, axis=1)[:, -1]
 
 
+def _matrix(values):
+    """The float64 matrix of a vector column, one row per vector (needs
+    at least one vector)."""
+    import numpy as np
+
+    return np.vstack([np.asarray(v, dtype=np.float64) for v in values])
+
+
+def _sq_dists(V, C):
+    """Squared L2 distances of the rows of ``V`` to the centroid rows of
+    ``C``, grouped as the replicas compute them: ``(v.v - 2 v.c) + c.c``
+    with left-fold dots and ``c.c`` a Python sum per centroid."""
+    import numpy as np
+
+    c_sq = np.array([sum(x * x for x in c) for c in C.tolist()])
+    vc = np.column_stack([_lf_dot_rows(V, c) for c in C])
+    return (_lf_sq_rows(V)[:, None] - 2.0 * vc) + c_sq[None, :]
+
+
+def _code_pass(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    coder,
+    schema: str,
+    eager: bool = True,
+) -> DataFrame:
+    """The one vector-coding pass of the ANN scale paths: per Arrow
+    batch, V is the float64 matrix of the vectors and the pass emits
+    ``(id, vec, nrm, **coder(V))`` — nrm the left-fold L2 norm, the
+    coder's columns typed by ``schema``. ``eager`` checkpoints the
+    result (_eager_kernel_output), so every probe/explode of it reuses
+    the same codes.
+
+    The coding math lives in numpy vector ops, NOT in unrolled
+    expressions — n_tables * n_planes * dim (or nlist * dim) literal
+    terms stall Catalyst canonicalization and fall past Janino's method
+    limit (16 planes x 64 dims measured seconds of compile and
+    interpreted fallback). Every dot/norm is a SEQUENTIAL left fold
+    (_lf_dot_rows), bit-identical to the pure-Python VALUES-oracle
+    replica regardless of Arrow batch shape — a BLAS matmul's blocked
+    summation would differ in the low bits and could flip near-tie sign
+    bits or list choices between engine and replica."""
+
+    def code(batches):
+        import numpy as np
+        import pandas as pd
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = _matrix(pdf[vec_col])
+            out = pd.DataFrame({"id": pdf[id_col].values})
+            out["vec"] = list(pdf[vec_col])
+            out["nrm"] = np.sqrt(_lf_sq_rows(V))
+            for name, col in coder(V).items():
+                out[name] = col
+            yield out
+
+    coded = df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
+        code, schema="id long, vec array<float>, nrm double, " + schema
+    )
+    return _eager_kernel_output(coded) if eager else coded
+
+
+def _train_sample(df: DataFrame, id_col: str, vec_col: str, max_train: int):
+    """The ordered training sample of the IVF and PQ fits: the first
+    ``max_train`` vectors by id (one TakeOrdered pass) as a float64
+    matrix in id order — the rows the replicas train on."""
+    import numpy as np
+
+    rows = (
+        df.select(F.col(id_col), F.col(vec_col))
+        .orderBy(id_col)
+        .limit(max_train)
+        .collect()
+    )
+    return np.array([r[1] for r in rows], dtype=np.float64)
+
+
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
     """Deterministic signed-random-projection hyperplanes (host-side
     constants baked into the plan as literals)."""
@@ -214,46 +293,6 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[floa
 
     rng = np.random.Generator(np.random.PCG64([seed, dim, n_planes]))
     return rng.standard_normal((n_planes, dim)).tolist()
-
-
-def _make_lsh_code_kernel(
-    planes_per_table: list[list[list[float]]], id_col: str, vec_col: str
-):
-    """Arrow-batched kernel: per row emit (id, vec, L2 norm, one packed
-    SRP code per table). The bucket math lives in numpy vector ops, NOT
-    in unrolled expressions — n_tables * n_planes * dim literal terms
-    stall Catalyst canonicalization and fall past Janino's method limit
-    (16 planes x 64 dims measured seconds of compile and interpreted
-    fallback). Every dot/norm is a SEQUENTIAL left fold
-    (_lf_dot_rows), bit-identical to the pure-Python
-    VALUES-oracle replica regardless of Arrow batch shape — a BLAS
-    matmul's blocked summation would differ in the low bits and could
-    flip near-tie sign bits between engine and replica."""
-
-    def code(batches):
-        import numpy as np
-        import pandas as pd
-
-        Ps = [np.array(p, dtype=np.float64) for p in planes_per_table]
-        n_tables = len(Ps)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.vstack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            out = pd.DataFrame({"id": pdf[id_col].values})
-            out["vec"] = list(pdf[vec_col])
-            out["nrm"] = np.sqrt(_lf_sq_rows(V))
-            for t in range(n_tables):
-                code_t = np.zeros(len(V), dtype=np.int64)
-                for i in range(Ps[t].shape[0]):
-                    bit = (_lf_dot_rows(V, Ps[t][i]) > 0).astype(np.int64)
-                    code_t |= bit << np.int64(i)
-                out[f"b_{t}"] = code_t
-            yield out
-
-    return code
 
 
 def _lsh_codes(
@@ -265,22 +304,28 @@ def _lsh_codes(
     n_tables: int,
     eager: bool = True,
 ) -> DataFrame:
-    """The one SRP code pass (lsh_cosine_topk, build_lsh_index,
-    query_lsh_index, dedup.embedding_near_dup): plane sets seeded per
-    table, one Arrow kernel pass emitting
-    ``(id, vec, nrm, b_0..b_{n_tables-1})``.
-    ``eager`` checkpoints the kernel output (_eager_kernel_output), so
-    every probe/explode of the result reuses the same codes."""
-    planes_per_table = [
-        random_hyperplanes(dim, n_planes, seed=7 + t)
+    """The SRP codes (lsh_cosine_topk, build_lsh_index, query_lsh_index,
+    dedup.embedding_near_dup): plane sets seeded per table, one
+    _code_pass emitting ``(id, vec, nrm, b_0..b_{n_tables-1})`` — bit i
+    of ``b_t`` is the sign of the vector's dot with plane i of table t."""
+    import numpy as np
+
+    planes = [
+        np.array(random_hyperplanes(dim, n_planes, seed=7 + t))
         for t in range(n_tables)
     ]
-    coded = df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        _make_lsh_code_kernel(planes_per_table, id_col, vec_col),
-        schema="id long, vec array<float>, nrm double, "
-        + ", ".join(f"b_{t} long" for t in range(n_tables)),
-    )
-    return _eager_kernel_output(coded) if eager else coded
+
+    def srp(V):
+        codes = {}
+        for t, P in enumerate(planes):
+            code = np.zeros(len(V), dtype=np.int64)
+            for i, p in enumerate(P):
+                code |= (_lf_dot_rows(V, p) > 0).astype(np.int64) << i
+            codes[f"b_{t}"] = code
+        return codes
+
+    schema = ", ".join(f"b_{t} long" for t in range(n_tables))
+    return _code_pass(df, id_col, vec_col, srp, schema, eager)
 
 
 def _lsh_probes(
@@ -342,49 +387,6 @@ def ivf_fit_centroids(
     return [[float(v) for v in row] for row in C]
 
 
-def _make_ivf_assign_kernel(
-    centroids: list[list[float]], id_col: str, vec_col: str, n: int
-):
-    """Arrow-batched kernel: per row emit (id, vec, L2 norm, the ``n``
-    nearest list ids by squared L2 distance, ties to the LOWER list id).
-    Numpy vector ops per centroid replace nlist * dim unrolled literal
-    terms per row — the expression form stalls Catalyst canonicalization
-    and overflows Janino (see _make_lsh_code_kernel). Every dot is a
-    SEQUENTIAL left fold (_lf_dot_rows), so distances are bit-identical
-    to the pure-Python replica whatever the Arrow batch shape; distance
-    grouping mirrors the replica: ``(v.v - 2 v.c) + c.c``; argsort is
-    stable so equal distances pick the lower list id, same as sorting
-    (d2, list_id) structs."""
-
-    def assign(batches):
-        import numpy as np
-        import pandas as pd
-
-        C = np.array(centroids, dtype=np.float64)
-        c_sq = np.array(
-            [sum(x * x for x in c) for c in centroids], dtype=np.float64
-        )
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.vstack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            dvv = _lf_sq_rows(V)
-            vc = np.column_stack(
-                [_lf_dot_rows(V, C[li]) for li in range(C.shape[0])]
-            )
-            d2 = (dvv[:, None] - 2.0 * vc) + c_sq[None, :]
-            near = np.argsort(d2, axis=1, kind="stable")[:, :n]
-            out = pd.DataFrame({"id": pdf[id_col].values})
-            out["vec"] = list(pdf[vec_col])
-            out["nrm"] = np.sqrt(dvv)
-            out["lists"] = [row.astype("int32").tolist() for row in near]
-            yield out
-
-    return assign
-
-
 def ivf_cosine_topk(
     df: DataFrame,
     query_df: DataFrame,
@@ -407,33 +409,24 @@ def ivf_cosine_topk(
     same way), so the whole operator is reproducible by a pure-Python
     replica — the contract oracle depends on that.
 
-    Scale: the corpus is scanned once to assign lists (a narrow
-    Arrow-kernel pass, one matmul per batch); the candidate join is an
-    equi-join on list id touching ~nprobe/nlist of the corpus per query.
-    Centroids ship inside the kernel closure — nlist*dim floats; the
-    collected training sample is bounded at max_train*dim floats
-    regardless of corpus size."""
+    Scale: the corpus is scanned once to assign lists (one _code_pass,
+    the ``n`` nearest lists by squared L2 distance, a stable argsort so
+    ties pick the LOWER list id like the replica's (d2, list_id) sort);
+    the candidate join is an equi-join on list id touching
+    ~nprobe/nlist of the corpus per query. Centroids ship inside the
+    coder closure — nlist*dim floats; the collected training sample is
+    bounded at max_train*dim floats regardless of corpus size."""
     import numpy as np
 
-    corpus = df.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    )
-    sample = (
-        corpus.orderBy("neighbor_id").limit(max_train).collect()
-    )
-    train = np.array(
-        [[float(v) for v in r.cvec] for r in sample], dtype=np.float64
-    )
-    centroids = ivf_fit_centroids(train, nlist, seed=seed)
+    train = _train_sample(df, id_col, vec_col, max_train)
+    C = np.array(ivf_fit_centroids(train, nlist, seed=seed))
 
     def assigned(frame, n):
-        return _eager_kernel_output(
-            frame.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-                _make_ivf_assign_kernel(centroids, id_col, vec_col, n),
-                schema="id long, vec array<float>, nrm double, "
-                "lists array<int>",
-            )
-        )
+        def nearest(V):
+            d2 = _sq_dists(V, C)
+            return {"lists": np.argsort(d2, 1, kind="stable")[:, :n].tolist()}
+
+        return _code_pass(frame, id_col, vec_col, nearest, "lists array<int>")
 
     c = assigned(df, 1).select(
         F.col("id").alias("neighbor_id"),
@@ -556,7 +549,7 @@ def _make_partial_topk_kernel(k: int):
     and keep the top ``k`` per query by (cosine desc NULLS LAST,
     neighbor asc) — _rank's filter, dedup and order. Pure sort/filter —
     the cosine itself came from the SAME _score the direct LSH path
-    uses, so no float math happens here and the merged result is
+    uses, so no float math happens here and the ranked result is
     bit-identical to the window-ranked one."""
 
     def topk(batches):
@@ -585,36 +578,6 @@ def _make_partial_topk_kernel(k: int):
     return topk
 
 
-def _make_merge_topk_kernel(k: int):
-    """Single-partition final merge: global dedup + top-k + rank. Input
-    is <= k * n_queries * n_partitions slim rows (coalesced, never
-    shuffled); at real scale insert one more partial level (tree
-    reduce) before this if the partition count is extreme."""
-
-    def merge(batches):
-        import pandas as pd
-
-        parts = [pdf for pdf in batches if len(pdf)]
-        if not parts:
-            return
-        acc = (
-            pd.concat(parts)
-            .drop_duplicates(["query_id", "neighbor_id"])
-            .sort_values(
-                ["query_id", "cosine", "neighbor_id"],
-                ascending=[True, False, True],
-                kind="mergesort",
-            )
-        )
-        acc["rank"] = acc.groupby("query_id", sort=False).cumcount() + 1
-        out = acc[acc["rank"] <= k]
-        yield out[["query_id", "neighbor_id", "rank", "cosine"]].astype(
-            {"rank": "int32"}
-        )
-
-    return merge
-
-
 def query_lsh_index(
     spark,
     table: str,
@@ -629,14 +592,15 @@ def query_lsh_index(
 ) -> DataFrame:
     """Query a persisted SRP-LSH index (build_lsh_index) with a ZERO-
     SHUFFLE plan: bucketed-index scan -> broadcast probe join -> _score
-    -> partition-local Arrow top-k -> coalesce(1) -> final merge.
-    No Exchange node anywhere (the window-rank + dropDuplicates
-    shuffles of the direct path are replaced by the two slim top-k
-    kernels), no SRP kernel re-run (codes come off parquet), and the
-    result is row- and bit-identical to lsh_cosine_topk with the same
-    parameters (same candidates, same scorer, same total tie order) —
-    pinned by tests and by the shared contract oracle.
-    ``n_planes``/``n_tables``/``dim`` must match the build."""
+    -> partition-local Arrow top-k -> coalesce(1) -> _rank. No Exchange
+    node anywhere: the partial top-k cuts each partition to <= k slim
+    rows per query, and one partition already satisfies the clustering
+    _rank's dedup and window ask for, so neither shuffles. No SRP kernel
+    re-runs (codes come off parquet), and the result is row- and
+    bit-identical to lsh_cosine_topk with the same parameters (same
+    candidates, same scorer, same ranker) — pinned by tests and by the
+    shared contract oracle. ``n_planes``/``n_tables``/``dim`` must
+    match the build."""
     q = _lsh_probes(
         _lsh_codes(query_df, id_col, vec_col, dim, n_planes, n_tables),
         ("query_id", "qvec", "qn"), n_planes, n_tables, hamming,
@@ -652,41 +616,9 @@ def query_lsh_index(
     # pull the WHOLE scan->join->score->topk pipeline into one task —
     # a single-threaded "zero-exchange" plan. With the eager checkpoint
     # the heavy pipeline runs at full width and only checkpointed slim
-    # rows feed the single merge task. Still no Exchange node anywhere.
+    # rows feed the single ranking task. Still no Exchange node anywhere.
     partial = _eager_kernel_output(partial)
-    return partial.coalesce(1).mapInPandas(
-        _make_merge_topk_kernel(k),
-        schema="query_id long, neighbor_id long, rank int, cosine double",
-    )
-
-
-def _make_q8_kernel(id_col: str, vec_col: str):
-    """Arrow-batched symmetric int8 quantization: per vector,
-    scale = max|v| / 127 and q = rint(v / scale) in [-127, 127].
-    Emits (id, qvec int8, qn = ||q||). Cosine is scale-free under
-    symmetric quantization — (q_a.q_b)/(|q_a||q_b|) needs no scale at
-    query time — so the scale itself is not even carried."""
-
-    def quantize(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.vstack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            s = np.abs(V).max(axis=1) / 127.0
-            s[s == 0.0] = 1.0
-            Q = np.rint(V / s[:, None]).astype(np.int8)
-            Qd = Q.astype(np.float64)
-            out = pd.DataFrame({"id": pdf[id_col].values})
-            out["q"] = [row for row in Q]
-            out["qn"] = np.sqrt((Qd * Qd).sum(axis=1))
-            yield out
-
-    return quantize
+    return _rank(partial.coalesce(1), k, dedup=True)
 
 
 def q8_cosine_topk(
@@ -707,17 +639,28 @@ def q8_cosine_topk(
     gaussians) — rank changes only where true cosines are closer than
     that.
 
+    Symmetric quantization per vector: scale = max|v| / 127 and
+    q = rint(v / scale) in [-127, 127]. Cosine is scale-free under it —
+    (q_a.q_b)/(|q_a||q_b|) needs no scale at query time — so the scale
+    is not carried, and the checkpoint keeps only (id, q, qn).
     Fully deterministic (rint is IEEE round-half-even on both numpy and
     the oracle replica; integer dots are exact), so VALUES-oracle
     checkable like the other ANN paths."""
+    import numpy as np
+
+    def q8(V):
+        s = np.abs(V).max(axis=1) / 127.0
+        s[s == 0.0] = 1.0
+        Q = np.rint(V / s[:, None]).astype(np.int8)
+        Qd = Q.astype(np.float64)
+        return {"q": list(Q), "qn": np.sqrt((Qd * Qd).sum(axis=1))}
 
     def quantized(frame, names):
-        return _eager_kernel_output(
-            frame.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-                _make_q8_kernel(id_col, vec_col),
-                schema="id long, q array<tinyint>, qn double",
-            )
-        ).toDF(*names)
+        coded = _code_pass(
+            frame, id_col, vec_col, q8, "q array<tinyint>, qn double",
+            eager=False,
+        )
+        return _eager_kernel_output(coded.select("id", "q", "qn")).toDF(*names)
 
     c = quantized(df, ("neighbor_id", "cvec", "cn"))
     q = quantized(query_df, ("query_id", "qvec", "qn"))
@@ -753,50 +696,6 @@ def _normalize_rows_lf(V):
     nrm = np.sqrt(_lf_sq_rows(V))
     safe = np.where(nrm == 0.0, 1.0, nrm)
     return V / safe[:, None], nrm
-
-
-def _make_pq_code_kernel(codebooks, id_col, vec_col, out_id):
-    """Arrow kernel: (id, vec) -> (id, vec, nrm, m int8-range codes).
-    Distances per subspace are left-fold ops; ties pick the LOWEST code
-    id (argmin), mirroring the replica's (d2, code) sort."""
-
-    def assign(batches):
-        import numpy as np
-        import pandas as pd
-
-        C = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
-        c_sq = [
-            np.array([sum(x * x for x in c) for c in cb], dtype=np.float64)
-            for cb in codebooks
-        ]
-        m = len(C)
-        dsub = C[0].shape[1]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.vstack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            Vn, nrm = _normalize_rows_lf(V)
-            codes = np.zeros((len(V), m), dtype=np.int32)
-            for j in range(m):
-                sub = Vn[:, j * dsub : (j + 1) * dsub]
-                dvv = _lf_sq_rows(sub)
-                vc = np.column_stack(
-                    [
-                        _lf_dot_rows(sub, C[j][ci])
-                        for ci in range(C[j].shape[0])
-                    ]
-                )
-                d2 = (dvv[:, None] - 2.0 * vc) + c_sq[j][None, :]
-                codes[:, j] = d2.argmin(axis=1)  # first min = lowest code
-            out = pd.DataFrame({out_id: pdf[id_col].values})
-            out["vec"] = list(pdf[vec_col])
-            out["nrm"] = nrm
-            out["codes"] = [row.tolist() for row in codes]
-            yield out
-
-    return assign
 
 
 def _make_pq_score_kernel(luts, r: int):
@@ -892,27 +791,33 @@ def _pq_fit_and_code(
 ):
     """Shared PQ derivation (pq_cosine_topk + build_pq_index): fit the
     per-subspace codebooks driver-side on a bounded normalized sample,
-    then code the corpus in one Arrow pass. Returns (codebooks,
-    coded_df) with coded_df lazy — the caller decides whether to
-    checkpoint (ad-hoc query) or persist (index build)."""
+    then code the corpus in one _code_pass: per subspace of the
+    normalized vector, the nearest codeword by left-fold distance, ties
+    to the LOWEST code id (argmin), like the replica's (d2, code) sort.
+    Returns (codebooks, coded_df) with coded_df ``(nid, vec, nrm,
+    codes)`` and lazy — the caller decides whether to checkpoint
+    (ad-hoc query) or persist (index build)."""
     import numpy as np
 
-    sample = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .orderBy(id_col)
-        .limit(max_train)
-        .collect()
+    train_n, _ = _normalize_rows_lf(
+        _train_sample(df, id_col, vec_col, max_train)
     )
-    train = np.array(
-        [[float(v) for v in r[1]] for r in sample], dtype=np.float64
-    )
-    train_n, _ = _normalize_rows_lf(train)
     codebooks = pq_fit_codebooks(train_n, m, ksub, seed=seed)
-    coded = df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        _make_pq_code_kernel(codebooks, id_col, vec_col, "nid"),
-        schema="nid long, vec array<float>, nrm double, codes array<int>",
+    C = [np.array(cb) for cb in codebooks]
+    dsub = C[0].shape[1]
+
+    def pq(V):
+        Vn, _ = _normalize_rows_lf(V)
+        codes = [
+            _sq_dists(Vn[:, j * dsub : (j + 1) * dsub], Cj).argmin(axis=1)
+            for j, Cj in enumerate(C)
+        ]
+        return {"codes": np.column_stack(codes).tolist()}
+
+    coded = _code_pass(
+        df, id_col, vec_col, pq, "codes array<int>", eager=False
     )
-    return codebooks, coded
+    return codebooks, coded.withColumnRenamed("id", "nid")
 
 
 def build_pq_index(
@@ -1021,24 +926,18 @@ def _pq_query_tail(
     import numpy as np
 
     qrows = query_df.select(F.col(id_col), F.col(vec_col)).collect()
-    C = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
-    dsub = dim // m
-    luts = []
-    qside = []
-    for r_ in qrows:
-        qv = np.asarray([float(v) for v in r_[1]], dtype=np.float64)
-        qn = float(np.sqrt(_lf_sq_rows(qv[None, :])[0]))
-        qnv = qv / (qn if qn else 1.0)
-        lut = [
-            [
-                float(_lf_dot_rows(qnv[None, j * dsub : (j + 1) * dsub],
-                                   C[j][ci])[0])
-                for ci in range(C[j].shape[0])
+    luts, qside = [], []
+    if qrows:  # _matrix needs a row; no query gives no candidate
+        C = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
+        dsub = dim // m
+        Qn, qn = _normalize_rows_lf(_matrix([r_[1] for r_ in qrows]))
+        for r_, qnv, n in zip(qrows, Qn, qn):
+            lut = [
+                _lf_dot_rows(C[j], qnv[j * dsub : (j + 1) * dsub]).tolist()
+                for j in range(m)
             ]
-            for j in range(m)
-        ]
-        luts.append((int(r_[0]), lut))
-        qside.append((int(r_[0]), [float(v) for v in r_[1]], qn))
+            luts.append((int(r_[0]), lut))
+            qside.append((int(r_[0]), [float(v) for v in r_[1]], float(n)))
 
     approx = assigned.select("nid", "codes").mapInPandas(
         _make_pq_score_kernel(luts, rerank),

@@ -13,6 +13,4 @@ from .ingest import (  # noqa: F401
     stream_curate_stateless,
     stream_dedup,
     stream_extract,
-    stream_hourly_rollup,
-    stream_sessionize,
 )

@@ -6,9 +6,6 @@
   input file via the source/commit logs; ``Trigger.AvailableNow`` drains
   the backlog and stops, so batch backfills and live tailing share one
   code path.
-- ``stream_hourly_rollup``: watermarked tumbling-window aggregation over
-  an event stream (the pattern a crawl-telemetry feed needs; late data
-  beyond the watermark is dropped deterministically).
 """
 
 from __future__ import annotations
@@ -45,34 +42,6 @@ def stream_extract(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def stream_sessionize(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming session windows: per-user sessions that close after
-    ``gap`` of inactivity (native session_window — state management,
-    merging and watermark eviction are Spark's). The streaming analogue
-    of the batch lag()-sessionize query in __spark_entry__."""
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(
-            F.session_window("ts", gap).alias("win"),
-            F.col("user_id"),
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("win.start").alias("session_start"),
-            F.col("win.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
 
 
 def stream_dedup(
@@ -171,28 +140,6 @@ def stream_dedup(
         stateStructType="seen long",
         outputMode="append",
         timeoutConf=timeout_conf,
-    )
-
-
-def stream_hourly_rollup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Tumbling 1-hour window per event_type with late-data watermark —
-    apply to a streaming DataFrame with ts/event_type/value columns."""
-    # watermarks require TIMESTAMP (LTZ); parquet often yields NTZ — the
-    # session timezone is pinned to UTC so the cast is deterministic
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("win"), F.col("event_type"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("hour"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
     )
 
 

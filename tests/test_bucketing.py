@@ -64,10 +64,10 @@ def test_bucketed_groupby_no_exchange(spark, bucketed_tables):
 def test_persisted_lsh_index_query_zero_exchange(spark, tmp_path_factory):
     """build_lsh_index writes the SRP code table ONCE (bucketed); the
     query path must then be shuffle-free — broadcast probe join +
-    codegen cosine + partition-local Arrow top-k + coalesce(1) merge,
-    with ZERO Exchange nodes — and must reproduce lsh_cosine_topk
-    row- and bit-identically (same planes, same candidates, same
-    codegen cosine, same tie order)."""
+    codegen cosine + partition-local Arrow top-k + coalesce(1) + the
+    shared _rank, with ZERO Exchange nodes — and must reproduce
+    lsh_cosine_topk row- and bit-identically (same planes, same
+    candidates, same codegen cosine, same tie order)."""
     from pdf_parser_spark.functions import (
         build_lsh_index,
         lsh_cosine_topk,
@@ -91,8 +91,8 @@ def test_persisted_lsh_index_query_zero_exchange(spark, tmp_path_factory):
         out = query_lsh_index(spark, "annidx.lsh", q, k=5, n_planes=8,
                               dim=64, n_tables=4, hamming=1)
         plan = plan_of(out)
-        # zero shuffle: the direct path's dropDuplicates + window rank
-        # exchanges are replaced by the two slim top-k kernels (the
+        # zero shuffle: _rank's dropDuplicates + window rank run over
+        # coalesce(1)'s single partition, which needs no exchange (the
         # final plan reads the CHECKPOINTED partial top-k, so the heavy
         # scan->join->score pipeline ran at full width, never squeezed
         # into coalesce(1)'s single task)

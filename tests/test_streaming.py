@@ -1,10 +1,10 @@
-"""Streaming ingest: exactly-once incremental extraction + watermarked
-windowed rollup (pdf_parser_spark/streaming)."""
+"""Streaming ingest: exactly-once incremental extraction, stateful
+dedup and the stateless curation prefix (pdf_parser_spark/streaming)."""
 
 from pyspark.sql import functions as F
 
 from pdf_parser_spark import schemas
-from pdf_parser_spark.streaming import stream_extract, stream_hourly_rollup
+from pdf_parser_spark.streaming import stream_extract
 from pdf_parser_spark.synth import gen_rows
 
 
@@ -33,92 +33,6 @@ def test_stream_extract_incremental(spark, tmp_path):
     got2 = spark.read.parquet(out)
     assert got2.count() == 50
     assert got2.select("url").distinct().count() == 50  # exactly-once
-
-
-def test_stream_hourly_rollup_matches_batch(spark, tmp_path):
-    ev_path = "/root/testdata/sf0.001/events.parquet"
-    events = spark.read.parquet(ev_path)
-    feed = str(tmp_path / "events")
-    events.write.mode("overwrite").parquet(feed)
-
-    stream = spark.readStream.schema(events.schema).parquet(feed)
-    rolled = stream_hourly_rollup(stream)
-    out = str(tmp_path / "rollup_out")
-    q = (
-        rolled.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "rollup_ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(480), "rollup stream did not finish in 480s"
-
-    got = spark.read.parquet(out)
-    batch = (
-        events.groupBy(
-            F.date_trunc("hour", "ts").alias("hour"), "event_type"
-        )
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
-    )
-    # append mode emits only windows SEALED by the watermark; every
-    # emitted window must match the batch rollup exactly
-    emitted = {(r.hour, r.event_type): (r.n_events, r.sum_value) for r in got.collect()}
-    full = {(r.hour, r.event_type): (r.n_events, r.sum_value) for r in batch.collect()}
-    assert emitted, "no sealed windows emitted"
-    for k, v in emitted.items():
-        assert k in full and abs(v[1] - full[k][1]) < 1e-6 and v[0] == full[k][0]
-
-
-def test_stream_sessionize_matches_batch_sessions(spark, tmp_path):
-    """Sealed streaming session windows must agree with the batch
-    lag()-based sessionization on (user, n_events) per session."""
-    from pyspark.sql import Window
-
-    from pdf_parser_spark.streaming import stream_sessionize
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    feed = str(tmp_path / "sess_events")
-    events.write.mode("overwrite").parquet(feed)
-
-    stream = spark.readStream.schema(events.schema).parquet(feed)
-    out = str(tmp_path / "sess_out")
-    q = (
-        stream_sessionize(stream, gap="30 minutes")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "sess_ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(480), "sessionize stream did not finish in 480s"
-    got = spark.read.parquet(out)
-    assert got.count() > 0
-
-    # batch reference: lag-gap sessionization (same 30-min rule)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    gap = epoch - F.lag(epoch).over(w)
-    sess = (
-        events.withColumn(
-            "new_sess", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-        )
-        .withColumn("session_no", F.sum("new_sess").over(w))
-        .groupBy("user_id", "session_no")
-        .agg(F.count("*").alias("n_events"))
-    )
-    # every sealed streaming session exists in the batch session multiset
-    from collections import Counter
-
-    batch_counter = Counter(
-        (r.user_id, r.n_events) for r in sess.collect()
-    )
-    stream_counter = Counter(
-        (r.user_id, r.n_events) for r in got.collect()
-    )
-    for key, cnt in stream_counter.items():
-        assert batch_counter[key] >= cnt, key
 
 
 def test_stream_dedup_stateful_across_batches(spark, tmp_path):

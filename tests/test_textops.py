@@ -537,8 +537,9 @@ def test_zero_norm_vector_ranks_last_with_null_cosine(spark, tmp_path):
     """A zero vector has no cosine: every path scores it NULL (try_divide
     — DuckDB's 0.0/0.0) and ranks it last, instead of raising
     DIVIDE_BY_ZERO under ANSI. The exact path must match the contract's
-    DuckDB oracle, and the persisted-index path (pandas top-k kernels)
-    must match the window-ranked LSH path row for row, NULL included."""
+    DuckDB oracle, and the persisted-index path (pandas partial top-k,
+    then _rank) must match the window-ranked LSH path row for row, NULL
+    included."""
     import duckdb
     import numpy as np
     import pyarrow as pa
@@ -613,24 +614,63 @@ def test_embedding_near_dup(docs):
     assert not any({a, b} & {5, 6} for a, b in pairs)
 
 
-@pytest.mark.parametrize("dim", [32, 80])
-def test_embedding_near_dup_matches_values_replica(spark, dim):
-    """embedding_near_dup(md5) equals the independent pure-Python
-    replica that writes the contract's VALUES oracle, at dim 32 and at
-    dim 80 — above _UNROLL_MAX, where _score takes its Arrow path,
-    which the dim-64 contract row never reaches."""
+@pytest.fixture(scope="module")
+def gen():
+    """tools/gen_values_oracles.py, home of the pure-Python replicas
+    behind the contract's VALUES oracles, loaded as a module."""
     import importlib.util
     import os
-
-    from pdf_parser_spark.functions import embedding_near_dup
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
         "gen_values_oracles",
         os.path.join(repo, "tools", "gen_values_oracles.py"),
     )
-    gen = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(gen)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.mark.parametrize("path", ["lsh", "ivf", "q8", "pq"])
+def test_ann_scale_path_matches_values_replica(spark, gen, path):
+    """Each ANN scale path, run as its contract row runs it (queries
+    vec_id < 10, the row's parameters), returns exactly the
+    (query_id, neighbor_id, rank) rows of its pure-Python replica."""
+    import __spark_entry__ as entry
+
+    sf = "/root/testdata/sf0.001"
+    row = entry.queries()[f"{path}_cosine_topk"](spark, sf)
+    got = sorted(tuple(r) for r in row.collect())
+    assert row.columns == ["query_id", "neighbor_id", "rank"]
+    assert got and got == sorted(getattr(gen, f"gen_{path}_topk_rows")(sf))
+
+
+def test_ann_paths_empty_query_set(spark):
+    """No query gives no row on every path, instead of an error."""
+    from pdf_parser_spark import functions
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    none = emb.filter(F.col("vec_id") < 0)
+    runs = {
+        "brute": functions.brute_force_cosine_topk(emb, none, dim=64),
+        "lsh": functions.lsh_cosine_topk(emb, none, dim=64),
+        "ivf": functions.ivf_cosine_topk(emb, none, max_train=512),
+        "q8": functions.q8_cosine_topk(emb, none),
+        "pq": functions.pq_cosine_topk(emb, none, max_train=512),
+    }
+    assert {name: df.count() for name, df in runs.items()} == dict.fromkeys(
+        runs, 0
+    )
+
+
+@pytest.mark.parametrize("dim", [32, 80])
+def test_embedding_near_dup_matches_values_replica(spark, gen, dim):
+    """embedding_near_dup(md5) equals the independent pure-Python
+    replica that writes the contract's VALUES oracle, at dim 32 and at
+    dim 80 — above _UNROLL_MAX, where _score takes its Arrow path,
+    which the dim-64 contract row never reaches."""
+    from pdf_parser_spark.functions import embedding_near_dup
+
     sf = "/root/testdata/sf0.001"
     want = sorted(
         (a, b, float(r))

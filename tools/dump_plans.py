@@ -267,7 +267,9 @@ def main() -> None:
         "join -> compiled 64-term dot -> partition-local Arrow top-k "
         "(CHECKPOINTED at full width — coalesce(1) without a boundary "
         "would squeeze the whole pipeline into one task) -> coalesce(1) "
-        "merge over the slim checkpointed rows. NO Exchange node, no "
+        "-> the shared _rank (dedup + row_number window) over the slim "
+        "checkpointed rows; one partition satisfies their clustering, so "
+        "neither adds a shuffle. NO Exchange node, no "
         "SRP kernel re-run — the build-once/query-many shape of a "
         "similarity service; bit-identical to lsh_cosine_topk "
         "(test_bucketing).",
