@@ -29,12 +29,18 @@ Scale design notes (the parts that must survive 1000 executors / 100 TB):
   (column-pruned: part_id + tiny columns), so metrics reflect what was
   actually committed, not what the stage thought it produced; the
   lineage rows are built from it in the JVM and appended uncollected.
-  Every part of the wave gets a row: a part with no input rows has no
-  partition directory and is marked done with 0 docs, so a resume does
-  not run its wave again.
-  The read-back opens only the wave's own part directories, and the
-  job's tables are read with their declared schemas: a wave's checkpoint
-  costs the same whichever wave it is, and no read infers a schema.
+  A wave's checkpoint is one aggregate plus the append (two Spark jobs):
+  the read-back rows (weight 1) are unioned with one weight-0 row per
+  part of the wave before the one ``groupBy(part_id)``, so every part
+  gets a row with no join. A part with no input rows has no partition
+  directory; only its weight-0 row counts, so it is marked done with 0
+  docs and a resume does not run its wave again.
+  The read-back opens only the wave's own part directories, listed on
+  the driver (no listing job), and the job's tables are read with their
+  declared schemas: a wave's checkpoint costs the same whichever wave it
+  is, and no read infers a schema.
+- the wave's ``observe`` also counts its errors by class (the prefix of
+  ``error`` before ':'), stored as ``err.<class>`` in lineage ``metrics``.
 """
 
 from __future__ import annotations
@@ -52,6 +58,20 @@ from .sources import TableIO
 EXTRACTED_TABLE = "extracted"
 LINEAGE_TABLE = "lineage"
 DEFAULT_N_PARTS = 64
+# the error-string prefixes of oracle.extract_document; any other error is
+# a clause-validation message
+ERROR_CLASSES = ("too_large", "empty", "bad_container", "parse_error",
+                 "bad_encoding", "unknown_kind")
+_ERROR_CLASS = "substring_index(error, ':', 1)"
+# a wave's observed metrics, SQL text like lineage_rows' columns: docs,
+# errors, chars, and errors per class as ``err.<class>``
+OBSERVED = (
+    "count(1) AS obs_docs",
+    "count(error) AS obs_errs",
+    "sum(coalesce(n_chars, 0)) AS obs_chars",
+    *(f"count_if({_ERROR_CLASS} = '{c}') AS `err.{c}`" for c in ERROR_CLASSES),
+    f"count_if({_ERROR_CLASS} NOT IN {ERROR_CLASSES!r}) AS `err.clause`",
+)
 
 
 @dataclass
@@ -77,10 +97,9 @@ def done_parts(io: TableIO, run_id: str) -> list[int]:
         io.read(LINEAGE_TABLE, schemas.LINEAGE)
         .filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
         .select("part_id")
-        .distinct()
         .collect()
     )
-    return sorted(r.part_id for r in rows)
+    return sorted({r.part_id for r in rows})
 
 
 def extract_wave(salted: DataFrame, wave: list[int], n_parts: int) -> DataFrame:
@@ -89,7 +108,7 @@ def extract_wave(salted: DataFrame, wave: list[int], n_parts: int) -> DataFrame:
     deterministic from url, so it is recomputed on the result side instead
     of being carried through the stage (the stage schema stays pure)."""
     staged = (
-        salted.filter(F.col("part_id").isin(wave))
+        salted.filter(f"part_id IN ({', '.join(map(str, wave))})")
         .select("url", "html", "part_id")
         .repartition("part_id")
     )
@@ -98,40 +117,38 @@ def extract_wave(salted: DataFrame, wave: list[int], n_parts: int) -> DataFrame:
 
 def lineage_rows(io: TableIO, wave: list[int], run_id: str, started: float,
                  finished: float, observed: dict[str, float]) -> DataFrame:
-    """The wave's ``schemas.LINEAGE`` rows, one per part of the wave: the
-    read-back aggregate of the wave's partitions of ``extracted`` plus
+    """The wave's ``schemas.LINEAGE`` rows, one per part of the wave: one
+    aggregate over the read-back of the wave's partitions of ``extracted``
+    (weight 1 per row) and one weight-0 row per part of the wave, plus
     literal columns, planned in the JVM. A part with no committed rows has
-    no partition; its row reads 0 docs, so it is done too and a resume
-    never runs it again. ``metrics`` holds the wall time and the
-    ``observed`` ones."""
-    metrics = {"wall_sec": finished - started, **observed}
-    parts = io.spark.range(1).select(F.explode(F.lit(wave)).alias("part_id"))
-    committed = (
+    no partition; only its weight-0 row counts, so it reads 0 docs and is
+    done too, and a resume never runs it again. ``metrics`` holds the wall
+    time and the ``observed`` ones."""
+    metrics = ", ".join(f"'{k}', {float(v)!r}D" for k, v in
+                        {"wall_sec": finished - started, **observed}.items())
+    weights = io.spark.range(1, numPartitions=1).selectExpr(
+        f"explode(array({', '.join(map(str, wave))})) AS part_id", "0 AS w")
+    return (
         io.read_partitions(EXTRACTED_TABLE, schemas.EXTRACTED_WITH_PART,
                            "part_id", wave)
-        .groupBy("part_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.coalesce(F.col("n_chars"), F.lit(0))).alias("n_bytes"),
-            F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias("n_ok"),
-            F.sum(
-                F.when(F.col("error").isNotNull(), 1).otherwise(0)
-            ).alias("n_err"),
-        )
+        .selectExpr("part_id", "1 AS w", "n_chars", "error")
+        .unionByName(weights, allowMissingColumns=True)
+        # keyed (run_id, part_id), the rest in schemas.LINEAGE order; SQL
+        # text is one parse per column, where Column calls cost py4j round
+        # trips per function and literal
+        .groupBy(F.lit(run_id).alias("run_id"), "part_id")
+        .agg(*map(F.expr, (
+            "sum(w) AS n_docs",
+            "sum(coalesce(n_chars, 0)) AS n_bytes",
+            "sum(if(error IS NULL, w, 0)) AS n_ok",
+            "sum(if(error IS NULL, 0, w)) AS n_err",
+            "'done' AS status",
+            f"timestamp_seconds({started!r}D) AS started_at",
+            f"timestamp_seconds({finished!r}D) AS finished_at",
+            # the cast makes the map's values nullable, as the table's are
+            f"CAST(map({metrics}) AS MAP<STRING, DOUBLE>) AS metrics",
+        )))
     )
-    cols = {
-        "run_id": F.lit(run_id),
-        "status": F.lit("done"),
-        "started_at": F.timestamp_seconds(F.lit(started)),
-        "finished_at": F.timestamp_seconds(F.lit(finished)),
-        "metrics": F.create_map(*[F.lit(x) for kv in metrics.items() for x in kv]),
-    }
-    # cast to the declared schema: it also widens the map of non-null
-    # literals to the table's nullable-valued map type
-    return parts.join(committed, "part_id", "left").fillna(0).select(*[
-        cols.get(f.name, F.col(f.name)).cast(f.dataType).alias(f.name)
-        for f in schemas.LINEAGE
-    ])
 
 
 def run_extraction(
@@ -174,13 +191,7 @@ def run_extraction(
         # zero extra passes — and lands in the lineage metrics map
         obs = Observation()
         results = extract_wave(salted, wave, n_parts).observe(
-            obs,
-            F.count(F.lit(1)).alias("obs_docs"),
-            F.sum(
-                F.when(F.col("error").isNotNull(), 1).otherwise(0)
-            ).alias("obs_errs"),
-            F.sum(F.coalesce(F.col("n_chars"), F.lit(0))).alias("obs_chars"),
-        )
+            obs, *map(F.expr, OBSERVED))
         io.overwrite_partitions(results, EXTRACTED_TABLE, "part_id")
         observed = {k: float(v or 0) for k, v in obs.get.items()}
 
@@ -188,7 +199,7 @@ def run_extraction(
         # count rides the append, no extra pass
         docs = Observation()
         lineage = lineage_rows(io, wave, run_id, started, time.time(), observed)
-        io.append(lineage.observe(docs, F.sum("n_docs").alias("n_docs")), LINEAGE_TABLE)
+        io.append(lineage.observe(docs, F.expr("sum(n_docs) AS n_docs")), LINEAGE_TABLE)
         docs_total += int(docs.get["n_docs"] or 0)
         waves_run += 1
 

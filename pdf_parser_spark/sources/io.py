@@ -30,16 +30,21 @@ from pyspark.sql.types import StructType
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        cls = "org.apache.iceberg.spark.SparkCatalog"
-        spark.sparkContext._jvm.java.lang.Class.forName(cls)  # noqa: SLF001
-        return any(
-            k.startswith("spark.sql.catalog.")
-            and v.endswith("SparkCatalog")
-            for k, v in spark.sparkContext.getConf().getAll()
-        )
-    except Exception:
-        return False
+    """Whether an Iceberg catalog is configured, probed once per
+    SparkContext: its jars and its catalog conf are fixed at launch."""
+    sc = spark.sparkContext
+    if not hasattr(sc, "_pps_iceberg"):
+        try:
+            cls = "org.apache.iceberg.spark.SparkCatalog"
+            sc._jvm.java.lang.Class.forName(cls)  # noqa: SLF001
+            sc._pps_iceberg = any(  # noqa: SLF001
+                k.startswith("spark.sql.catalog.")
+                and v.endswith("SparkCatalog")
+                for k, v in sc.getConf().getAll()
+            )
+        except Exception:
+            sc._pps_iceberg = False  # noqa: SLF001
+    return sc._pps_iceberg  # noqa: SLF001
 
 
 class TableIO:
@@ -80,25 +85,31 @@ class TableIO:
                         values: list[int]) -> DataFrame:
         """The rows of ``name`` whose partition column ``col`` is in
         ``values``. Iceberg filters the table on ``col``. Parquet reads
-        only the ``col=<v>`` directories that one listing of the table
-        root shows, as explicit paths under ``basePath`` with the declared
-        ``schema``: no other partition directory is listed, and a value
-        with no committed rows (no directory) reads as no rows."""
+        only the ``col=<v>`` directories, as one glob under ``basePath``
+        with the declared ``schema``: no other partition directory is
+        listed, and a value with no committed rows (no directory) reads as
+        no rows. The driver lists them itself, however many there are: the
+        DataFrame lists eagerly when it is created, and while it is the
+        parallel-discovery threshold is raised to the directory count, so
+        no Spark listing job runs."""
         if self.iceberg:
             return self.spark.read.table(self._path(name)).filter(
                 F.col(col).isin(values))
         root = self._path(name)
-        fs, hroot = self._fs(root)
-        wanted = {f"{col}={v}" for v in values}
-        paths = [
-            f"{root}/{st.getPath().getName()}"
-            for st in (fs.listStatus(hroot) if fs.exists(hroot) else [])
-            if st.isDirectory() and st.getPath().getName() in wanted
-        ]
-        return (
-            self.spark.read.schema(schema).option("basePath", root)
-            .parquet(*paths)
-        )
+        # the values' directories, globbed once on the driver
+        glob = f"{root}/{col}={{{','.join(map(str, values))}}}"
+        fs, hglob = self._fs(glob)
+        n_dirs = len(fs.globStatus(hglob))
+        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        threshold = self.spark.conf.get(key)
+        self.spark.conf.set(key, str(max(int(threshold), n_dirs)))
+        try:
+            return (
+                self.spark.read.schema(schema).option("basePath", root)
+                .parquet(*([glob] if n_dirs else []))
+            )
+        finally:
+            self.spark.conf.set(key, threshold)
 
     def append(self, df: DataFrame, name: str) -> None:
         if self.iceberg:

@@ -61,6 +61,7 @@ def test_lineage_rows_run_no_python(spark, corpus_df, tmp_path):
     parquet: no Python-list ``createDataFrame`` scan, no Python node."""
     from pdf_parser_spark import schemas
     from pdf_parser_spark.pipeline import (
+        ERROR_CLASSES,
         EXTRACTED_TABLE,
         LINEAGE_TABLE,
         lineage_rows,
@@ -86,7 +87,8 @@ def test_lineage_rows_run_no_python(spark, corpus_df, tmp_path):
     assert types(lineage.schema) == types(schemas.LINEAGE)
     assert types(io.read(LINEAGE_TABLE).schema) == types(schemas.LINEAGE)
     for r in io.read(LINEAGE_TABLE).collect():
-        assert set(r.metrics) == {"wall_sec", "obs_docs", "obs_errs", "obs_chars"}
+        assert set(r.metrics) == {"wall_sec", "obs_docs", "obs_errs", "obs_chars"} | {
+            f"err.{c}" for c in (*ERROR_CLASSES, "clause")}
     assert sum(r.n_docs for r in lineage.collect()) == corpus_df.count()
 
 

@@ -88,6 +88,18 @@ def test_kill_and_resume(spark, corpus_df, tmp_path):
     }
     assert {r.part_id: r.n_docs for r in lin.collect()} == committed
 
+    # per wave (its rows share one metrics map) the error classes add up to
+    # the committed errors
+    waves: dict = {}
+    for r in lin.collect():
+        waves.setdefault(r.started_at, []).append(r)
+    assert len(waves) == s1.waves_run + s2.waves_run
+    for rows in waves.values():
+        classes = {k: v for k, v in rows[0].metrics.items() if k.startswith("err.")}
+        assert len(classes) == 7
+        assert sum(classes.values()) == sum(r.n_err for r in rows)
+    assert lin.agg(F.sum("n_err")).collect()[0][0] > 0
+
 
 def test_rerun_after_unmarked_partition_is_idempotent(spark, corpus_df, tmp_path):
     """A wave that wrote data but crashed before its lineage append must be
@@ -189,9 +201,8 @@ def test_resume_skips_the_done_wave_with_empty_parts(spark, corpus_df, tmp_path)
     assert s1.docs_processed + s2.docs_processed == corpus_df.count()
 
 
-def _listing_jobs(sc, group: str) -> list[str]:
-    """Descriptions of the group's jobs that listed leaf files (Spark's
-    parallel partition discovery)."""
+def _group_jobs(sc, group: str) -> list[str]:
+    """Descriptions (else call sites) of the group's Spark jobs."""
     jsc = sc._jsc.sc()  # noqa: SLF001
     jsc.listenerBus().waitUntilEmpty()
     jobs = jsc.statusStore().jobsList(None)
@@ -199,10 +210,15 @@ def _listing_jobs(sc, group: str) -> list[str]:
     for i in range(jobs.length()):
         job = jobs.apply(i)
         g, d = job.jobGroup(), job.description()
-        if g.isDefined() and g.get() == group and d.isDefined() \
-                and d.get().startswith("Listing leaf files"):
-            out.append(d.get())
+        if g.isDefined() and g.get() == group:
+            out.append(d.get() if d.isDefined() else job.name())
     return out
+
+
+def _listing_jobs(sc, group: str) -> list[str]:
+    """Descriptions of the group's jobs that listed leaf files (Spark's
+    parallel partition discovery)."""
+    return [d for d in _group_jobs(sc, group) if d.startswith("Listing leaf files")]
 
 
 def test_wave_checkpoints_list_no_leaf_files(spark, corpus_df, tmp_path):
@@ -236,3 +252,32 @@ def test_wave_checkpoints_list_no_leaf_files(spark, corpus_df, tmp_path):
     finally:
         sc.setJobGroup(None, None)
     assert len(_listing_jobs(sc, control)) == 1
+
+
+def test_wave_checkpoint_is_one_aggregate_and_the_append(
+        spark, corpus_df, tmp_path, monkeypatch):
+    """One 64-part wave (the jobs/extract default) runs no parallel listing,
+    and its checkpoint, from the data commit to the lineage append, is at
+    most 2 Spark jobs that write one lineage file."""
+    out_root = str(tmp_path / "out7")
+    sc = spark.sparkContext
+    group = f"wave-{tmp_path.name}"
+    checkpoint = f"{group}-checkpoint"
+    commit = TableIO.overwrite_partitions
+
+    def commit_then_checkpoint(self, *args):
+        commit(self, *args)
+        sc.setJobGroup(checkpoint, "checkpoint")
+
+    monkeypatch.setattr(TableIO, "overwrite_partitions", commit_then_checkpoint)
+    sc.setJobGroup(group, "one wave")
+    try:
+        stats = run_extraction(spark, corpus_df, out_root, run_id="r7", n_parts=64)
+    finally:
+        sc.setJobGroup(None, None)
+    assert stats.waves_run == 1
+    assert len(_part_dirs(out_root)) > 32  # more than the listing threshold
+    assert _listing_jobs(sc, group) == _listing_jobs(sc, checkpoint) == []
+    assert 1 <= len(_group_jobs(sc, checkpoint)) <= 2
+    lineage = os.listdir(os.path.join(out_root, LINEAGE_TABLE))
+    assert len([f for f in lineage if f.endswith(".parquet")]) == 1
