@@ -86,7 +86,7 @@ class RunStats:
 
 def with_part_id(df: DataFrame, n_parts: int) -> DataFrame:
     return df.withColumn(
-        "part_id", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int")
+        "part_id", F.expr(f"CAST(pmod(xxhash64(url), {n_parts}) AS INT)")
     )
 
 

@@ -9,7 +9,11 @@ launch whose JVM ``get_spark`` starts itself (a plain ``python`` launch);
 under spark-submit that is ``--driver-memory``'s job. A live session is
 returned as it is: callers that need a fixed runtime value (tests, plan
 dumps, scaling runs) set it on the built session with ``spark.conf.set``,
-and a later ``get_spark`` keeps it.
+and a later ``get_spark`` keeps it. A launch whose JVM ``get_spark``
+starts itself, at a ``local[...]`` master, also gets the recipe's local
+file system, ``NioLocalFileSystem`` (``fs_jar``): Hadoop's checksummed one
+with each new file's and directory's mode set in the JVM, not by a forked
+``chmod``; with no ``javac``, Hadoop's own class stays.
 
 The defaults are chosen for the 100 TB design point and merely *work* on
 one machine (SURVEY.md §4). The recipe holds only values that differ from
@@ -37,17 +41,22 @@ recipe:
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
+import shutil
+import subprocess
 import tempfile
 import zipfile
 
 from pyspark import SparkConf, SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 ARROW_BATCH_ROWS = 2048
 ARROW_BATCH_BYTES = 16 * 1024 * 1024
 PKG_ROOT = os.path.dirname(os.path.abspath(__file__))
+FS_SOURCE = os.path.join(PKG_ROOT, "jvm", "NioLocalFileSystem.java")
 
 ENGINE_DEFAULTS = {
     "spark.sql.shuffle.partitions": "32",
@@ -90,8 +99,12 @@ def get_spark(app_name: str = "pdf-parser-spark") -> SparkSession:
         **ENGINE_DEFAULTS,
     }
     if SparkContext._gateway is None:  # noqa: SLF001
-        # the JVM starts below, so its heap can still be sized
+        # the JVM starts below, so its heap and class path can still be set
         recipe["spark.driver.memory"] = DRIVER_MEMORY
+        jar = recipe["spark.master"].startswith("local[") and fs_jar()
+        if jar:  # local mode: the executors share the driver's class path
+            recipe["spark.driver.extraClassPath"] = jar
+            recipe["spark.hadoop.fs.file.impl"] = "pdf_parser_spark.NioLocalFileSystem"
     conf = SparkConf()
     for key, value in recipe.items():
         conf.setIfMissing(key, value)
@@ -132,6 +145,31 @@ def package_zip(pkg_root: str = PKG_ROOT) -> str:
                 info.external_attr = 0o644 << 16
                 z.writestr(info, data, zipfile.ZIP_DEFLATED)
         os.replace(tmp, path)
+    return path
+
+
+def fs_jar() -> str | None:
+    """``FS_SOURCE`` compiled into a jar in the temp dir, named by the
+    source's sha256 and reused like ``package_zip``'s zip; ``None`` with no
+    source, no ``javac`` beside the launcher's ``java``, or a failed compile."""
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    javac = java and os.path.join(os.path.dirname(os.path.realpath(java)), "javac")
+    if not (javac and os.access(javac, os.X_OK) and os.path.isfile(FS_SOURCE)):
+        return None
+    with open(FS_SOURCE, "rb") as f:
+        name = f"NioLocalFileSystem-{hashlib.sha256(f.read()).hexdigest()}.jar"
+    path = os.path.join(tempfile.gettempdir(), name)
+    if not os.path.exists(path):
+        api = os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar")
+        with tempfile.TemporaryDirectory() as out:
+            # --release 17, Spark 4's floor: any JDK's build loads on any runtime
+            cmd = [javac, "-J-XX:TieredStopAtLevel=1", "-J-XX:+UseSerialGC",
+                   "--release", "17", "-proc:none",
+                   "-cp", os.pathsep.join(glob.glob(api)), "-d", out, FS_SOURCE]
+            if subprocess.run(cmd, capture_output=True).returncode:
+                return None
+            os.replace(shutil.make_archive(out, "zip", out), path)
     return path
 
 

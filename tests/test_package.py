@@ -1,8 +1,9 @@
-"""Executor package zip (``session.package_zip``): one builder, keyed by the
-sha256 of the package sources and written to the temp dir, never into
-the repository. No Spark needed."""
+"""Executor package zip (``session.package_zip``) and the local file
+system's jar (``session.fs_jar``): each keyed by the sha256 of its sources
+and written to the temp dir, never into the repository. No Spark needed."""
 
 import glob
+import hashlib
 import os
 import shutil
 import tempfile
@@ -100,3 +101,38 @@ def test_package_not_on_disk_ships_nothing(tmp_path, monkeypatch):
     monkeypatch.setattr(session, "PKG_ROOT", in_zip)
     session.ship_package(types.SimpleNamespace(sparkContext=sc))
     assert added == []
+
+
+def test_fs_jar_keyed_by_source(tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    repo_before = _tree(REPO)
+    with open(session.FS_SOURCE, "rb") as f:
+        source = f.read()
+    digest = hashlib.sha256(source).hexdigest()
+
+    jar = session.fs_jar()
+    assert jar == str(tmp_path / f"NioLocalFileSystem-{digest}.jar")
+    with zipfile.ZipFile(jar) as z:
+        assert "pdf_parser_spark/NioLocalFileSystem.class" in z.namelist()
+    built = os.stat(jar).st_mtime_ns
+    assert session.fs_jar() == jar
+    assert os.stat(jar).st_mtime_ns == built
+    assert os.listdir(tmp_path) == [os.path.basename(jar)]
+
+    # a changed source byte gives a new jar; the old one stays
+    src = tmp_path / "src" / "NioLocalFileSystem.java"
+    src.parent.mkdir()
+    src.write_bytes(source + b"// changed\n")
+    monkeypatch.setattr(session, "FS_SOURCE", str(src))
+    changed = hashlib.sha256(src.read_bytes()).hexdigest()
+    assert session.fs_jar() == str(tmp_path / f"NioLocalFileSystem-{changed}.jar")
+    assert os.path.exists(jar)
+    assert _tree(REPO) == repo_before
+
+
+def test_fs_jar_without_javac(tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.delenv("JAVA_HOME", raising=False)
+    monkeypatch.setattr(shutil, "which", lambda _name: None)
+    assert session.fs_jar() is None
+    assert os.listdir(tmp_path) == []

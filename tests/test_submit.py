@@ -1,7 +1,7 @@
 """The packaged extraction job under spark-submit: the launcher's
 ``--master`` and ``--conf`` win over the session defaults, the recipe's
-driver memory is left to ``--driver-memory``, and the job imports the
-package from the ``--py-files`` zip alone."""
+driver memory and local file system are left to the launcher, and the
+job imports the package from the ``--py-files`` zip alone."""
 
 import glob
 import json
@@ -69,3 +69,6 @@ def test_spark_submit_launcher_settings_win(spark, corpus_df, corpus_rows, tmp_p
     # the driver JVM was started by spark-submit with its own heap: the
     # recipe's driver memory could not apply and is not recorded
     assert "spark.driver.memory" not in props
+    # nor its local file system, which needs the driver's class path
+    assert "spark.hadoop.fs.file.impl" not in props
+    assert "spark.driver.extraClassPath" not in props
